@@ -1,0 +1,5 @@
+"""Seeded, closed-loop benchmark of the dataslicer_spark query pipelines.
+
+Run one workload with ``python3 perfbench/run.py --workload NAME --seed N
+--seconds S --trace 0|1`` from the repository root; see ``README.md`` here.
+"""
