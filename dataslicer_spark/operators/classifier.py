@@ -13,12 +13,15 @@ the n-epoch training run replays bit for bit in the DuckDB oracle
 
 Scale design mirrors every distributed SGD/L-BFGS implementation:
 
-- weights broadcast to executors each epoch — here as literal
-  expressions (d is small), so the epoch plan is scan → filter →
-  partial aggregate, pure JVM whole-stage codegen, no Python, no
-  shuffle beyond the d-column aggregate's final merge;
-- the wire carries one d-vector per partition per epoch (map-side
-  partial sums), never per-row gradients;
+- weights reach the executors each epoch as literal expressions for
+  ≤ 16 features (scan → filter → partial aggregate, pure JVM
+  whole-stage codegen, no Python) and inside an Arrow kernel beyond;
+- the wire carries one (d+1)-vector per partition per epoch, never
+  per-row gradients: the map-side partial aggregate, or on the Arrow
+  path one binary row per partition that ``utils.sum_partials`` sums
+  on the driver — one job per epoch, at most
+  ``SUM_PARTIALS_MAX_CELLS`` int64 cells collected at once (a √P tree
+  level pre-sums beyond that);
 - the driver holds d ints — model state is microscopic;
 - prediction is a map-only literal-weights projection.
 
@@ -34,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..utils import check_col
+from ..utils import check_col, sum_partials
 
 #: (name, builder) — integer surface features computable identically in
 #: Spark and ANSI SQL (simple character classes only: Java regex and RE2
@@ -155,9 +158,10 @@ def batch_perceptron_fit(
     see streaming/train.py).
 
     ``label_col`` must hold ±1.  Rows with any NULL feature or label are
-    ignored (mirrored by the oracle's WHERE).  One aggregate job per
-    epoch; the input should be persisted by the caller when the source
-    is expensive to re-scan.
+    ignored (mirrored by the oracle's WHERE).  Every epoch re-reads
+    ``df``: hand it a materialized frame (``utils.materialize``) when
+    the source is expensive to re-scan — on one, the 'arrow' engine
+    runs exactly one job per epoch.
 
     ``lr`` may be a per-epoch integer schedule (len == n_epochs): a
     decaying schedule (e.g. ``[16, 8, 4, 2, 1, 1]``) damps the
@@ -226,11 +230,10 @@ def _fit_arrow(
     w: list[int],
 ) -> list[int]:
     """Epoch loop with Arrow-kernel partial gradients: each partition
-    reduces to one (d+1)-vector before the shuffle — identical int64
-    math to the expression path (matmul of int64 never leaves numpy's
-    exact integer domain)."""
+    reduces to one (d+1)-vector and ``sum_partials`` adds them on the
+    driver — one job per epoch, identical int64 math to the expression
+    path (matmul of int64 never leaves numpy's exact integer domain)."""
     import numpy as np
-    import pandas as pd
 
     src = clean.select(label_col, *feature_cols)
     d = len(feature_cols)
@@ -240,23 +243,15 @@ def _fit_arrow(
         def grad(batches):
             g = np.zeros(d + 1, dtype=np.int64)
             for pdf in batches:
-                if not len(pdf):
-                    continue
                 X = pdf[feature_cols].to_numpy(dtype=np.int64)
                 y = pdf[label_col].to_numpy(dtype=np.int64)
                 m = y * (wa[0] + X @ wa[1:]) <= 0
-                g[0] += int(y[m].sum())
+                g[0] += y[m].sum()
                 g[1:] += (X[m] * y[m, None]).sum(axis=0)
-            yield pd.DataFrame({"j": np.arange(d + 1), "g": g})
+            return g
 
-        rows = (
-            src.mapInPandas(grad, "j int, g long")
-            .groupBy("j")
-            .agg(F.sum("g").alias("g"))
-            .collect()
-        )
-        for r in rows:
-            w[r["j"]] += step * int(r["g"])
+        g = sum_partials(src, grad, d + 1)
+        w = [wj + step * int(gj) for wj, gj in zip(w, g)]
     return w
 
 

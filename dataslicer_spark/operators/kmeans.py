@@ -27,15 +27,16 @@ Scale design:
 - the corpus never shuffles for assignment: centroids inline as k×d
   literals, the argmin is a ``least``-of-structs over JVM ``zip_with``/
   ``aggregate`` expressions (whole-stage codegen, no Python);
-- the update shuffles only partial sums: ``posexplode`` to
-  (cluster, dim, val) feeds a hash aggregate whose map-side combine
-  reduces each partition to ≤ k·d rows before the exchange — the wire
-  carries ``partitions · k · d`` cells, never ``n · d``;
+- the update ships only partial sums: an Arrow kernel reduces each
+  partition to k·(d+1) int64 cells (coordinate sums and the count per
+  cluster), one binary row that ``utils.sum_partials`` sums on the
+  driver — the wire carries ``partitions · k · (d+1)`` cells, never
+  ``n · d``, and each iteration is ONE job with no shuffle;
 - the driver holds k·d ints per iteration (microscopic), exactly like
-  MLlib's Lloyd's loop;
-- one job per iteration re-reads the source: cache the projected
-  vectors upstream for iterative sessions, or accept n_iter scans (at
-  100 TB the update aggregates are the cost, not the scan).
+  MLlib's Lloyd's loop, and collects at most ``SUM_PARTIALS_MAX_CELLS``
+  partial cells at once (a √P tree level pre-sums beyond that);
+- the projected vectors are materialized once, so the iterations
+  re-read that checkpoint, not the source.
 
 Overflow bounds: |x| ≤ 2 and fp_bits = 20 give |X| ≤ 2²¹, squared
 diffs ≤ 2⁴⁴, and d = 64 sums ≤ 2⁵⁰ — inside int64 with headroom.
@@ -50,7 +51,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..utils import check_col, spread
+from ..utils import check_col, materialize, spread, sum_partials
 
 FP_BITS_DEFAULT = 20
 
@@ -125,25 +126,24 @@ def kmeans_fit(
     ``fp_bits`` scale).  Empty clusters keep their previous centroid
     (mirrored by the oracle's UNION ALL branch)."""
     check_col([id_col, vec_col], df)
-    # persist the projected vectors across iterations — n_iter jobs read
-    # this one column instead of re-scanning the source each pass.
-    # spread first (guide §2.5): the per-iteration Arrow kernel runs at
-    # this frame's partitioning, and a one-row-group scan is one task —
-    # guarded no-op on already-wide inputs
-    src = spread(
-        df.select(F.col(vec_col).alias("__v")).filter(F.col("__v").isNotNull())
-    ).persist()
-    try:
-        return _fit_loop(src, df, id_col, vec_col, k, n_iter, fp_bits)
-    finally:
-        src.unpersist()
-
-
-def _fit_loop(src, df, id_col, vec_col, k, n_iter, fp_bits):
-    centroids = init_centroids(df, id_col, vec_col, k, fp_bits)
-    dim = len(centroids[0])
+    centroids = np.asarray(
+        init_centroids(df, id_col, vec_col, k, fp_bits), dtype=np.int64
+    )
+    k, dim = centroids.shape  # fewer than k rows → fewer centroids
+    # materialize the projected vectors once — n_iter jobs read this one
+    # column instead of re-scanning the source, and sum_partials probes
+    # its partition count without running a job.  spread first (guide
+    # §2.5): the per-iteration Arrow kernel runs at this frame's
+    # partitioning, and a one-row-group scan is one task — guarded no-op
+    # on already-wide inputs
+    src = materialize(
+        spread(
+            df.select(F.col(vec_col).alias("__v"))
+            .filter(F.col("__v").isNotNull())
+        )
+    )
     scale = float(1 << fp_bits)
-    spark = df.sparkSession
+    sc = df.sparkSession.sparkContext
     # (chunk × k × dim) int64 distance temporary bounded to ~16 MB
     chunk_rows = max(1, 2_000_000 // max(k * dim, 1))
 
@@ -153,18 +153,13 @@ def _fit_loop(src, df, id_col, vec_col, k, n_iter, fp_bits):
         # re-parsed and re-evaluated per exploded row — measured ~8 s per
         # iteration at 2k×64; this kernel runs the identical integer math
         # (floor-quantize, int64 squared L2, first-min tie-break) in
-        # vectorized numpy and reduces each PARTITION to k·d partial
-        # cells before anything shuffles
-        bc = spark.sparkContext.broadcast(
-            np.asarray(centroids, dtype=np.int64)
-        )
+        # vectorized numpy and reduces each PARTITION to k × (d + 1)
+        # cells: per-cluster coordinate sums, then the count
+        bc = sc.broadcast(centroids)
 
-        def partial_stats(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
+        def partial_stats(batches: Iterator[pd.DataFrame]) -> np.ndarray:
             C = bc.value
-            sums = np.zeros((len(C), dim), dtype=np.int64)
-            counts = np.zeros(len(C), dtype=np.int64)
+            acc = np.zeros((k, dim + 1), dtype=np.int64)
             for pdf in batches:
                 if not len(pdf):
                     continue
@@ -178,34 +173,19 @@ def _fit_loop(src, df, id_col, vec_col, k, n_iter, fp_bits):
                     assign = d2.argmin(axis=1)  # first min = smallest id
                     for j in np.unique(assign):
                         sel = xb[assign == j]
-                        sums[j] += sel.sum(axis=0)
-                        counts[j] += len(sel)
-            nz = np.nonzero(counts)[0]
-            if len(nz):
-                yield pd.DataFrame(
-                    {
-                        "cluster": np.repeat(nz, dim).astype(np.int32),
-                        "dim": np.tile(np.arange(dim, dtype=np.int32), len(nz)),
-                        "s": sums[nz].reshape(-1),
-                        "n": np.repeat(counts[nz], dim),
-                    }
-                )
+                        acc[j, :dim] += sel.sum(axis=0)
+                        acc[j, dim] += len(sel)
+            return acc.reshape(-1)
 
-        stats = (
-            src.mapInPandas(
-                partial_stats, "cluster int, dim int, s long, n long"
-            )
-            .groupBy("cluster", "dim")
-            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            .collect()
-        )
+        acc = sum_partials(src, partial_stats, k * (dim + 1))
+        acc = acc.reshape(k, dim + 1)
         bc.unpersist()
-        new = [list(c) for c in centroids]  # empty clusters keep position
-        for r in stats:
-            s, n = int(r["s"]), int(r["n"])
-            new[r["cluster"]][r["dim"]] = (s - ((s % n) + n) % n) // n
-        centroids = new
-    return centroids
+        n = acc[:, dim]
+        nz = n > 0  # empty clusters keep their position
+        # numpy // on int64 is floor division, exact like the oracle's
+        # (s − mod(s, n)) / n with a non-negative mod
+        centroids[nz] = acc[nz, :dim] // n[nz, None]
+    return centroids.tolist()
 
 
 def kmeans_assign(
@@ -264,7 +244,7 @@ def kmeans_assign(
     bc = spark.sparkContext.broadcast(np.asarray(centroids, dtype=np.int64))
     scale = float(1 << fp_bits)
     # (chunk × k × dim) int64 distance temporary bounded to ~16 MB,
-    # matching _fit_loop
+    # matching kmeans_fit
     chunk_rows = max(1, 2_000_000 // max(k * dim, 1))
     in_fields = list(df.schema.fields)
     out_schema = StructType(

@@ -4260,6 +4260,7 @@ def txt_hashed_bow_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         perceptron_predict,
         substring_count,
     )
+    from ..utils import materialize
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     feats = hashed_bow_features(docs, "doc_id", "text", dim=_HBOW_DIM)
@@ -4271,16 +4272,14 @@ def txt_hashed_bow_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1),
         ).otherwise(F.lit(-1)).alias("y"),
     )
-    feats = feats.join(lab, "doc_id").persist()
+    # derived once: the epochs and the final write read the checkpoint
+    feats = materialize(feats.join(lab, "doc_id"))
     fcols = [f"f{j}" for j in range(_HBOW_DIM)]
-    try:
-        w = batch_perceptron_fit(
-            feats, fcols, "y", n_epochs=len(_HBOW_LR), lr=_HBOW_LR
-        )
-        out = perceptron_predict(feats, fcols, w)
-        return out.select("doc_id", "y", "score", "pred")
-    finally:
-        feats.unpersist()
+    w = batch_perceptron_fit(
+        feats, fcols, "y", n_epochs=len(_HBOW_LR), lr=_HBOW_LR
+    )
+    out = perceptron_predict(feats, fcols, w)
+    return out.select("doc_id", "y", "score", "pred")
 
 
 def _sql_hashed_perceptron() -> str:

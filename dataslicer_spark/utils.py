@@ -399,6 +399,65 @@ def materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
+#: Driver bound of ``sum_partials``, in int64 cells (partitions × width):
+#: 2²² cells = 32 MB of partial vectors collected at once.
+SUM_PARTIALS_MAX_CELLS = 1 << 22
+
+
+def sum_partials(df: DataFrame, kernel, width: int):
+    """Exact sum over partitions of one int64 vector each, in one job.
+
+    ``kernel(batches) -> array`` reduces one partition — an iterator of
+    pandas frames of ``df``'s columns, possibly empty — to a single
+    int64 vector of length ``width``.  Each partition ships that vector
+    as one ``binary`` row; the driver collects the rows and sums them in
+    numpy.  Integer addition is order-independent, so the result does
+    not depend on the partitioning.  This is MLlib's ``treeAggregate``
+    shape: a ``mapInPandas → groupBy → collect`` reduce of the same
+    partials costs an extra shuffle-map job under AQE.
+
+    Driver bound: when ``partitions × width`` exceeds
+    ``SUM_PARTIALS_MAX_CELLS`` one tree level first sums the partials on
+    ``⌈√P⌉`` round-robin partitions, so the driver receives ``⌈√P⌉``
+    vectors instead of ``P``.
+
+    ``P`` is read with ``df.rdd.getNumPartitions()``: zero jobs on a
+    scan-rooted or checkpointed frame (``materialize``), but a persisted
+    or shuffle-rooted frame runs its upstream stages for the probe —
+    hand this a materialized frame when it is called in a loop.
+    """
+    import math
+
+    import numpy as np
+    import pandas as pd
+
+    def packed(batches):
+        v = np.asarray(kernel(batches), dtype=np.int64)
+        if v.shape != (width,):
+            raise ValueError(
+                f"kernel returned shape {v.shape}, expected ({width},)"
+            )
+        yield pd.DataFrame({"v": [v.tobytes()]})
+
+    def unpack(rows) -> np.ndarray:
+        total = np.zeros(width, dtype=np.int64)
+        for b in rows:
+            total += np.frombuffer(b, dtype=np.int64)
+        return total
+
+    def add(batches):
+        total = unpack(b for pdf in batches for b in pdf["v"])
+        yield pd.DataFrame({"v": [total.tobytes()]})
+
+    parts = df.mapInPandas(packed, "v binary")
+    nparts = df.rdd.getNumPartitions()
+    if nparts * width > SUM_PARTIALS_MAX_CELLS:
+        parts = parts.repartition(math.ceil(math.sqrt(nparts))).mapInPandas(
+            add, "v binary"
+        )
+    return unpack(r["v"] for r in parts.collect())
+
+
 def spread(df: DataFrame, factor: int = 1, barrier: bool = False) -> DataFrame:
     """Round-robin repartition ``df`` to cluster parallelism when its
     current partitioning would leave most cores idle.

@@ -38,3 +38,26 @@ def orders(spark, sf_dir):
 @pytest.fixture(scope="session")
 def customer(spark, sf_dir):
     return spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn) -> (fn(), number of Spark jobs fn ran)``, counted
+    with the status tracker under a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count_jobs.{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # the tracker is fed by the listener bus: drain it before reading
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

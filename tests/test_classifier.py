@@ -154,6 +154,24 @@ def test_engines_agree_and_validate(toy):
         batch_perceptron_fit(df, ["a"], "y", engine="numpy")
 
 
+def test_wide_fit_runs_one_job_per_epoch(spark, count_jobs):
+    """The Arrow path (> 16 features) reduces each epoch's partial
+    gradients on the driver: one job per epoch on a materialized input,
+    and the same weights as the numpy replay."""
+    from dataslicer_spark.utils import materialize
+
+    rng = np.random.default_rng(5)
+    X = rng.integers(-3, 4, size=(150, 20))
+    y = np.where(X[:, :5].sum(axis=1) > 0, 1, -1)
+    cols = [f"x{j}" for j in range(X.shape[1])]
+    rows = [(int(y[i]), *map(int, X[i])) for i in range(len(X))]
+    schema = "y int, " + ", ".join(f"{c} long" for c in cols)
+    df = materialize(spark.createDataFrame(rows, schema).repartition(3))
+    w, jobs = count_jobs(lambda: batch_perceptron_fit(df, cols, "y", n_epochs=4))
+    assert jobs == 4
+    assert w == list(_numpy_fit(X.astype(np.int64), y.astype(np.int64), 4))
+
+
 def test_hashed_bow_features(spark):
     import hashlib
 

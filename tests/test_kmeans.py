@@ -83,6 +83,15 @@ def test_kmeans_partitioning_invariance(vecs):
     assert a == b == c
 
 
+def test_kmeans_fit_runs_one_job_per_iteration(vecs, count_jobs):
+    """Each Lloyd's update is one job: the partition partials reduce on
+    the driver, with no shuffle behind them."""
+    _, df = vecs
+    _, one = count_jobs(lambda: kmeans_fit(df, "vec_id", "embedding", k=4, n_iter=1))
+    _, four = count_jobs(lambda: kmeans_fit(df, "vec_id", "embedding", k=4, n_iter=4))
+    assert four - one == 3
+
+
 def test_kmeans_assign_arrow_kernel_matches_literal_path(vecs):
     """kmeans_assign switches to an Arrow mapInPandas kernel above
     k·d = 512 (the HOF literal expression is interpreted and its n·k·d
