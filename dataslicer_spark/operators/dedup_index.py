@@ -20,6 +20,10 @@ Plan shape (the part that matters at scale):
 - appending a deduped batch is a parquet append of its signatures and
   bands — no rewrite, no compaction requirement (compact with
   ``sources/lake.py`` tooling if small files accumulate);
+- a probe derives each artifact once: the batch is round-robined once
+  (one checkpoint feeds both the signature kernel and the verify
+  shingles), its signatures and the candidate pairs are checkpointed,
+  and nothing stays in the session cache when the call returns;
 - the streaming form is this operator inside ``foreachBatch``:
   dedup the micro-batch against the index, append survivors.
 
@@ -47,6 +51,12 @@ from .dedup import (
 
 #: index layout: <path>/{signatures,bands,meta} parquet directories.
 _SIGS, _BANDS, _META = "signatures", "bands", "meta"
+_META_SCHEMA = "n int, num_perm int, bands int, bits int"
+
+#: Most candidate pairs whose corpus ids the exact-verify fetch pushes
+#: into the corpus scan as an ``In()`` literal list; more pairs take a
+#: broadcast semi-join.
+ISIN_MAX_IDS = 4_000
 
 
 def _index_band_keys(
@@ -100,8 +110,12 @@ def build_minhash_index(
     sigs.hint("rebalance").write.mode("overwrite").parquet(
         os.path.join(path, _SIGS)
     )
+    # band keys from the WRITTEN signatures (the kernel runs once); the
+    # frame's own schema skips the parquet schema-inference job
     _index_band_keys(
-        df.sparkSession.read.parquet(os.path.join(path, _SIGS)),
+        df.sparkSession.read.schema(sigs.schema).parquet(
+            os.path.join(path, _SIGS)
+        ),
         num_perm,
         bands,
         bits,
@@ -109,17 +123,16 @@ def build_minhash_index(
         os.path.join(path, _BANDS)
     )
     local_df(
-        df.sparkSession,
-        [(n, num_perm, bands, bits)],
-        "n int, num_perm int, bands int, bits int",
+        df.sparkSession, [(n, num_perm, bands, bits)], _META_SCHEMA
     ).write.mode("overwrite").parquet(os.path.join(path, _META))
 
 
 def _read_meta(spark: SparkSession, path: str) -> tuple[int, int, int, int]:
-    row = spark.read.parquet(os.path.join(path, _META)).collect()[0]
-    # pre-round-11 indexes have no bits column: full-width
-    bits = row.asDict().get("bits", 0) or 0
-    return row.n, row.num_perm, row.bands, bits
+    row = spark.read.schema(_META_SCHEMA).parquet(
+        os.path.join(path, _META)
+    ).collect()[0]
+    # pre-round-11 indexes have no bits column (reads as null): full-width
+    return row.n, row.num_perm, row.bands, row.bits or 0
 
 
 def dedup_against_minhash_index(
@@ -130,7 +143,6 @@ def dedup_against_minhash_index(
     threshold: float = 0.5,
     append_survivors: bool = True,
     exact_verify_with: DataFrame | None = None,
-    release_cache: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Near-dup the batch against the index; returns
     ``(survivors, matches)``.
@@ -156,30 +168,39 @@ def dedup_against_minhash_index(
 
     With ``append_survivors`` (default) the survivors' signatures and
     band keys are appended to the index, so consecutive calls implement
-    the incremental-ingestion loop; pass False for a dry-run check
-    (dry-runs return fully lazy plans).  Appending calls materialize
-    (checkpoint) the returned frames BEFORE the append — they must not
-    remain lazy reads of index paths the append just grew, or a
-    post-return evaluation would see the batch in the index and
-    self-match every document.  The stored band table is scanned once,
-    map-side hash-joined against the broadcast batch keys.
+    the incremental-ingestion loop; pass False for a dry-run check.
+    Appending calls materialize (checkpoint) the returned frames BEFORE
+    the append — they must not remain lazy reads of index paths the
+    append just grew, or a post-return evaluation would see the batch in
+    the index and self-match every document.  Dry-runs return plans
+    over this call's checkpoints and the caller's tables.
 
-    ``release_cache`` — for callers that invoke this in a loop (the
-    streaming form runs it every micro-batch): eagerly materializes the
-    two returned frames, then unpersists the call's three internal
-    cached frames (batch signatures, band keys, candidate pairs) so a
-    long-running driver doesn't accumulate one cache generation per
-    batch.  The RETURNED frames come back materialized (checkpointed;
-    their blocks are reclaimed when the frames are GC'd)."""
+    Every probe artifact is derived once: the batch is round-robined
+    once (one checkpoint feeds the signature kernel and the verify
+    shingles); its signatures and the candidate pairs are checkpointed,
+    so the stored band table is scanned once, map-side hash-joined
+    against the broadcast batch keys; the candidate ids for the corpus
+    fetch come from one bounded collect of the candidate checkpoint.
+    Nothing enters the session cache, so a caller that runs this in a
+    loop (the streaming form, every micro-batch) accumulates no cache
+    generations — checkpoint blocks are reclaimed when their frames are
+    garbage-collected."""
     from ..functions.text import word_shingles
 
     spark = new_df.sparkSession
     check_col([id_col, text_col], new_df)
     n, num_perm, bands, bits = _read_meta(spark, path)
-    sigs_new = minhash_signatures(
-        new_df, id_col, text_col, n, num_perm, pack_bits=bits or None
-    ).persist()
-    bands_new = _index_band_keys(sigs_new, num_perm, bands, bits).persist()
+    # ONE spread of the batch (guide §2.5): the signature kernel's own
+    # spread() is a 0-job no-op on this already-wide checkpoint, and the
+    # verify shingles below read the same rows.  barrier: the shingle
+    # trees are JVM expressions Catalyst would push under the exchange.
+    batch = spread(new_df.select(id_col, text_col), barrier=True)
+    sigs_new = materialize(
+        minhash_signatures(
+            batch, id_col, text_col, n, num_perm, pack_bits=bits or None
+        )
+    )
+    bands_new = _index_band_keys(sigs_new, num_perm, bands, bits)
 
     def _sig_est(sig_a, sig_b):
         """Signature-only Jaccard estimate: slot-agreement fraction for
@@ -195,7 +216,10 @@ def dedup_against_minhash_index(
         ).cast("double") / F.lit(float(num_perm))
 
     stored_bands = spark.read.parquet(os.path.join(path, _BANDS))
-    cand = (
+    # both the verify join and the candidate-id fetch below consume this
+    # bounded (|batch|·matches) frame — checkpoint it so the stored band
+    # table is scanned once, not once per consumer
+    cand = materialize(
         stored_bands.withColumnRenamed("id", "index_id")
         .join(
             F.broadcast(bands_new.withColumnRenamed("id", "new_id")),
@@ -203,28 +227,12 @@ def dedup_against_minhash_index(
         )
         .select("new_id", "index_id")
         .dropDuplicates()
-        # both the verify join and the candidate-id prefilter below
-        # consume this bounded (|batch|·matches) frame — persist so the
-        # stored band table is scanned once, not once per consumer
-        .persist()
     )
-    stored_sigs = spark.read.parquet(os.path.join(path, _SIGS))
     if exact_verify_with is not None:
         check_col([id_col, text_col], exact_verify_with)
-        # spread below the shingle derivation (guide §2.5): both the
-        # batch side and the fetched-corpus side otherwise explode
-        # shingles at scan width (one task on a one-row-group table);
-        # spread() is a guarded no-op on wide inputs.  The corpus side
-        # spreads BEFORE the semi-join so the broadcast join (which
-        # preserves the big side's partitioning) doesn't pin the
-        # shingle work back to scan width.
-        sh_new = spread(
-            new_df.select(
-                F.col(id_col).alias("new_id"), F.col(text_col).alias("__t")
-            )
-        ).select(
-            "new_id",
-            F.array_distinct(word_shingles(F.col("__t"), n)).alias("sh_n"),
+        sh_new = batch.select(
+            F.col(id_col).alias("new_id"),
+            F.array_distinct(word_shingles(F.col(text_col), n)).alias("sh_n"),
         ).filter(F.size("sh_n") > 0)
         # honor the "texts fetched for candidate ids only" contract: the
         # candidate-id set is bounded by the BATCH (≤ |batch|·matches
@@ -239,17 +247,23 @@ def dedup_against_minhash_index(
         # the plan/codegen and costs MORE than the semi-join it replaces
         # (measured: a 60k-literal list added ~20% to the ingestion
         # bench row) — corpus-sized candidate sets take the broadcast
-        # semi-join instead.
-        cand_ids = cand.select(F.col("index_id").alias(id_col)).distinct()
-        id_list = [r[0] for r in cand_ids.limit(4_001).collect()]
+        # semi-join instead.  The pairs themselves are collected (one
+        # job on the checkpoint, no distinct shuffle): a pair set within
+        # the cap bounds its distinct ids too.
+        pairs = cand.limit(ISIN_MAX_IDS + 1).collect()
         src = exact_verify_with.select(
             F.col(id_col), F.col(text_col).alias("__ct")
         )
-        if len(id_list) <= 4_000:
+        if len(pairs) <= ISIN_MAX_IDS:
+            id_list = list(dict.fromkeys(r.index_id for r in pairs))
             # In()-literal prune first, spread after: the pruned scan is
             # candidate-sized, so the exchange is bounded by the batch
             fetched = spread(src.filter(F.col(id_col).isin(id_list)))
         else:
+            # spread BEFORE the semi-join so the broadcast join (which
+            # preserves the big side's partitioning) doesn't pin the
+            # shingle work back to scan width
+            cand_ids = cand.select(F.col("index_id").alias(id_col)).distinct()
             fetched = spread(src).join(
                 F.broadcast(cand_ids), id_col, "left_semi"
             )
@@ -279,6 +293,7 @@ def dedup_against_minhash_index(
             .select("new_id", "index_id", "jaccard")
         )
     else:
+        stored_sigs = spark.read.parquet(os.path.join(path, _SIGS))
         est = (
             cand.join(
                 F.broadcast(
@@ -334,18 +349,14 @@ def dedup_against_minhash_index(
         dropped.withColumnRenamed("dropped_id", id_col), id_col, "left_anti"
     )
 
-    if append_survivors or release_cache:
+    if append_survivors:
         # materialize (checkpoint) both results BEFORE touching the index
         # dirs: the returned frames are otherwise lazy plans that READ
         # the very paths the append below writes to — a post-return
         # evaluation could re-list the index with the batch already in
         # it, so every document would self-match and be dropped.
-        # Checkpointing severs the lineage from those paths entirely
-        # (not just under release_cache — ANY appending call needs it;
-        # release_cache additionally relies on it so the returned frames
-        # survive the unpersist of the internal caches below).
+        # Checkpointing severs the lineage from those paths entirely.
         survivors, est = materialize(survivors), materialize(est)
-    if append_survivors:
         surv_ids = survivors.select(F.col(id_col).alias("id"))
         surv_sigs = sigs_new.join(F.broadcast(surv_ids), "id", "left_semi")
         # REBALANCE appends too — a daily-batch loop would otherwise
@@ -356,9 +367,6 @@ def dedup_against_minhash_index(
         _index_band_keys(surv_sigs, num_perm, bands, bits).hint(
             "rebalance"
         ).write.mode("append").parquet(os.path.join(path, _BANDS))
-    if release_cache:
-        for frame in (sigs_new, bands_new, cand):
-            frame.unpersist()
     return survivors, est
 
 

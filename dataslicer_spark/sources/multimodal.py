@@ -274,8 +274,11 @@ def extract_audio_features(decoded: DataFrame) -> DataFrame:
                                      rms=None, peak=None,
                                      zero_crossing_rate=None))
                     continue
+                # a NULL row in the Arrow batch makes pandas widen the
+                # integer columns to float64: cast back before indexing
+                n_samples, n_channels = int(r.n_samples), int(r.n_channels)
                 arr = np.asarray(r.samples, dtype=np.float64).reshape(
-                    r.n_samples, r.n_channels
+                    n_samples, n_channels
                 )
                 mono = arr.mean(axis=1)
                 zc = (
@@ -287,7 +290,7 @@ def extract_audio_features(decoded: DataFrame) -> DataFrame:
                     dict(
                         path=r.path,
                         duration_ms=int(
-                            r.n_samples * 1000 // r.sample_rate
+                            n_samples * 1000 // r.sample_rate
                         ),
                         rms=float(np.sqrt(np.mean(mono**2))),
                         peak=int(np.max(np.abs(arr))),
@@ -408,9 +411,8 @@ def extract_image_features(decoded: DataFrame) -> DataFrame:
                     rows.append(dict(path=r.path, mean_intensity=None,
                                      std_intensity=None, channel_means=None))
                     continue
-                arr = np.asarray(r.pixels, dtype=np.int64).reshape(
-                    r.height, r.width, r.n_channels
-                )
+                h, w, c = int(r.height), int(r.width), int(r.n_channels)
+                arr = np.asarray(r.pixels, dtype=np.int64).reshape(h, w, c)
                 n = arr.size
                 s = int(arr.sum())
                 ssq = int((arr * arr).sum())
@@ -421,8 +423,7 @@ def extract_image_features(decoded: DataFrame) -> DataFrame:
                         mean_intensity=s / n,
                         std_intensity=math.sqrt(var) if var > 0 else 0.0,
                         channel_means=[
-                            int(c) / (n // r.n_channels)
-                            for c in arr.sum(axis=(0, 1))
+                            int(m) / (n // c) for m in arr.sum(axis=(0, 1))
                         ],
                     )
                 )
@@ -452,15 +453,14 @@ def resize_images(
                     rows.append(dict(path=r.path, height=None, width=None,
                                      n_channels=None, pixels=None))
                     continue
-                arr = np.asarray(r.pixels, dtype=np.int32).reshape(
-                    r.height, r.width, r.n_channels
-                )
-                yi = (np.arange(out_height) * r.height) // out_height
-                xi = (np.arange(out_width) * r.width) // out_width
+                h, w, c = int(r.height), int(r.width), int(r.n_channels)
+                arr = np.asarray(r.pixels, dtype=np.int32).reshape(h, w, c)
+                yi = (np.arange(out_height) * h) // out_height
+                xi = (np.arange(out_width) * w) // out_width
                 res = arr[yi][:, xi]
                 rows.append(
                     dict(path=r.path, height=out_height, width=out_width,
-                         n_channels=r.n_channels,
+                         n_channels=c,
                          pixels=res.reshape(-1))
                 )
             yield pd.DataFrame(rows)
@@ -552,12 +552,11 @@ def phash64_images(
                 if r.pixels is None:
                     rows.append(dict(path=r.path, phash=None))
                     continue
-                arr = np.asarray(r.pixels, dtype=np.float64).reshape(
-                    r.height, r.width, r.n_channels
-                )
+                h, w, c = int(r.height), int(r.width), int(r.n_channels)
+                arr = np.asarray(r.pixels, dtype=np.float64).reshape(h, w, c)
                 gray = arr.mean(axis=2)
-                yi = (np.arange(size) * r.height) // size
-                xi = (np.arange(size) * r.width) // size
+                yi = (np.arange(size) * h) // size
+                xi = (np.arange(size) * w) // size
                 g = gray[yi][:, xi]
                 block = basis @ g @ basis.T  # keep x keep low-freq DCT
                 flat = block.reshape(-1)

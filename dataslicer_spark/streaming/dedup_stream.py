@@ -53,13 +53,12 @@ def stream_dedup_ingest(
         n = batch_df.count()
         if n == 0:
             return
-        # release_cache: the per-batch internal caches are dropped inside
-        # the operator; the returned frames come back checkpointed
-        # (blocks reclaimed on GC) — a 10⁵-batch stream accumulates no
-        # cache generations
+        # the operator caches nothing and returns checkpointed frames
+        # when it appends (blocks reclaimed on GC) — a 10⁵-batch stream
+        # accumulates no cache generations
         survivors, _matches = dedup_against_minhash_index(
             batch_df, index_path, id_col, text_col, threshold,
-            append_survivors=True, release_cache=True,
+            append_survivors=True,
         )
         kept = survivors.count()
         if survivors_path is not None:

@@ -134,10 +134,10 @@ CHECKS: list[tuple[str, str, list[str], list[str]]] = [
     ("gr_pagerank", "rank iterations are equi-joins + hash aggregates — "
      "state stays distributed, no Python, no cartesian",
      ["HashAggregate"], ["Python", "CartesianProduct", "NestedLoop"]),
-    ("txt_hashed_bow_classifier", "hashed-BoW featurization is one "
-     "pinned-values pivot (count shuffle with map-side combine); "
-     "prediction is a literal-weights projection",
-     ["HashAggregate"], ["CartesianProduct", "NestedLoop"]),
+    ("txt_hashed_bow_classifier", "hashed-BoW features are materialized "
+     "once before the fit; prediction is a literal-weights projection "
+     "over the checkpoint — no shuffle, join or Python",
+     ["ExistingRDD"], ["Exchange", "Join", "Python", "CartesianProduct"]),
     ("txt_ridge_regression", "ridge prediction is a map-only fixed-order "
      "double projection (the normal matrix already aggregated as "
      "partial+final integer sums)",

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from dataslicer_spark.operators import dedup_index
 from dataslicer_spark.operators.dedup import minhash_lsh_pairs
 from dataslicer_spark.operators.dedup_index import (
     build_minhash_index,
@@ -192,7 +193,7 @@ def test_returned_frames_survive_later_appends(spark, docs, tmp_path):
 
     surv1, matches1 = dedup_against_minhash_index(
         batch1, path, "doc_id", threshold=0.5
-    )  # defaults: append_survivors=True, release_cache=False
+    )  # default: append_survivors=True
 
     # mutate the index again before evaluating batch 1's results
     batch2 = docs.subtract(batch1).limit(10)
@@ -302,3 +303,99 @@ def test_bbit_build_rejects_bad_bits(spark, docs, tmp_path):
         build_minhash_index(
             docs.limit(5), str(tmp_path / "bad"), "doc_id", bits=5
         )
+
+
+# ---------------------------------------------------------------------------
+# single-pass ingestion: job counts, no cache, both fetch paths, old meta
+# ---------------------------------------------------------------------------
+
+@pytest.fixture
+def scanned(spark, sf_dir):
+    """Scan-rooted corpus (one row group → one scan partition, so the
+    batch spread fires) and a near-dup batch of its first 40 docs."""
+    import os
+
+    corpus = spark.read.parquet(
+        os.path.join(sf_dir, "documents.parquet")
+    ).select("doc_id", "text")
+    return corpus, _mutate(corpus.filter(F.col("doc_id") < 40), 500_000)
+
+
+def test_build_and_probe_job_counts(spark, scanned, tmp_path, count_jobs):
+    """Each artifact is derived once.  Build: signature write, band write
+    from the written signatures read with their known schema, meta write.
+    Dry-run exact-verify probe: meta read with its declared schema, ONE
+    batch spread, signature and candidate checkpoints, one collect of
+    the candidate pairs — no schema inference of the unused signature
+    table, no cache stages, no distinct shuffle for the id list."""
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("the batch spread is a no-op on one core")
+    corpus, batch = scanned
+    path = str(tmp_path / "jobs")
+    _, build_jobs = count_jobs(
+        lambda: build_minhash_index(corpus, path, "doc_id")
+    )
+    (_surv, matches), probe_jobs = count_jobs(
+        lambda: dedup_against_minhash_index(
+            batch, path, "doc_id", threshold=0.8,
+            append_survivors=False, exact_verify_with=corpus,
+        )
+    )
+    assert (build_jobs, probe_jobs) == (7, 9)
+    assert matches.count() >= 30  # the planted near-dups are found
+
+
+def test_probe_leaves_session_cache_empty(spark, scanned, tmp_path):
+    corpus, batch = scanned
+    path = str(tmp_path / "nocache")
+    spark.catalog.clearCache()
+    build_minhash_index(corpus.filter(F.col("doc_id") < 100), path, "doc_id")
+    dedup_against_minhash_index(batch, path, "doc_id", threshold=0.5)
+    dedup_against_minhash_index(
+        batch, path, "doc_id", threshold=0.5,
+        append_survivors=False, exact_verify_with=corpus,
+    )
+    jcache = spark._jsparkSession.sharedState().cacheManager()
+    assert jcache.isEmpty()
+
+
+def test_semi_join_fetch_matches_isin_fetch(spark, scanned, tmp_path, monkeypatch):
+    """Candidate sets over the ``In()``-literal cap take the broadcast
+    semi-join fetch; both fetch paths verify the same pairs."""
+    corpus, batch = scanned
+    path = str(tmp_path / "fetch")
+    build_minhash_index(corpus, path, "doc_id")
+    kw = dict(threshold=0.5, append_survivors=False, exact_verify_with=corpus)
+
+    def probe():
+        m = dedup_against_minhash_index(batch, path, "doc_id", **kw)[1]
+        plan = m._jdf.queryExecution().executedPlan().toString()
+        return {tuple(r) for r in m.collect()}, "LeftSemi" in plan
+
+    isin, isin_semi = probe()
+    monkeypatch.setattr(dedup_index, "ISIN_MAX_IDS", 0)
+    semi, semi_semi = probe()
+    assert (isin_semi, semi_semi) == (False, True)
+    assert len(isin) >= 30 and semi == isin
+
+
+def test_meta_without_bits_probes_full_width(spark, scanned, tmp_path):
+    """An index whose meta predates the ``bits`` column reads it as null
+    and probes as a full-width index."""
+    import os
+
+    corpus, batch = scanned
+    path = str(tmp_path / "oldmeta")
+    build_minhash_index(corpus, path, "doc_id")
+
+    def matches():
+        m = dedup_against_minhash_index(
+            batch, path, "doc_id", threshold=0.5, append_survivors=False
+        )[1]
+        return {tuple(r) for r in m.collect()}
+
+    want = matches()
+    spark.createDataFrame(
+        [(3, 64, 16)], "n int, num_perm int, bands int"
+    ).write.mode("overwrite").parquet(os.path.join(path, "meta"))
+    assert matches() == want and len(want) >= 30

@@ -90,8 +90,8 @@ def test_stream_dedup_within_batch_and_replay(spark, tmp_path):
 
 
 def test_stream_leaves_no_cached_frames(spark, tmp_path):
-    """release_cache contract: after the stream drains, the session's
-    cache holds nothing from the per-batch probe internals."""
+    """After the stream drains, the session's cache holds nothing from
+    the per-batch probe internals."""
     import os
 
     from dataslicer_spark.operators.dedup_index import build_minhash_index
