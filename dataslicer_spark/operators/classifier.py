@@ -25,6 +25,15 @@ Scale design mirrors every distributed SGD/L-BFGS implementation:
 - the driver holds d ints — model state is microscopic;
 - prediction is a map-only literal-weights projection.
 
+The wide expressions — the weighted sum, the fit's null filter and the
+expression engine's gradient sums — are built as one SQL string each
+(``F.expr`` / ``filter(str)`` / ``selectExpr``), never as a Python
+``Column`` tree: every ``F.lit``/``F.col``/operator node is a Py4J
+round trip, and a 64-feature dot product or null filter built node by
+node cost 0.25–0.5 s of driver time per call before Spark saw a plan.
+Column names are backtick-quoted (``utils.sql_ident``), so names with
+spaces, dashes or backticks stay safe.
+
 Batch (not sequential) perceptron is the deliberate choice: classic
 per-sample perceptron updates are order-dependent and cannot be
 distributed or replayed; the batch variant is a parallel gradient step
@@ -37,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..utils import check_col, sum_partials
+from ..utils import check_col, sql_ident, sum_partials
 
 #: (name, builder) — integer surface features computable identically in
 #: Spark and ANSI SQL (simple character classes only: Java regex and RE2
@@ -89,59 +98,44 @@ def hashed_bow_features(
     """The hashing trick (Weinberger et al., ICML 2009): whitespace
     tokens hash into ``dim`` count buckets — the fixed-width,
     vocabulary-free text representation fastText-style classifiers train
-    on.  Returns (id_col, ``f0…f{dim−1}``) with int64 counts; documents
-    with no tokens get all-zero rows.
+    on.  Returns ``df``'s columns plus ``{prefix}0…{prefix}{dim−1}``
+    int64 counts, one output row per input row (like
+    ``add_text_features``); NULL or token-free text gets an all-zero
+    row.  ``id_col`` names the document key the caller carries through;
+    the features do not depend on it.
 
     Slots come from md5 (not xxhash64) so any SQL engine replays them:
-    ``conv(substr(md5(token),1,8),16,10) % dim``.  The plan is explode →
-    ``groupBy(id).pivot(slot, [0..dim))`` — ONE count shuffle with
-    map-side combine; the pivot values are pinned so no discovery pass
-    runs.  At 100 TB the wire carries (id, slot) counts, never tokens.
+    ``conv(substr(md5(token),1,8),16,10) % dim``.  The plan is map-only:
+    one projection computes the document's slot array (md5 once per
+    token), a second counts each slot with ``size(filter(…))``.  No
+    shuffle, no join — the wire carries nothing; features are a per-row
+    function of the text.
     """
     check_col([id_col, text_col], df)
-    toks = df.select(
-        F.col(id_col),
-        F.explode(F.split(F.col(text_col), r"\s+")).alias("__tok"),
-    ).filter(F.col("__tok") != "")
-    slot = (
-        F.conv(F.substring(F.md5(F.col("__tok")), 1, 8), 16, 10)
-        .cast("long") % dim
+    # coalesce the ARRAY, not the size: size(NULL) is NULL under ANSI
+    # but −1 with ANSI off
+    slots = (
+        rf"transform(filter(coalesce(split({sql_ident(text_col)}, '\\s+'),"
+        f" array()), t -> t <> ''),"
+        f" t -> CAST(conv(substring(md5(t), 1, 8), 16, 10) AS BIGINT) % {dim})"
     )
-    counted = (
-        toks.withColumn("__slot", slot)
-        .groupBy(id_col)
-        .pivot("__slot", list(range(dim)))
-        .count()
-    )
-    renamed = counted.select(
-        F.col(id_col),
+    # __slots stays its own projection: it is referenced dim times, so
+    # Catalyst keeps it below the counts instead of inlining md5 per slot
+    return df.withColumn("__slots", F.expr(slots)).selectExpr(
+        *[sql_ident(c) for c in df.columns],
         *[
-            F.coalesce(F.col(f"`{j}`"), F.lit(0)).cast("long").alias(
-                f"{prefix}{j}"
-            )
+            f"CAST(size(filter(__slots, s -> s = {j})) AS BIGINT)"
+            f" AS {sql_ident(f'{prefix}{j}')}"
             for j in range(dim)
         ],
     )
-    return (
-        df.select(id_col)
-        .join(renamed, id_col, "left")
-        .select(
-            F.col(id_col),
-            *[
-                F.coalesce(F.col(f"{prefix}{j}"), F.lit(0)).alias(
-                    f"{prefix}{j}"
-                )
-                for j in range(dim)
-            ],
-        )
-    )
 
 
-def _dot(weights: list[int], feature_cols: list[str]) -> Column:
-    acc = F.lit(int(weights[0]))  # bias
-    for w, c in zip(weights[1:], feature_cols):
-        acc = acc + F.lit(int(w)) * F.col(c)
-    return acc
+def _dot(weights: list[int], feature_cols: list[str]) -> str:
+    """``w0 + w1 * f1 + …`` as SQL text.  Integer literals type as
+    ``F.lit`` does: int when they fit, bigint otherwise."""
+    terms = [f"{int(w)} * {sql_ident(c)}" for w, c in zip(weights[1:], feature_cols)]
+    return " + ".join([str(int(weights[0])), *terms])  # bias first
 
 
 def batch_perceptron_fit(
@@ -189,10 +183,11 @@ def batch_perceptron_fit(
         engine == "arrow"
         or (engine == "auto" and len(feature_cols) > 16)
     )
-    cond = F.col(label_col).isNotNull()
-    for c in feature_cols:  # column objects, not SQL text: names with
-        cond = cond & F.col(c).isNotNull()  # spaces/dashes stay safe
-    clean = df.filter(cond)
+    clean = df.filter(
+        " AND ".join(
+            f"{sql_ident(c)} IS NOT NULL" for c in [label_col, *feature_cols]
+        )
+    )
     if init_weights is None:
         w = [0] * (1 + len(feature_cols))
     else:
@@ -204,18 +199,15 @@ def batch_perceptron_fit(
         w = [int(v) for v in init_weights]
     if use_arrow:
         return _fit_arrow(clean, feature_cols, label_col, lrs, w)
-    y = F.col(label_col)
+    y = sql_ident(label_col)
     for step in lrs:
-        miscls = (y * _dot(w, feature_cols)) <= 0
-        aggs = [
-            F.sum(F.when(miscls, y).otherwise(F.lit(0))).alias("g0")
-        ] + [
-            F.sum(
-                F.when(miscls, y * F.col(c)).otherwise(F.lit(0))
-            ).alias(f"g{j + 1}")
+        miscls = f"{y} * ({_dot(w, feature_cols)}) <= 0"
+        aggs = [f"sum(CASE WHEN {miscls} THEN {y} ELSE 0 END) AS g0"] + [
+            f"sum(CASE WHEN {miscls} THEN {y} * {sql_ident(c)} ELSE 0 END)"
+            f" AS g{j + 1}"
             for j, c in enumerate(feature_cols)
         ]
-        row = clean.agg(*aggs).collect()[0]
+        row = clean.selectExpr(*aggs).collect()[0]
         for j in range(len(w)):
             g = row[f"g{j}"]
             w[j] += step * int(g if g is not None else 0)
@@ -235,7 +227,12 @@ def _fit_arrow(
     path (matmul of int64 never leaves numpy's exact integer domain)."""
     import numpy as np
 
-    src = clean.select(label_col, *feature_cols)
+    # positional names: mapInPandas cannot address a column named with
+    # a backtick
+    src = clean.selectExpr(
+        f"{sql_ident(label_col)} AS y",
+        *[f"{sql_ident(c)} AS x{j}" for j, c in enumerate(feature_cols)],
+    )
     d = len(feature_cols)
     for step in lrs:
         wa = np.asarray(w, dtype=np.int64)
@@ -243,8 +240,8 @@ def _fit_arrow(
         def grad(batches):
             g = np.zeros(d + 1, dtype=np.int64)
             for pdf in batches:
-                X = pdf[feature_cols].to_numpy(dtype=np.int64)
-                y = pdf[label_col].to_numpy(dtype=np.int64)
+                A = pdf.to_numpy(dtype=np.int64)
+                y, X = A[:, 0], A[:, 1:]
                 m = y * (wa[0] + X @ wa[1:]) <= 0
                 g[0] += y[m].sum()
                 g[1:] += (X[m] * y[m, None]).sum(axis=0)
@@ -266,7 +263,7 @@ def perceptron_predict(
     matching the training rule's "≤ 0 is misclassified-as-negative").
     Map-only literal-weights plan."""
     check_col(feature_cols, df)
-    score = _dot(weights, feature_cols)
+    score = F.expr(_dot(weights, feature_cols))
     return df.withColumn(score_col, score).withColumn(
         pred_col,
         F.when(F.col(score_col) > 0, F.lit(1)).otherwise(F.lit(-1)),

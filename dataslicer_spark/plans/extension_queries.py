@@ -4247,7 +4247,7 @@ _HBOW_LR = [16, 8, 4, 2, 1, 1, 1, 1]
 def txt_hashed_bow_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """fastText-style text classification end to end: hashed
     bag-of-words features (classifier.hashed_bow_features, 64 md5
-    buckets, one count shuffle) + batch-perceptron training against the
+    buckets, map-only) + batch-perceptron training against the
     same teacher rule as ``txt_quality_classifier`` — but the model sees
     ONLY the hashed counts, so it must discover the signal-carrying
     buckets through hash collisions (reaches ≈0.92 train accuracy; the
@@ -4263,17 +4263,18 @@ def txt_hashed_bow_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..utils import materialize
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    feats = hashed_bow_features(docs, "doc_id", "text", dim=_HBOW_DIM)
-    lab = docs.select(
-        "doc_id",
-        F.when(
-            substring_count(F.col("text"), "fast")
-            > substring_count(F.col("text"), "slow"),
-            F.lit(1),
-        ).otherwise(F.lit(-1)).alias("y"),
+    y = F.when(
+        substring_count(F.col("text"), "fast")
+        > substring_count(F.col("text"), "slow"),
+        F.lit(1),
+    ).otherwise(F.lit(-1)).alias("y")
+    # label and features in one projection of the scan, derived once:
+    # the epochs and the final write read the checkpoint
+    feats = materialize(
+        hashed_bow_features(
+            docs.select("doc_id", "text", y), "doc_id", "text", dim=_HBOW_DIM
+        ).drop("text")
     )
-    # derived once: the epochs and the final write read the checkpoint
-    feats = materialize(feats.join(lab, "doc_id"))
     fcols = [f"f{j}" for j in range(_HBOW_DIM)]
     w = batch_perceptron_fit(
         feats, fcols, "y", n_epochs=len(_HBOW_LR), lr=_HBOW_LR

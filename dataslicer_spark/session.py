@@ -16,6 +16,18 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def driver_memory() -> str:
+    """``spark.driver.memory``: ``SPARK_DRIVER_MEM`` when exported, else
+    half the host's physical memory, capped at 64g.  The heap grows
+    lazily toward its maximum, so a fixed 64g default let a long-lived
+    local JVM outgrow a small host and be OOM-killed mid-run."""
+    exported = os.environ.get("SPARK_DRIVER_MEM")
+    if exported:
+        return exported
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(phys // 2, 64 << 30) >> 20}m"
+
+
 def get_spark(
     app_name: str = "dataslicer_spark",
     master: str | None = None,
@@ -45,7 +57,7 @@ def get_spark(
         # receive pushed filters via pushFilters (Spark 4.1 opt-in)
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "64g"))
+        .config("spark.driver.memory", driver_memory())
         # whole-stage codegen emits one JIT-compiled class per plan
         # fragment; with ~76 registered queries the JDK-default 240 MB
         # code cache saturates mid-run and HotSpot silently stops

@@ -46,6 +46,13 @@ def check_col(col: str | Iterable[str], df: DataFrame) -> None:
         )
 
 
+def sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier (embedded backticks
+    doubled), safe to splice into ``F.expr`` / ``selectExpr`` /
+    ``filter(str)`` text whatever characters the column name holds."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 # ---------------------------------------------------------------------------
 # wildcard (substring) column matching — reference df_utils.py:107-139
 # ---------------------------------------------------------------------------

@@ -195,3 +195,93 @@ def test_hashed_bow_features(spark):
     want4 = [0] * dim
     want4[slot("cat")] = 1
     assert rows[4] == want4
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_hashed_bow_null_and_empty_text_give_zero_rows(spark, ansi):
+    """NULL text counts as no tokens under both ANSI settings (size(NULL)
+    is NULL with ANSI on and −1 with it off; the slot array is coalesced
+    before counting)."""
+    from dataslicer_spark.operators.classifier import hashed_bow_features
+
+    df = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "   ")], "doc_id long, text string"
+    )
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        rows = hashed_bow_features(df, "doc_id", "text", dim=4).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert sorted((r.doc_id, r.f0, r.f1, r.f2, r.f3) for r in rows) == [
+        (1, 0, 0, 0, 0), (2, 0, 0, 0, 0), (3, 0, 0, 0, 0)
+    ]
+
+
+def test_hashed_bow_keeps_rows_and_input_columns(spark):
+    """Output rows are 1:1 with input rows — duplicate ids are not merged
+    — and carry every input column ahead of the counts."""
+    from dataslicer_spark.operators.classifier import hashed_bow_features
+
+    df = spark.createDataFrame(
+        [(1, "cat", 10), (1, "cat cat", 11), (2, "dog", 12)],
+        "doc_id long, text string, n int",
+    )
+    out = hashed_bow_features(df, "doc_id", "text", dim=4)
+    assert out.columns == ["doc_id", "text", "n", "f0", "f1", "f2", "f3"]
+    got = sorted(
+        (r.doc_id, r.n, r.f0 + r.f1 + r.f2 + r.f3) for r in out.collect()
+    )
+    assert got == [(1, 10, 1), (1, 11, 2), (2, 12, 1)]
+
+
+def test_hashed_bow_is_one_map_only_job(spark, sf_dir, count_jobs):
+    """Featurizing a scan is a projection: materializing it runs one job,
+    and the plan has no shuffle, join or aggregate."""
+    import os
+
+    from dataslicer_spark.operators.classifier import hashed_bow_features
+    from dataslicer_spark.utils import materialize
+
+    scan = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    feats = hashed_bow_features(scan, "doc_id", "text")
+    plan = feats._jdf.queryExecution().executedPlan().toString()
+    for node in ("Exchange", "Join", "Aggregate"):
+        assert node not in plan
+    assert plan.count("md5(") == 1  # once per token, not once per slot
+    _, jobs = count_jobs(lambda: materialize(feats))
+    assert jobs == 1
+
+
+def test_sql_text_paths_quote_column_names(spark, toy):
+    """The fit, predict and featurize expressions are SQL text: column
+    names with spaces, dashes and backticks give the same results as
+    plain names."""
+    from dataslicer_spark.operators.classifier import hashed_bow_features
+
+    _, _, df = toy
+    odd = ["a b", "x-y", "q`t"]
+    df_odd = df.toDF("id", "l-y", *odd)
+    for engine in ("expr", "arrow"):
+        w = batch_perceptron_fit(
+            df, ["a", "b", "c"], "y", n_epochs=3, engine=engine
+        )
+        assert batch_perceptron_fit(
+            df_odd, odd, "l-y", n_epochs=3, engine=engine
+        ) == w
+    want = {r.id: r.score for r in perceptron_predict(df, ["a", "b", "c"], w).collect()}
+    got = {r.id: r.score for r in perceptron_predict(df_odd, odd, w).collect()}
+    assert got == want
+
+    docs = spark.createDataFrame(
+        [(1, "cat dog cat"), (2, None), (3, "dog bird")],
+        "doc_id long, text string",
+    )
+    plain = hashed_bow_features(docs, "doc_id", "text", dim=8)
+    quoted = hashed_bow_features(
+        docs.toDF("a b", "x-y"), "a b", "x-y", dim=8, prefix="q`t"
+    )
+    assert quoted.columns == ["a b", "x-y", *[f"q`t{j}" for j in range(8)]]
+    assert sorted(tuple(r) for r in quoted.collect()) == sorted(
+        tuple(r) for r in plain.collect()
+    )

@@ -103,7 +103,8 @@ def test_kmeans_assign_arrow_kernel_matches_literal_path(vecs):
     from dataslicer_spark.operators.kmeans import _best_cluster, quantize_expr
 
     lit = (
-        df.withColumn("__b", _best_cluster(quantize_expr("embedding"), cents_big))
+        df.withColumn("__xq", quantize_expr("embedding"))
+        .withColumn("__b", _best_cluster("__xq", cents_big))
         .select(
             "vec_id",
             F.col("__b")["cluster"].alias("cluster"),
@@ -276,3 +277,22 @@ def test_semantic_dedup_auto_k_derivation(spark):
         df.limit(5), threshold=0.9999, n_iter=1, target_cluster_rows=512
     )
     assert surv2.count() == 5
+
+
+def test_kmeans_assign_quotes_column_names(vecs):
+    """The literal-centroid argmin is SQL text: an odd vector column name
+    assigns exactly like a plain one."""
+    _, df = vecs
+    cents = kmeans_fit(df, "vec_id", "embedding", k=4, n_iter=1)
+    want = sorted(
+        tuple(r)
+        for r in kmeans_assign(df, cents, "embedding")
+        .select("vec_id", "cluster", "d2").collect()
+    )
+    for name in ("a b", "x-y", "q`t"):
+        got = sorted(
+            tuple(r)
+            for r in kmeans_assign(df.toDF("vec_id", name), cents, name)
+            .select("vec_id", "cluster", "d2").collect()
+        )
+        assert got == want
