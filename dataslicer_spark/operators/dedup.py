@@ -1,6 +1,8 @@
 """Deduplication operators for training-data pipelines (north-star
-extensions per BASELINE.json): exact, n-gram Jaccard, MinHash+LSH, SimHash,
-and embedding-cosine near-dup.
+extensions per BASELINE.json): exact, n-gram Jaccard, shingle
+containment, MinHash+LSH (full-width, b-bit and — in
+``weighted_minhash.py`` — weighted), SimHash, and embedding-cosine
+near-dup.
 
 Scale design notes:
 
@@ -11,14 +13,23 @@ Scale design notes:
   docs, LSH band → docs, simhash chunk → docs), and only candidates are
   verified.  Hot shingles are capped (``max_posting``) — the classic
   stop-shingle guard against quadratic postings blowup.
+- All MinHash LSH runs one pipeline: signatures (``minhash_signatures``,
+  packed b-bit lanes with ``pack_bits``, or weighted CWS samples) →
+  :func:`band_buckets` → ``_band_pairs`` → exact verify
+  (``_verify_exact``, true shingle Jaccard) or estimate verify
+  (``_verify_estimate`` over :func:`est_jaccard`).  The three pair
+  operators and the persistent index (``dedup_index.py``) share
+  ``band_buckets`` and ``est_jaccard``, so stored and probe-side keys
+  and estimates are computed by the same code at every width.
 - All verification math is exact integer/fixed-point arithmetic, so
   results are reproducible across partitionings.
 
 Algorithms are the classic public constructions: MinHash resemblance
 sketches (Broder, "On the resemblance and containment of documents",
 1997), banded LSH for Jaccard (Leskovec/Rajaraman/Ullman, *Mining of
-Massive Datasets* ch. 3), and SimHash with pigeonhole chunk search
-(Charikar 2002; Manku/Jain/Sarma, WWW 2007).
+Massive Datasets* ch. 3), b-bit MinHash (Li & König, WWW 2010), and
+SimHash with pigeonhole chunk search (Charikar 2002; Manku/Jain/Sarma,
+WWW 2007).
 """
 
 from __future__ import annotations
@@ -274,7 +285,6 @@ def containment_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_posting: int | None = 10_000,
-    use_prefix: bool | None = None,
 ) -> DataFrame:
     """Ordered document pairs where the SMALLER document's shingle set
     is ≥ ``threshold`` contained in the other: ``containment(A→B) =
@@ -289,39 +299,15 @@ def containment_pairs(
     |inner ∩ outer| / |inner| where ``n_inner ≤ n_outer`` (ties: both
     directions evaluated via the id order, inner = smaller id).
 
-    Two lossless plans: the direct inverted-index pair count, or
-    SSJoin-style prefix filtering adapted to the asymmetric predicate —
-    containment ≥ t needs overlap ≥ t·|inner|, so only the INNER side
-    prunes to its rare-first prefix of length ``|d| − ⌈t·|d|⌉ + 1``
-    while the outer side stays FULLY indexed (no size relation exists
-    to prune it); candidates carry the first-shared-token positional
-    bound on the inner side and verify exactly via ``array_intersect``.
-    The same ``max_posting`` stop-shingle cap bounds the fanout in both
-    plans; counts run over the filtered sets, sizes stay full
-    (documented approximation, identical across plans).
-
-    ``use_prefix=None`` auto-selects DIRECT at every threshold — unlike
-    the Jaccard twin, where both sides prune and prefix wins 7× at
-    t=0.8.  A/B on the doc-in-doc corpus (scripts/ab_containment.py,
-    sf0.1 documents + 40%-token prefix re-entries, quiet host, round
-    10)::
-
-        t      direct   prefix   prefix/direct
-        0.70    6.76s    7.20s    1.07x
-        0.80    4.01s    6.71s    1.67x
-        0.90    3.42s    5.93s    1.73x
-        0.95    3.56s    6.57s    1.85x
-
-    and the gap GROWS with data (4× corpus at t=0.9: direct
-    3.55→11.57 s = 3.26×, prefix 6.26→88.32 s = 14.11×): the
-    un-prunable outer index makes prefix candidate fanout superlinear
-    in corpus size, so direct is also the 100 TB-correct default.
-    ``use_prefix=True`` stays available (lossless, pytest bit-parity)
-    for corpora whose inner docs are tiny relative to the index.
+    Plan: the direct inverted-index pair count, with the same
+    ``max_posting`` stop-shingle cap as the Jaccard twin; counts run
+    over the filtered sets, sizes stay full (documented approximation).
+    There is no prefix-filtered plan: containment bounds only the inner
+    side, so the outer index stays unpruned and an SSJoin prefix plan
+    measured slower at every threshold from 0.7 to 0.95, with candidate
+    fanout superlinear in corpus size (14× vs 3.3× wall on a 4× corpus).
     """
     check_col([id_col, text_col], df)
-    if use_prefix is None:
-        use_prefix = False
     # spread before the shingle explode (guide §2.5): the lowercase/
     # split/distinct/explode map work otherwise runs at the scan's
     # partitioning — one task on a one-row-group table — feeding every
@@ -335,131 +321,42 @@ def containment_pairs(
         ).alias("s"),
     )
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-
-    def _orient(sized: DataFrame) -> DataFrame:
-        inner_is_a = (F.col("n_a") < F.col("n_b")) | (
-            (F.col("n_a") == F.col("n_b")) & (F.col("id_a") < F.col("id_b"))
-        )
-        out = sized.select(
-            F.when(inner_is_a, F.col("id_a")).otherwise(F.col("id_b")).alias(
-                "inner_id"
-            ),
-            F.when(inner_is_a, F.col("id_b")).otherwise(F.col("id_a")).alias(
-                "outer_id"
-            ),
-            "n_common",
-            F.when(inner_is_a, F.col("n_a")).otherwise(F.col("n_b")).alias(
-                "n_inner"
-            ),
-            F.when(inner_is_a, F.col("n_b")).otherwise(F.col("n_a")).alias(
-                "n_outer"
-            ),
-        ).withColumn(
-            "containment",
-            F.col("n_common").cast("double") / F.col("n_inner").cast("double"),
-        ).filter(F.col("containment") >= threshold)
-        return out.select(
-            "inner_id", "outer_id", "n_common", "n_inner", "n_outer",
-            "containment",
-        )
-
-    if not use_prefix:
-        inv = sh
-        if max_posting is not None:
-            posting = sh.groupBy("s").agg(F.count(F.lit(1)).alias("__df"))
-            inv = sh.join(
-                posting.filter(F.col("__df") <= max_posting).select("s"),
-                "s",
-                "inner",
-            )
-        a = inv.select(F.col("id").alias("id_a"), "s")
-        b = inv.select(F.col("id").alias("id_b"), "s")
-        common = (
-            a.join(b, "s")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-        sized = common.join(
-            sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a")),
-            "id_a",
-        ).join(
-            sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b")),
-            "id_b",
-        )
-        return _orient(sized)
-
-    posting = sh.groupBy("s").agg(F.count(F.lit(1)).alias("__df"))
+    inv = sh
     if max_posting is not None:
-        posting = posting.filter(F.col("__df") <= max_posting)
-    inv = sh.join(posting, "s", "inner")
-    # cached, not materialized: feeds four subtrees of one action (see
-    # the A/B note on the Jaccard twin above)
-    docsets = inv.groupBy("id").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct(F.col("__df"), F.col("s")))),
-            lambda x: x["s"],
-        ).alias("sset"),
-    ).withColumn("n_f", F.size("sset")).join(sizes, "id").cache()
-    plen = F.greatest(
-        F.lit(1),
-        F.col("n_f")
-        - F.ceil(F.lit(float(threshold)) * F.col("n_f") - F.lit(1e-9))
-        + 1,
-    ).cast("int")
-    # inner candidates come from the prefix; the outer side is the FULL
-    # filtered index (containment gives no bound on the outer size)
-    pref = docsets.select(
-        F.col("id").alias("id_i"), F.col("n_f").alias("n_fi"),
-        F.col("n_sh").alias("n_i"),
-        F.posexplode(F.slice(F.col("sset"), F.lit(1), plen)).alias("pi", "s"),
+        posting = sh.groupBy("s").agg(F.count(F.lit(1)).alias("__df"))
+        inv = sh.join(
+            posting.filter(F.col("__df") <= max_posting).select("s"),
+            "s",
+            "inner",
+        )
+    a = inv.select(F.col("id").alias("id_a"), "s")
+    b = inv.select(F.col("id").alias("id_b"), "s")
+    common = (
+        a.join(b, "s")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    full = inv.join(
-        docsets.select("id", F.col("n_f").alias("n_fo"),
-                       F.col("n_sh").alias("n_o")),
-        "id",
-    ).select(F.col("id").alias("id_o"), "s", "n_fo", "n_o")
-    tt = float(threshold)
-    # overlap needed: α = ⌈t·n_inner_FULL⌉ (containment divides by the
-    # full inner size); overlap ≤ min(filtered sizes) and ≤ the inner
-    # first-shared-token positional bound
-    alpha = F.ceil(F.lit(tt) * F.col("n_i") - F.lit(1e-9))
-    cand = (
-        pref.join(full, "s")
-        .filter(
-            (F.col("n_i") < F.col("n_o"))
-            | ((F.col("n_i") == F.col("n_o")) & (F.col("id_i") < F.col("id_o")))
-        )
-        .groupBy("id_i", "id_o", "n_i", "n_o", "n_fi", "n_fo")
-        .agg(
-            F.max(F.lit(1) + (F.col("n_fi") - F.col("pi") - 1)).alias("__ub")
-        )
-        .filter(
-            (F.least(F.col("n_fi"), F.col("n_fo")) >= alpha)
-            & (F.col("__ub") >= alpha)
-        )
+    sized = common.join(
+        sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a")),
+        "id_a",
+    ).join(
+        sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b")),
+        "id_b",
     )
-    verified = (
-        cand.join(
-            docsets.select(F.col("id").alias("id_i"), F.col("sset").alias("__si")),
-            "id_i",
-        )
-        .join(
-            docsets.select(F.col("id").alias("id_o"), F.col("sset").alias("__so")),
-            "id_o",
-        )
-        .withColumn(
-            "n_common",
-            F.size(F.array_intersect(F.col("__si"), F.col("__so"))).cast("long"),
-        )
+    inner_is_a = (F.col("n_a") < F.col("n_b")) | (
+        (F.col("n_a") == F.col("n_b")) & (F.col("id_a") < F.col("id_b"))
     )
-    # inner/outer orientation is already established by construction
-    out = verified.select(
-        F.col("id_i").alias("inner_id"),
-        F.col("id_o").alias("outer_id"),
+
+    def pick(col_a: str, col_b: str) -> Column:
+        return F.when(inner_is_a, F.col(col_a)).otherwise(F.col(col_b))
+
+    out = sized.select(
+        pick("id_a", "id_b").alias("inner_id"),
+        pick("id_b", "id_a").alias("outer_id"),
         "n_common",
-        F.col("n_i").alias("n_inner"),
-        F.col("n_o").alias("n_outer"),
+        pick("n_a", "n_b").alias("n_inner"),
+        pick("n_b", "n_a").alias("n_outer"),
     ).withColumn(
         "containment",
         F.col("n_common").cast("double") / F.col("n_inner").cast("double"),
@@ -589,15 +486,31 @@ def minhash_signatures(
     )
 
 
-def band_buckets(sigs: DataFrame, num_perm: int, bands: int) -> DataFrame:
-    """(id, band, bucket) keys of a ``minhash_signatures`` frame: ``bands``
-    bands of ``num_perm/bands`` signature slots, each hashed to one
-    bucket key (multi-arg xxhash64 over the band's slots directly —
-    string concat per band was measurably slower).  Shared by
-    :func:`minhash_lsh_pairs` and the persistent index
-    (``operators/dedup_index.py``) so stored and probe-side buckets are
-    always computed identically."""
+def _slot(sig: Column, i: int, bits: int) -> Column:
+    """Signature slot ``i``: the element itself at full width; at
+    ``bits`` > 0, lane ``i mod (64/bits)`` of packed word
+    ``i // (64/bits)`` (JVM shift/mask)."""
+    if not bits:
+        return sig[i]
+    lanes = 64 // bits
+    return F.shiftrightunsigned(sig[i // lanes], (i % lanes) * bits).bitwiseAND(
+        F.lit((1 << bits) - 1)
+    )
+
+
+def band_buckets(
+    sigs: DataFrame, num_perm: int, bands: int, bits: int = 0
+) -> DataFrame:
+    """(id, band, bucket) keys of a signature frame (column
+    ``signature``): ``bands`` bands of ``num_perm/bands`` slots, each
+    hashed to one bucket key (multi-arg xxhash64 over the band's slots
+    directly — string concat per band was measurably slower).  ``bits``
+    > 0 reads a ``minhash_signatures(pack_bits=bits)`` frame, slot by
+    packed lane.  Shared by every LSH pair operator and the persistent
+    index (``operators/dedup_index.py``), so stored and probe-side
+    buckets are always computed identically."""
     r = num_perm // bands
+    sig = F.col("signature")
     return sigs.select(
         "id",
         F.explode(
@@ -606,7 +519,7 @@ def band_buckets(sigs: DataFrame, num_perm: int, bands: int) -> DataFrame:
                     F.struct(
                         F.lit(b).alias("band"),
                         F.xxhash64(
-                            *[F.col("signature")[b * r + j] for j in range(r)]
+                            *[_slot(sig, b * r + j, bits) for j in range(r)]
                         ).alias("bucket"),
                     )
                     for b in range(bands)
@@ -614,6 +527,130 @@ def band_buckets(sigs: DataFrame, num_perm: int, bands: int) -> DataFrame:
             )
         ).alias("bb"),
     ).select("id", "bb.band", "bb.bucket")
+
+
+def est_jaccard(
+    sig_a: Column, sig_b: Column, num_perm: int, bits: int = 0
+) -> Column:
+    """Signature-only Jaccard estimate.  Full width: the fraction of
+    equal slots.  b-bit (Li & König eq. 4, large-universe form): the
+    matched-lane fraction E satisfies ``E = C + (1−C)·J`` with collision
+    floor ``C = 2^−bits``, so ``Ĵ = max(0, (E − C)/(1 − C))`` — static
+    per-lane integer shift/mask comparisons, codegen-friendly and
+    SQL-replayable."""
+    if not bits:
+        return F.size(
+            F.filter(
+                F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int")),
+                lambda v: v == 1,
+            )
+        ).cast("double") / F.lit(float(num_perm))
+    match_terms = [
+        F.when(_slot(sig_a, i, bits) == _slot(sig_b, i, bits), F.lit(1))
+        .otherwise(F.lit(0))
+        for i in range(num_perm)
+    ]
+    e = sum(match_terms[1:], match_terms[0]).cast("double") / F.lit(
+        float(num_perm)
+    )
+    c = 1.0 / float(1 << bits)
+    return F.greatest((e - F.lit(c)) / F.lit(1.0 - c), F.lit(0.0))
+
+
+def _check_lsh_args(num_perm: int, bands: int, verify: bool | str) -> None:
+    if num_perm % bands != 0:
+        raise ValueError(
+            f"signature length {num_perm} must be divisible by bands={bands}"
+        )
+    if verify not in (True, False, "exact"):
+        raise ValueError(
+            f"verify must be True, False or 'exact', got {verify!r}"
+        )
+
+
+def _band_pairs(bucketed: DataFrame) -> DataFrame:
+    """Distinct candidate pairs (id_a < id_b) sharing any band bucket."""
+    a = bucketed.select(F.col("id").alias("id_a"), "band", "bucket")
+    b = bucketed.select(F.col("id").alias("id_b"), "band", "bucket")
+    return (
+        a.join(b, ["band", "bucket"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .dropDuplicates()
+    )
+
+
+def _verify_exact(
+    cand: DataFrame,
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    threshold: float,
+) -> DataFrame:
+    """(id_a, id_b, jaccard ≥ threshold): true shingle-set Jaccard,
+    recomputed for the candidate pairs only."""
+    # spread the verify-side scan too (guide §2.5): the shingle
+    # derivation feeding the candidate joins otherwise runs at scan
+    # width (see the dd_weighted_minhash r11 profile).  MATERIALIZE it:
+    # the frame feeds BOTH candidate joins, and each join side plans as
+    # its own broadcast/shuffle subtree, so an unmaterialized sh
+    # re-derives every doc's shingle set once per side (r11
+    # dd_minhash_bbit profile: two ~3 s narrow subtree jobs for one
+    # logical derivation)
+    sh = materialize(
+        spread(
+            df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__vt")),
+            barrier=True,
+        ).select(
+            "id",
+            F.array_distinct(word_shingles(F.col("__vt"), n)).alias("sh"),
+        ).filter(F.size("sh") > 0)
+    )
+    out = (
+        cand.join(
+            sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")),
+            "id_a",
+        )
+        .join(
+            sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")),
+            "id_b",
+        )
+        .withColumn("n_common", F.size(F.array_intersect("sh_a", "sh_b")))
+        .withColumn(
+            "jaccard",
+            F.col("n_common").cast("double")
+            / (F.size("sh_a") + F.size("sh_b") - F.col("n_common")).cast(
+                "double"
+            ),
+        )
+        .filter(F.col("jaccard") >= threshold)
+    )
+    return out.select("id_a", "id_b", "jaccard")
+
+
+def _verify_estimate(
+    cand: DataFrame,
+    sigs: DataFrame,
+    num_perm: int,
+    bits: int,
+    threshold: float,
+    out_col: str,
+) -> DataFrame:
+    """(id_a, id_b, ``out_col`` ≥ threshold): :func:`est_jaccard` over
+    the candidates' signatures — no shingle re-join."""
+    sa = sigs.select(F.col("id").alias("id_a"), F.col("signature").alias("sig_a"))
+    sb = sigs.select(F.col("id").alias("id_b"), F.col("signature").alias("sig_b"))
+    est = (
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn(
+            out_col,
+            est_jaccard(F.col("sig_a"), F.col("sig_b"), num_perm, bits),
+        )
+        .filter(F.col(out_col) >= threshold)
+    )
+    return est.select("id_a", "id_b", out_col)
 
 
 def minhash_lsh_pairs(
@@ -633,7 +670,7 @@ def minhash_lsh_pairs(
     candidates, filtered at ``threshold``:
 
     - ``verify=True`` — estimated Jaccard = fraction of equal signature
-      slots (cheap, signature-only);
+      slots (cheap, signature-only; output col ``est_jaccard``);
     - ``verify="exact"`` — true shingle-set Jaccard recomputed for the
       candidate pairs only (output col ``jaccard``).  The output is then
       engine-independent: it equals {pairs with exact J ≥ threshold}
@@ -647,12 +684,7 @@ def minhash_lsh_pairs(
     shingle arrays for candidates only; signatures are fixed-size
     regardless of document length.
     """
-    if num_perm % bands != 0:
-        raise ValueError("num_perm must be divisible by bands")
-    if verify not in (True, False, "exact"):
-        raise ValueError(
-            f"verify must be True, False or 'exact', got {verify!r}"
-        )
+    _check_lsh_args(num_perm, bands, verify)
     # cache(), not materialize: a cold lazy cache does run this kernel
     # once per concurrent consumer, but the plain minhash kernel is
     # cheap (xxhash shingles + one numpy matmul) and the r11 interleaved
@@ -663,182 +695,12 @@ def minhash_lsh_pairs(
     # weighted_minhash_pairs, bbit_minhash_lsh_pairs), where the same
     # A/B goes the other way (14-16 s cache vs ~8 s materialized).
     sigs = minhash_signatures(df, id_col, text_col, n, num_perm).cache()
-    bucketed = band_buckets(sigs, num_perm, bands)
-    a = bucketed.select(F.col("id").alias("id_a"), "band", "bucket")
-    b = bucketed.select(F.col("id").alias("id_b"), "band", "bucket")
-    cand = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates()
-    )
+    cand = _band_pairs(band_buckets(sigs, num_perm, bands))
     if not verify:
         return cand
     if verify == "exact":
-        # spread the verify-side scan too (guide §2.5): the shingle
-        # derivation feeding the candidate joins otherwise runs at scan
-        # width (see the dd_weighted_minhash r11 profile).  MATERIALIZE
-        # it: the frame feeds BOTH candidate joins, and each join side
-        # plans as its own broadcast/shuffle subtree, so an
-        # unmaterialized sh re-derives every doc's shingle set once per
-        # side (r11 dd_minhash_bbit profile: two ~3 s narrow subtree
-        # jobs for one logical derivation)
-        sh = materialize(
-            spread(
-                df.select(
-                    F.col(id_col).alias("id"), F.col(text_col).alias("__vt")
-                ),
-                barrier=True,
-            ).select(
-                "id",
-                F.array_distinct(word_shingles(F.col("__vt"), n)).alias("sh"),
-            ).filter(F.size("sh") > 0)
-        )
-        out = (
-            cand.join(
-                sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")),
-                "id_a",
-            )
-            .join(
-                sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")),
-                "id_b",
-            )
-            .withColumn("n_common", F.size(F.array_intersect("sh_a", "sh_b")))
-            .withColumn(
-                "jaccard",
-                F.col("n_common").cast("double")
-                / (
-                    F.size("sh_a") + F.size("sh_b") - F.col("n_common")
-                ).cast("double"),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
-        return out.select("id_a", "id_b", "jaccard")
-    sa = sigs.select(F.col("id").alias("id_a"), F.col("signature").alias("sig_a"))
-    sb = sigs.select(F.col("id").alias("id_b"), F.col("signature").alias("sig_b"))
-    est = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "est_jaccard",
-            F.size(
-                F.filter(
-                    F.zip_with(
-                        "sig_a", "sig_b", lambda x, y: (x == y).cast("int")
-                    ),
-                    lambda v: v == 1,
-                )
-            ).cast("double")
-            / F.lit(float(num_perm)),
-        )
-        .filter(F.col("est_jaccard") >= threshold)
-    )
-    return est.select("id_a", "id_b", "est_jaccard")
-
-
-# ---------------------------------------------------------------------------
-# b-bit MinHash (Li & König, WWW'10)
-# ---------------------------------------------------------------------------
-
-def bbit_minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    n: int = 3,
-    num_perm: int = 64,
-    bits: int = 8,
-) -> DataFrame:
-    """b-bit MinHash signatures (Li & König, WWW'10): keep only the
-    lowest ``bits`` bits of each of the ``num_perm`` minhash values and
-    pack them ``64/bits`` lanes per int64 word — ``num_perm=64, bits=8``
-    stores 64 B/doc instead of 512 B, an 8× smaller persistent index at
-    (for near-dup thresholds) equal banding recall.  The packing is pure
-    JVM bit arithmetic (mask + shift + or), whole-stage codegen.
-
-    Output: (id, bsig array<long> of ``ceil(num_perm·bits/64)`` words;
-    lane ``i`` = bits ``(i mod lanes)·bits ..`` of word ``i // lanes``).
-    """
-    if bits not in (1, 2, 4, 8, 16, 32):
-        raise ValueError(f"bits must divide 64, got {bits}")
-    return minhash_signatures(
-        df, id_col, text_col, n, num_perm, pack_bits=bits
-    ).select("id", F.col("signature").alias("bsig"))
-
-
-def _bbit_lane(word: Column, j: int, bits: int) -> Column:
-    """Extract packed lane ``j`` from an int64 word."""
-    return F.shiftrightunsigned(word, j * bits).bitwiseAND(
-        F.lit((1 << bits) - 1)
-    )
-
-
-def bbit_band_buckets(
-    sigs: DataFrame,
-    num_perm: int,
-    bands: int,
-    bits: int,
-    sig_col: str = "bsig",
-) -> DataFrame:
-    """(id, band, bucket) keys over PACKED b-bit signature words — the
-    b-bit twin of :func:`band_buckets`: same ``bands`` bands of
-    ``num_perm/bands`` slots, each hashed to one bucket, but slots are
-    lane-extracted from the packed int64 words (pure JVM shift/mask).
-    Shared by :func:`bbit_minhash_lsh_pairs` and the persistent index
-    (``operators/dedup_index.py``, ``bits=`` mode) so stored and
-    probe-side buckets are always computed identically."""
-    r = num_perm // bands
-    lanes = 64 // bits
-    return sigs.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[
-                                _bbit_lane(
-                                    F.col(sig_col)[(b * r + j) // lanes],
-                                    (b * r + j) % lanes,
-                                    bits,
-                                )
-                                for j in range(r)
-                            ]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
-
-
-def bbit_est_jaccard(
-    bsig_a: Column, bsig_b: Column, num_perm: int, bits: int = 8
-) -> Column:
-    """Unbiased b-bit Jaccard estimator (Li & König eq. 4, large-universe
-    form): matched-lane fraction E satisfies ``E = C + (1−C)·J`` with
-    collision floor ``C = 2^−bits``, so ``Ĵ = max(0, (E − C)/(1 − C))``.
-    Static per-lane comparisons over the packed words — all integer
-    shifts/masks, codegen-friendly and SQL-replayable."""
-    lanes = 64 // bits
-    match_terms = []
-    for i in range(num_perm):
-        w, j = i // lanes, i % lanes
-        match_terms.append(
-            F.when(
-                _bbit_lane(bsig_a[w], j, bits)
-                == _bbit_lane(bsig_b[w], j, bits),
-                F.lit(1),
-            ).otherwise(F.lit(0))
-        )
-    e = sum(match_terms[1:], match_terms[0]).cast("double") / F.lit(
-        float(num_perm)
-    )
-    c = 1.0 / float(1 << bits)
-    return F.greatest(
-        (e - F.lit(c)) / F.lit(1.0 - c), F.lit(0.0)
-    )
+        return _verify_exact(cand, df, id_col, text_col, n, threshold)
+    return _verify_estimate(cand, sigs, num_perm, 0, threshold, "est_jaccard")
 
 
 def bbit_minhash_lsh_pairs(
@@ -852,11 +714,13 @@ def bbit_minhash_lsh_pairs(
     threshold: float = 0.8,
     verify: bool | str = "exact",
 ) -> DataFrame:
-    """Near-dup pairs via b-bit MinHash banding — the storage-optimal
-    twin of :func:`minhash_lsh_pairs` for a PERSISTED index: buckets are
-    computed from the packed b-bit words only (lane extraction is JVM
-    shift/mask), so the stored index is ``num_perm·bits/8`` bytes per
-    doc (8× smaller at bits=8) and bodies/full signatures never ship.
+    """Near-dup pairs via b-bit MinHash banding (Li & König, WWW'10) —
+    the storage-optimal form of :func:`minhash_lsh_pairs` for a
+    PERSISTED index: signatures keep only the lowest ``bits`` bits of
+    each slot, packed ``64/bits`` lanes per int64 word
+    (``minhash_signatures(pack_bits=bits)``), so the stored index is
+    ``num_perm·bits/8`` bytes per doc (8× smaller at bits=8) and buckets
+    are computed from the packed lanes only.
 
     Candidate-set guarantee: equal full minhash slots imply equal b-bit
     lanes, so the candidate set is a SUPERSET of full-width MinHash
@@ -865,7 +729,7 @@ def bbit_minhash_lsh_pairs(
     while the extra random collisions (≈2^−(r·bits) per band per pair)
     only add exact-verify work, never wrong output.  With
     ``verify="exact"`` the result is therefore engine-independent and
-    carries the same exact-Jaccard SQL oracle as the full-width twin.
+    carries the same exact-Jaccard SQL oracle as the full-width form.
 
     Sizing rule for scale: random band collisions cost
     ``n²·bands/2^(r·bits)`` candidate verifies, so keep
@@ -875,86 +739,25 @@ def bbit_minhash_lsh_pairs(
     proportionally more bands for the same miss bound.
 
     ``verify=True`` returns the b-bit ESTIMATED Jaccard
-    (:func:`bbit_est_jaccard`) — signature-only, no shingle re-join;
-    its higher variance (σ ≈ √(J(1−J)/num_perm)/(1−2^−bits)) is pinned
-    by pytest, not an oracle.
+    (:func:`est_jaccard` with ``bits``) — signature-only, no shingle
+    re-join; its higher variance (σ ≈ √(J(1−J)/num_perm)/(1−2^−bits))
+    is pinned by pytest, not an oracle.
     """
-    if num_perm % bands != 0:
-        raise ValueError("num_perm must be divisible by bands")
-    if verify not in (True, False, "exact"):
-        raise ValueError(
-            f"verify must be True, False or 'exact', got {verify!r}"
-        )
-    from ..utils import materialize
-
-    # bsigs feeds both sides of the band self-join (and twice more in the
+    _check_lsh_args(num_perm, bands, verify)
+    # sigs feeds both sides of the band self-join (and twice more in the
     # estimate branch): MATERIALIZE, not cache — an unmaterialized cache
     # inside one action can re-run the signature kernel per consumer
-    # (measured on the weighted twin: 14-16 s with cache() vs ~8 s
+    # (measured on the weighted form: 14-16 s with cache() vs ~8 s
     # materialized at sf0.1)
-    bsigs = materialize(
-        bbit_minhash_signatures(df, id_col, text_col, n, num_perm, bits)
+    sigs = materialize(
+        minhash_signatures(df, id_col, text_col, n, num_perm, pack_bits=bits)
     )
-    bucketed = bbit_band_buckets(bsigs, num_perm, bands, bits)
-    a = bucketed.select(F.col("id").alias("id_a"), "band", "bucket")
-    b = bucketed.select(F.col("id").alias("id_b"), "band", "bucket")
-    cand = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates()
-    )
+    cand = _band_pairs(band_buckets(sigs, num_perm, bands, bits))
     if not verify:
         return cand
     if verify == "exact":
-        # spread the verify-side scan too (guide §2.5), and MATERIALIZE:
-        # sh feeds both candidate joins — see the full-width twin above
-        # (r11 profile: two ~3 s narrow subtree jobs without it)
-        sh = materialize(
-            spread(
-                df.select(
-                    F.col(id_col).alias("id"), F.col(text_col).alias("__vt")
-                ),
-                barrier=True,
-            ).select(
-                "id",
-                F.array_distinct(word_shingles(F.col("__vt"), n)).alias("sh"),
-            ).filter(F.size("sh") > 0)
-        )
-        out = (
-            cand.join(
-                sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")),
-                "id_a",
-            )
-            .join(
-                sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")),
-                "id_b",
-            )
-            .withColumn("n_common", F.size(F.array_intersect("sh_a", "sh_b")))
-            .withColumn(
-                "jaccard",
-                F.col("n_common").cast("double")
-                / (
-                    F.size("sh_a") + F.size("sh_b") - F.col("n_common")
-                ).cast("double"),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
-        return out.select("id_a", "id_b", "jaccard")
-    sa = bsigs.select(F.col("id").alias("id_a"), F.col("bsig").alias("bsig_a"))
-    sb = bsigs.select(F.col("id").alias("id_b"), F.col("bsig").alias("bsig_b"))
-    est = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "est_jaccard",
-            bbit_est_jaccard(
-                F.col("bsig_a"), F.col("bsig_b"), num_perm, bits
-            ),
-        )
-        .filter(F.col("est_jaccard") >= threshold)
-    )
-    return est.select("id_a", "id_b", "est_jaccard")
+        return _verify_exact(cand, df, id_col, text_col, n, threshold)
+    return _verify_estimate(cand, sigs, num_perm, bits, threshold, "est_jaccard")
 
 
 # ---------------------------------------------------------------------------
@@ -1779,9 +1582,8 @@ __all__ = [
     "ngram_jaccard_pairs",
     "minhash_signatures",
     "band_buckets",
+    "est_jaccard",
     "minhash_lsh_pairs",
-    "bbit_minhash_signatures",
-    "bbit_est_jaccard",
     "bbit_minhash_lsh_pairs",
     "containment_pairs",
     "simhash64",

@@ -27,8 +27,10 @@ Plan shape (the part that matters at scale):
 - the streaming form is this operator inside ``foreachBatch``:
   dedup the micro-batch against the index, append survivors.
 
-The banding math is identical to :func:`minhash_lsh_pairs`
-(``operators/dedup.py``), so recall follows the same
+Band keys and signature estimates come from the same
+``dedup.band_buckets`` / ``dedup.est_jaccard`` as
+:func:`minhash_lsh_pairs` (``operators/dedup.py``), at full width or
+b-bit alike, so recall follows the same
 ``1-(1-j^r)^b`` curve; index parameters are stored in a meta table and
 re-validated on every probe — a probe with different (n, num_perm,
 bands) would silently find nothing, so it raises instead.
@@ -42,12 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..utils import check_col, local_df, materialize, spread
-from .dedup import (
-    band_buckets,
-    bbit_band_buckets,
-    bbit_est_jaccard,
-    minhash_signatures,
-)
+from .dedup import band_buckets, est_jaccard, minhash_signatures
 
 #: index layout: <path>/{signatures,bands,meta} parquet directories.
 _SIGS, _BANDS, _META = "signatures", "bands", "meta"
@@ -57,18 +54,6 @@ _META_SCHEMA = "n int, num_perm int, bands int, bits int"
 #: into the corpus scan as an ``In()`` literal list; more pairs take a
 #: broadcast semi-join.
 ISIN_MAX_IDS = 4_000
-
-
-def _index_band_keys(
-    sigs: DataFrame, num_perm: int, bands: int, bits: int
-) -> DataFrame:
-    """Band keys for a signature frame (column ``signature``): lane-
-    extracted from packed words in b-bit mode, full slots otherwise."""
-    if bits:
-        return bbit_band_buckets(
-            sigs, num_perm, bands, bits, sig_col="signature"
-        )
-    return band_buckets(sigs, num_perm, bands)
 
 
 def build_minhash_index(
@@ -112,7 +97,7 @@ def build_minhash_index(
     )
     # band keys from the WRITTEN signatures (the kernel runs once); the
     # frame's own schema skips the parquet schema-inference job
-    _index_band_keys(
+    band_buckets(
         df.sparkSession.read.schema(sigs.schema).parquet(
             os.path.join(path, _SIGS)
         ),
@@ -148,11 +133,11 @@ def dedup_against_minhash_index(
     ``(survivors, matches)``.
 
     ``matches`` = (new_id, index_id, est_jaccard ≥ threshold) — the
-    signature-slot-agreement estimate, like ``verify=True`` pairs mode
-    (for a b-bit index — built with ``bits=`` — the collision-corrected
-    lane estimator ``dedup.bbit_est_jaccard`` instead; all index
-    parameters including ``bits`` come from the stored meta, so probes
-    are oblivious to the storage format).
+    signature-only ``dedup.est_jaccard``, like ``verify=True`` pairs
+    mode: slot agreement, or for a b-bit index (built with ``bits=``)
+    the collision-corrected lane estimator; all index parameters
+    including ``bits`` come from the stored meta, so probes are
+    oblivious to the storage format.
     ``survivors`` = batch rows with no index match (they are also
     near-dup'd against EACH OTHER via the same band keys — a batch with
     two copies of a new document keeps the smaller id).
@@ -200,20 +185,7 @@ def dedup_against_minhash_index(
             batch, id_col, text_col, n, num_perm, pack_bits=bits or None
         )
     )
-    bands_new = _index_band_keys(sigs_new, num_perm, bands, bits)
-
-    def _sig_est(sig_a, sig_b):
-        """Signature-only Jaccard estimate: slot-agreement fraction for
-        full-width signatures, the unbiased collision-corrected lane
-        estimator for packed b-bit ones."""
-        if bits:
-            return bbit_est_jaccard(sig_a, sig_b, num_perm, bits)
-        return F.size(
-            F.filter(
-                F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int")),
-                lambda v: v == 1,
-            )
-        ).cast("double") / F.lit(float(num_perm))
+    bands_new = band_buckets(sigs_new, num_perm, bands, bits)
 
     stored_bands = spark.read.parquet(os.path.join(path, _BANDS))
     # both the verify join and the candidate-id fetch below consume this
@@ -313,7 +285,9 @@ def dedup_against_minhash_index(
             )
             .withColumn(
                 "est_jaccard",
-                _sig_est(F.col("sig_new"), F.col("sig_idx")),
+                est_jaccard(
+                    F.col("sig_new"), F.col("sig_idx"), num_perm, bits
+                ),
             )
             .filter(F.col("est_jaccard") >= threshold)
             .select("new_id", "index_id", "est_jaccard")
@@ -337,7 +311,9 @@ def dedup_against_minhash_index(
             ),
             "id_b",
         )
-        .filter(_sig_est(F.col("sa"), F.col("sb")) >= threshold)
+        .filter(
+            est_jaccard(F.col("sa"), F.col("sb"), num_perm, bits) >= threshold
+        )
         .select(F.col("id_b").alias("dropped_id"))
     )
     dropped = (
@@ -364,7 +340,7 @@ def dedup_against_minhash_index(
         surv_sigs.hint("rebalance").write.mode("append").parquet(
             os.path.join(path, _SIGS)
         )
-        _index_band_keys(surv_sigs, num_perm, bands, bits).hint(
+        band_buckets(surv_sigs, num_perm, bands, bits).hint(
             "rebalance"
         ).write.mode("append").parquet(os.path.join(path, _BANDS))
     return survivors, est

@@ -100,11 +100,11 @@ def init_centroids(
     order; ties break on the id).  A bounded k-row collect."""
     check_col([id_col, vec_col], df)
     rows = (
-        df.filter(F.col(vec_col).isNotNull())
+        df.filter(F.col(sql_ident(vec_col)).isNotNull())
         .select(
             quantize_expr(vec_col, fp_bits).alias("__xq"),
-            F.md5(F.col(id_col).cast("string")).alias("__h"),
-            F.col(id_col).alias("__id"),
+            F.md5(F.col(sql_ident(id_col)).cast("string")).alias("__h"),
+            F.col(sql_ident(id_col)).alias("__id"),
         )
         .orderBy("__h", "__id")
         .limit(k)
@@ -139,7 +139,7 @@ def kmeans_fit(
     # on already-wide inputs
     src = materialize(
         spread(
-            df.select(F.col(vec_col).alias("__v"))
+            df.select(F.col(sql_ident(vec_col)).alias("__v"))
             .filter(F.col("__v").isNotNull())
         )
     )
@@ -252,12 +252,21 @@ def kmeans_assign(
     # (chunk × k × dim) int64 distance temporary bounded to ~16 MB,
     # matching kmeans_fit
     chunk_rows = max(1, 2_000_000 // max(k * dim, 1))
-    in_fields = list(df.schema.fields)
+    # positional names (``__v`` the vectors, ``c{j}`` the rest):
+    # mapInPandas cannot address a column named with a backtick; the
+    # output is renamed back below
+    names = df.columns
+    pos = df.select(
+        *[
+            F.col(sql_ident(c)).alias("__v" if c == vec_col else f"c{j}")
+            for j, c in enumerate(names)
+        ]
+    )
     out_schema = StructType(
-        in_fields
+        list(pos.schema.fields)
         + [
-            StructField(cluster_col, IntegerType(), True),
-            StructField(dist_col, LongType(), True),
+            StructField("__cl", IntegerType(), True),
+            StructField("__d2", LongType(), True),
         ]
     )
 
@@ -266,11 +275,11 @@ def kmeans_assign(
         for pdf in batches:
             pdf = pdf.copy()
             if not len(pdf):
-                pdf[cluster_col] = pd.Series([], dtype="Int32")
-                pdf[dist_col] = pd.Series([], dtype="Int64")
+                pdf["__cl"] = pd.Series([], dtype="Int32")
+                pdf["__d2"] = pd.Series([], dtype="Int64")
                 yield pdf
                 continue
-            vecs = pdf[vec_col]
+            vecs = pdf["__v"]
             # reject null / wrong-length / non-finite vectors: a NaN or
             # inf element would make floor(x*scale).astype(int64)
             # undefined (typically INT64_MIN) where the literal HOF path
@@ -296,16 +305,18 @@ def kmeans_assign(
                     bd[lo : lo + len(xb)] = d2.min(axis=1)
                 cl[ok] = bi
                 d2o[ok] = bd
-            pdf[cluster_col] = pd.array(
+            pdf["__cl"] = pd.array(
                 [int(c) if c >= 0 else None for c in cl], dtype="Int32"
             )
-            pdf[dist_col] = pd.array(
+            pdf["__d2"] = pd.array(
                 [int(d) if c >= 0 else None for c, d in zip(cl, d2o)],
                 dtype="Int64",
             )
             yield pdf
 
-    return df.mapInPandas(assign, out_schema)
+    return pos.mapInPandas(assign, out_schema).toDF(
+        *names, cluster_col, dist_col
+    )
 
 
 def kmeans(

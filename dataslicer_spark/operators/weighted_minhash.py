@@ -36,9 +36,11 @@ the same reason the set-dedup family shingles first.
 
 Scale design: signatures are a map-only Arrow kernel over the raw text
 (shingle counting inside the kernel — the corpus never explodes into a
-shingle-level shuffle); banding reuses :func:`dedup.band_buckets`
-(bands of r samples xxhash'd together); exact verification explodes
-shingles ONLY for candidate docs (semi-join first).  Same
+shingle-level shuffle); candidates and the estimate come from the
+shared MinHash LSH pipeline in ``dedup.py`` (``band_buckets`` → band
+self-join → ``est_jaccard``; bands of r samples xxhash'd together);
+exact verification explodes shingles ONLY for candidate docs
+(semi-join first).  Same
 candidates-then-verify shape as every other near-dup kernel here.
 
 Reference scope note: the reference has no weighted dedup of any kind
@@ -57,7 +59,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
 from ..functions.text import word_shingles
-from ..utils import check_col, spread
+from ..utils import check_col, materialize, spread
+from .dedup import (
+    _band_pairs,
+    _check_lsh_args,
+    _verify_estimate,
+    band_buckets,
+)
 
 _GOLDEN = np.uint64(0x9E3779B97F4A7C15)
 
@@ -257,15 +265,7 @@ def weighted_minhash_pairs(
     - ``verify=False``   → raw candidate pairs.
     """
     check_col([id_col, text_col], df)
-    if num_hashes % bands != 0:
-        raise ValueError("num_hashes must be divisible by bands")
-    if verify not in (True, False, "exact"):
-        raise ValueError(
-            f"verify must be True, False or 'exact', got {verify!r}"
-        )
-    from ..utils import materialize
-    from .dedup import band_buckets
-
+    _check_lsh_args(num_hashes, bands, verify)
     # sigs is double-consumed (both sides of the band-bucket self-join;
     # the estimate branch joins it twice more): MATERIALIZE, don't just
     # cache — an unmaterialized cache inside one action can still run
@@ -274,49 +274,23 @@ def weighted_minhash_pairs(
     sigs = materialize(
         weighted_minhash_signatures(df, id_col, text_col, n, num_hashes)
     )
-    bucketed = band_buckets(sigs, num_hashes, bands)
-    a = bucketed.select(F.col("id").alias("id_a"), "band", "bucket")
-    b = bucketed.select(F.col("id").alias("id_b"), "band", "bucket")
-    cand = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates()
-    )
+    cand = _band_pairs(band_buckets(sigs, num_hashes, bands))
     if not verify:
         return cand
-    if verify == "exact":
-        # the exact branch consumes cand TWICE (pair relation + the
-        # candidate-id semi-join feeding the doc maps) — materialize the
-        # pair-sized frame so banding doesn't run twice.  Then spread:
-        # the banding join's output is byte-tiny, so AQE coalesces it to
-        # ONE partition, and the checkpointed width is inherited by the
-        # final map_zip_with verify stage (r11 profile: a 2.2 s one-task
-        # save stage).  After materialize the plan is scan-rooted, so
-        # the guarded spread applies — and no-ops at scale where the
-        # pair table is already wide.
-        cand = spread(materialize(cand))
     if verify is True:
-        sa = sigs.select(F.col("id").alias("id_a"),
-                         F.col("signature").alias("sig_a"))
-        sb = sigs.select(F.col("id").alias("id_b"),
-                         F.col("signature").alias("sig_b"))
-        est = (
-            cand.join(sa, "id_a")
-            .join(sb, "id_b")
-            .withColumn(
-                "est_wjaccard",
-                F.size(
-                    F.filter(
-                        F.zip_with("sig_a", "sig_b",
-                                   lambda x, y: (x == y).cast("int")),
-                        lambda v: v == 1,
-                    )
-                ).cast("double") / F.lit(float(num_hashes)),
-            )
-            .filter(F.col("est_wjaccard") >= threshold)
+        return _verify_estimate(
+            cand, sigs, num_hashes, 0, threshold, "est_wjaccard"
         )
-        return est.select("id_a", "id_b", "est_wjaccard")
+    # the exact branch consumes cand TWICE (pair relation + the
+    # candidate-id semi-join feeding the doc maps) — materialize the
+    # pair-sized frame so banding doesn't run twice.  Then spread: the
+    # banding join's output is byte-tiny, so AQE coalesces it to ONE
+    # partition, and the checkpointed width is inherited by the final
+    # map_zip_with verify stage (r11 profile: a 2.2 s one-task save
+    # stage).  After materialize the plan is scan-rooted, so the guarded
+    # spread applies — and no-ops at scale where the pair table is
+    # already wide.
+    cand = spread(materialize(cand))
     # Exact weighted Jaccard for candidates only — per-doc
     # (shingle → count) MAPS merged pair-locally with map_zip_with:
     # the pair relation carries two doc-sized maps per row instead of a

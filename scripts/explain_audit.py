@@ -240,6 +240,10 @@ CHECKS: list[tuple[str, str, list[str], list[str]]] = [
      "sort-merge fanout",
      ["FlatMapGroupsInPandas"],
      ["CartesianProduct", "NestedLoop", "SortMergeJoin"]),
+    ("dd_minhash_lsh", "MinHash LSH: band buckets equi-join (hash) + "
+     "exact verify on candidate ids only — no cartesian, no nested loop",
+     ["HashAggregate"],
+     ["CartesianProduct", "NestedLoop"]),
     ("dd_minhash_bbit", "b-bit MinHash: packed-lane band buckets "
      "equi-join (hash) + exact verify on candidate ids only — no "
      "cartesian, no nested loop",

@@ -298,6 +298,64 @@ def test_bbit_incremental_append_loop(spark, docs, tmp_path):
     assert all(0.0 <= r.est_jaccard <= 1.0 for r in m2.collect())
 
 
+#: (id, band, bucket) rows of ``band_buckets`` (num_perm=16, bands=8)
+#: over the three ``_GOLDEN_DOCS``: the band table an index persists.  A
+#: change here means a previously built index no longer probes the same.
+_GOLDEN_DOCS = [
+    (1, "the quick brown fox jumps over the lazy dog"),
+    (2, "the quick brown fox jumps over the lazy cat"),
+    (3, "a completely different sentence about spark lsh banding"),
+]
+_GOLDEN_BANDS = {
+    0: [
+        (1, 0, -2937377225899219631), (1, 1, -7867843827768011985),
+        (1, 2, -1553594368628081360), (1, 3, -5196992517596730681),
+        (1, 4, -8079165472822464668), (1, 5, -9160826982984270263),
+        (1, 6, -8883027927912547379), (1, 7, -570966875920349776),
+        (2, 0, -2271626947751394909), (2, 1, -6424202524863601955),
+        (2, 2, -4260343580010160688), (2, 3, -3160832885825631377),
+        (2, 4, 3866464596794308382), (2, 5, -9160826982984270263),
+        (2, 6, -8883027927912547379), (2, 7, -570966875920349776),
+        (3, 0, -1640224353940770960), (3, 1, 2015135649422331808),
+        (3, 2, 1942618216482792327), (3, 3, 2306075824936203031),
+        (3, 4, -8902996002462550928), (3, 5, 7866094738640107517),
+        (3, 6, -8334371109565007208), (3, 7, -9118216974958649546),
+    ],
+    16: [
+        (1, 0, -6116936903345505214), (1, 1, 3306322166591391374),
+        (1, 2, 8090148199007036565), (1, 3, 5576983737538382524),
+        (1, 4, -7041306635741909941), (1, 5, -177405820344756782),
+        (1, 6, 2423621118534645858), (1, 7, 3815820417800225262),
+        (2, 0, -2693094510326126424), (2, 1, -5416611864191050475),
+        (2, 2, 4163868160896152950), (2, 3, 4453741664314737565),
+        (2, 4, -8786897810005090883), (2, 5, -177405820344756782),
+        (2, 6, 2423621118534645858), (2, 7, 3815820417800225262),
+        (3, 0, -8720733585617334482), (3, 1, -5010766174656358137),
+        (3, 2, -8827629285516107025), (3, 3, -1358844472620481839),
+        (3, 4, 3475268456409892875), (3, 5, -3630152789115645767),
+        (3, 6, 3540255281548358431), (3, 7, -6335237886859167773),
+    ],
+}
+
+
+@pytest.mark.parametrize("bits", [0, 16])
+def test_band_buckets_on_disk_format_is_pinned(spark, bits):
+    """The persisted band keys are a storage format: pinned row for row
+    at full width and b-bit, so an index built by an earlier release
+    still probes identically."""
+    from dataslicer_spark.operators.dedup import (
+        band_buckets,
+        minhash_signatures,
+    )
+
+    df = spark.createDataFrame(_GOLDEN_DOCS, "doc_id long, text string")
+    sigs = minhash_signatures(
+        df, "doc_id", num_perm=16, pack_bits=bits or None
+    )
+    got = sorted(tuple(r) for r in band_buckets(sigs, 16, 8, bits).collect())
+    assert got == _GOLDEN_BANDS[bits]
+
+
 def test_bbit_build_rejects_bad_bits(spark, docs, tmp_path):
     with pytest.raises(ValueError, match="divide 64"):
         build_minhash_index(

@@ -280,19 +280,28 @@ def test_semantic_dedup_auto_k_derivation(spark):
 
 
 def test_kmeans_assign_quotes_column_names(vecs):
-    """The literal-centroid argmin is SQL text: an odd vector column name
-    assigns exactly like a plain one."""
+    """Odd column names fit and assign exactly like plain ones: the
+    literal-centroid argmin is SQL text, ``init_centroids``/``kmeans_fit``
+    quote their columns, and the Arrow kernel (k·d > 512) runs over
+    positional names."""
     _, df = vecs
-    cents = kmeans_fit(df, "vec_id", "embedding", k=4, n_iter=1)
-    want = sorted(
-        tuple(r)
-        for r in kmeans_assign(df, cents, "embedding")
-        .select("vec_id", "cluster", "d2").collect()
-    )
-    for name in ("a b", "x-y", "q`t"):
-        got = sorted(
-            tuple(r)
-            for r in kmeans_assign(df.toDF("vec_id", name), cents, name)
-            .select("vec_id", "cluster", "d2").collect()
+
+    def assigned(frame, cents, vec):
+        # (id, cluster, d2) by position: the names are the point here
+        return sorted(
+            (r[0], r[2], r[3])
+            for r in kmeans_assign(frame, cents, vec).collect()
         )
-        assert got == want
+
+    cents = kmeans_fit(df, "vec_id", "embedding", k=4, n_iter=1)
+    # k=40, d=16 -> k·d = 640 > 512 -> Arrow kernel path
+    wide = kmeans_fit(df, "vec_id", "embedding", k=40, n_iter=1)
+    want = assigned(df, cents, "embedding")
+    want_wide = assigned(df, wide, "embedding")
+    for name in ("a b", "x-y", "q`t"):
+        odd = df.toDF(f"{name} id", name)
+        assert assigned(odd, cents, name) == want
+        assert assigned(odd, wide, name) == want_wide
+        assert kmeans_fit(odd, f"{name} id", name, k=4, n_iter=1) == cents
+        out = kmeans_assign(odd, wide, name)
+        assert out.columns == [f"{name} id", name, "cluster", "d2"]

@@ -222,23 +222,21 @@ def planted_corpus(spark, docs):
 def test_bbit_minhash_pack_roundtrip(spark, docs):
     """Packed b-bit lanes must equal the full signatures' low bits —
     lane i of word i//lanes == signature[i] & mask, every doc."""
-    from dataslicer_spark.operators.dedup import (
-        bbit_minhash_signatures,
-        minhash_signatures,
-    )
+    from dataslicer_spark.operators.dedup import minhash_signatures
 
     sample = docs.limit(10)
     full = minhash_signatures(sample, "doc_id", num_perm=16).toPandas()
     for bits in (4, 8, 16):
-        packed = bbit_minhash_signatures(
-            sample, "doc_id", num_perm=16, bits=bits
+        packed = minhash_signatures(
+            sample, "doc_id", num_perm=16, pack_bits=bits
         ).toPandas()
         lanes, mask = 64 // bits, (1 << bits) - 1
         fm = {r.id: list(r.signature) for r in full.itertuples()}
         for r in packed.itertuples():
             sig = fm[r.id]
             for i in range(16):
-                lane = (int(r.bsig[i // lanes]) >> ((i % lanes) * bits)) & mask
+                word = int(r.signature[i // lanes])
+                lane = (word >> ((i % lanes) * bits)) & mask
                 assert lane == (int(sig[i]) & mask), (bits, r.id, i)
 
 
@@ -313,12 +311,14 @@ def test_bbit_estimator_tracks_exact_jaccard(spark, planted_corpus):
 def test_bbit_parameter_validation(spark):
     from dataslicer_spark.operators.dedup import (
         bbit_minhash_lsh_pairs,
-        bbit_minhash_signatures,
+        minhash_signatures,
     )
 
     df = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
     with pytest.raises(ValueError, match="bits"):
-        bbit_minhash_signatures(df, "doc_id", bits=7)
+        minhash_signatures(df, "doc_id", pack_bits=7)
+    with pytest.raises(ValueError, match="bits"):
+        bbit_minhash_lsh_pairs(df, "doc_id", bits=7)
     with pytest.raises(ValueError, match="divisible"):
         bbit_minhash_lsh_pairs(df, "doc_id", num_perm=64, bands=7)
     with pytest.raises(ValueError, match="verify"):
@@ -733,11 +733,11 @@ def test_containment_catches_doc_in_doc(spark):
     assert jac.count() == 0
 
 
-def test_containment_prefix_path_matches_direct(docs):
-    """The asymmetric SSJoin prefix plan (inner-side rare-first prefix ⋈
-    full outer index, positional + length candidate filters) is lossless
-    vs the direct posting join at every threshold.  Corpus includes
-    planted doc-in-doc rows so qualifying pairs actually exist."""
+def test_containment_matches_python_reference(spark, docs):
+    """The direct inverted-index plan equals a pure-Python set-containment
+    reference — pairs, counts, sizes and ratios — at every threshold.
+    Corpus includes planted doc-in-doc rows (each doc's first 12 tokens)
+    so qualifying pairs actually exist."""
     from dataslicer_spark.operators.dedup import containment_pairs
 
     sample = docs.limit(40)
@@ -748,21 +748,33 @@ def test_containment_prefix_path_matches_direct(docs):
             F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 12),
         ).alias("text"),
     )
-    corpus = sample.select("doc_id", "text").unionByName(planted)
+    rows = sample.select("doc_id", "text").unionByName(planted).collect()
+    corpus = spark.createDataFrame(rows, "doc_id long, text string")
+    shingles = {}
+    for r in rows:
+        toks = (r.text or "").lower().split()
+        sh = {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
+        if sh:
+            shingles[r.doc_id] = sh
+    ids = sorted(shingles)
     for t in (0.5, 0.8, 0.9, 0.95):
-        a = (
-            containment_pairs(corpus, "doc_id", threshold=t, use_prefix=False)
-            .toPandas().sort_values(["inner_id", "outer_id"])
-            .reset_index(drop=True)
-        )
-        b = (
-            containment_pairs(corpus, "doc_id", threshold=t, use_prefix=True)
-            .toPandas().sort_values(["inner_id", "outer_id"])
-            .reset_index(drop=True)
-        )
-        assert len(a) > 0, f"fixture produced no pairs at t={t}"
-        assert a.equals(b), f"containment prefix/direct divergence at t={t}"
-    corpus.sparkSession.catalog.clearCache()
+        want = set()
+        for i, a in enumerate(ids):
+            for b in ids[i + 1 :]:
+                common = len(shingles[a] & shingles[b])
+                # inner = the smaller set, ties to the smaller id
+                (ni, inner), (no, outer) = sorted(
+                    [(len(shingles[a]), a), (len(shingles[b]), b)]
+                )
+                if common and common / ni >= t:
+                    want.add((inner, outer, common, ni, no, common / ni))
+        got = {
+            tuple(r)
+            for r in containment_pairs(corpus, "doc_id", threshold=t)
+            .collect()
+        }
+        assert len(want) > 0, f"fixture produced no pairs at t={t}"
+        assert got == want, f"containment diverges from Python at t={t}"
 
 
 def test_containment_tie_orientation_and_threshold(spark):
