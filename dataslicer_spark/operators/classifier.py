@@ -14,8 +14,9 @@ the n-epoch training run replays bit for bit in the DuckDB oracle
 Scale design mirrors every distributed SGD/L-BFGS implementation:
 
 - weights reach the executors each epoch as literal expressions for
-  ≤ 16 features (scan → filter → partial aggregate, pure JVM
-  whole-stage codegen, no Python) and inside an Arrow kernel beyond;
+  ≤ ``EXPR_MAX_FEATURES`` features (scan → filter → partial aggregate,
+  pure JVM whole-stage codegen, no Python) and inside an Arrow kernel
+  beyond — the fit picks the path from the feature count;
 - the wire carries one (d+1)-vector per partition per epoch, never
   per-row gradients: the map-side partial aggregate, or on the Arrow
   path one binary row per partition that ``utils.sum_partials`` sums
@@ -26,7 +27,7 @@ Scale design mirrors every distributed SGD/L-BFGS implementation:
 - prediction is a map-only literal-weights projection.
 
 The wide expressions — the weighted sum, the fit's null filter and the
-expression engine's gradient sums — are built as one SQL string each
+expression path's gradient sums — are built as one SQL string each
 (``F.expr`` / ``filter(str)`` / ``selectExpr``), never as a Python
 ``Column`` tree: every ``F.lit``/``F.col``/operator node is a Py4J
 round trip, and a 64-feature dot product or null filter built node by
@@ -47,6 +48,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..utils import check_col, sql_ident, sum_partials
+
+#: Widest feature set the fit runs as JVM aggregate expressions; wider
+#: ones run the Arrow kernel.  A (d+1)-aggregate expression is compiled
+#: afresh EVERY epoch (new weight literals), which dominated a 64-feature
+#: fit at ~3 s/epoch vs ~0.3 s for the kernel.
+EXPR_MAX_FEATURES = 16
 
 #: (name, builder) — integer surface features computable identically in
 #: Spark and ANSI SQL (simple character classes only: Java regex and RE2
@@ -144,7 +151,6 @@ def batch_perceptron_fit(
     label_col: str,
     n_epochs: int = 3,
     lr: int | list[int] = 1,
-    engine: str = "auto",
     init_weights: list[int] | None = None,
 ) -> list[int]:
     """Train; returns ``[w_bias, w_f1, …]`` ints.  ``init_weights``
@@ -154,22 +160,19 @@ def batch_perceptron_fit(
     ``label_col`` must hold ±1.  Rows with any NULL feature or label are
     ignored (mirrored by the oracle's WHERE).  Every epoch re-reads
     ``df``: hand it a materialized frame (``utils.materialize``) when
-    the source is expensive to re-scan — on one, the 'arrow' engine
-    runs exactly one job per epoch.
+    the source is expensive to re-scan — on one, the Arrow path runs
+    exactly one job per epoch.
 
     ``lr`` may be a per-epoch integer schedule (len == n_epochs): a
     decaying schedule (e.g. ``[16, 8, 4, 2, 1, 1]``) damps the
     batch-update zigzag the same way a decaying step size does in batch
     gradient descent, while every update stays integer-exact.
 
-    ``engine``: the epoch gradient runs either as JVM aggregate
-    expressions ('expr' — d+1 conditional sums, whole-stage codegen) or
-    as an Arrow kernel computing per-partition partial gradients in one
-    int64 matmul ('arrow').  Identical integer math, identical results.
-    'auto' picks 'expr' for ≤16 features and 'arrow' beyond — wide
-    feature sets (hashed BoW) otherwise pay a fresh compile of a
-    (d+1)-aggregate expression EVERY epoch (new weight literals), which
-    dominated a 64-feature fit at ~3 s/epoch vs ~0.3 s for the kernel.
+    The epoch gradient runs as JVM aggregate expressions (d+1
+    conditional sums, whole-stage codegen) for at most
+    ``EXPR_MAX_FEATURES`` features, and beyond that as an Arrow kernel
+    computing per-partition partial gradients in one int64 matmul.
+    Identical integer math, identical results.
     """
     check_col([label_col, *feature_cols], df)
     lrs = [int(lr)] * n_epochs if isinstance(lr, int) else [int(v) for v in lr]
@@ -177,12 +180,6 @@ def batch_perceptron_fit(
         raise ValueError(
             f"lr schedule has {len(lrs)} entries for {n_epochs} epochs"
         )
-    if engine not in ("auto", "expr", "arrow"):
-        raise ValueError(f"unknown engine {engine!r}")
-    use_arrow = (
-        engine == "arrow"
-        or (engine == "auto" and len(feature_cols) > 16)
-    )
     clean = df.filter(
         " AND ".join(
             f"{sql_ident(c)} IS NOT NULL" for c in [label_col, *feature_cols]
@@ -197,7 +194,7 @@ def batch_perceptron_fit(
                 f"{1 + len(feature_cols)} (bias + features)"
             )
         w = [int(v) for v in init_weights]
-    if use_arrow:
+    if len(feature_cols) > EXPR_MAX_FEATURES:
         return _fit_arrow(clean, feature_cols, label_col, lrs, w)
     y = sql_ident(label_col)
     for step in lrs:

@@ -28,13 +28,11 @@ MR-DBSCAN / RDD-DBSCAN decomposition):
    group's label, so a core point spanning cells yields equivalence edges
    between local labels.
 5. **Merge** over the local-cluster graph → global labels.  The cluster
-   graph is orders of magnitude smaller than the point set.  Two paths,
-   selected by ``merge_mode``: a driver union-find (fast for the common
-   case of ≤ ~10⁵ local clusters) and a DataFrame-only connected
-   components (min-label propagation + pointer jumping, O(log diameter)
-   join rounds) for when the local-cluster count itself is cluster-scale;
-   ``merge_mode='auto'`` probes with a bounded ``limit()`` collect so the
-   driver never materializes more than ``driver_merge_max_sets`` rows.
+   graph is orders of magnitude smaller than the point set.  A bounded
+   ``limit()`` probe collects at most ``DRIVER_MERGE_MAX_SETS`` key sets
+   into :func:`..graph.union_find` (the common case); past the bound the
+   merge runs :func:`..graph.connected_components` over the key graph,
+   so the driver never holds more than the bound.
 
 Scale notes: both passes shuffle on cell id only; the per-cell kernel is
 O(n_cell²) vectorized numpy — cell size equals eps, so density, not data
@@ -59,6 +57,17 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..utils import check_col, grouped_map_in_pandas, local_df, materialize
+from .graph import connected_components, union_find
+
+#: Grid cell size in units of eps: larger cells mean fewer, bigger local
+#: groups — less per-group (Arrow) overhead for sparse data, more
+#: O(n_cell²) work for dense data.  Correctness is unaffected (cells ≥
+#: eps keep the 3×3 neighborhood complete).
+CELL_FACTOR = 4.0
+#: Driver bound of the label merge, in distinct core key sets (≤ the
+#: local-cluster count): up to this many are merged in a driver
+#: union-find, beyond it by distributed connected components.
+DRIVER_MERGE_MAX_SETS = 100_000
 
 
 def _project(df: DataFrame, x_col: str, y_col: str, coord: str, eps: float):
@@ -144,11 +153,9 @@ def _merge_map_distributed(key_sets_df: DataFrame, max_iter: int = 50) -> DataFr
     per-core-point label-key set (sorted).  Sets of size >1 are the
     equivalence edges; connectivity of {(keys[0], k) for k in keys[1:]}
     equals connectivity of the full clique per set.  Components come
-    from :func:`..graph.connected_components` (min-label propagation +
-    pointer jumping, ``mode='distributed'`` — this path is chosen
-    precisely because the graph exceeded the driver budget, so no inner
-    re-probe); singleton keys (in no multi-cell set) are their own
-    representative via the left join.  Final dense ids come from
+    from :func:`..graph.connected_components`, which picks its own path
+    from the edge count; singleton keys (in no multi-cell set) are their
+    own representative via the left join.  Final dense ids come from
     :func:`..utils.dense_ids` (range-repartition + per-partition
     row_number + cumulative offsets) — NOT a single-partition global
     window, so id assignment scales with component count.  Ids equal the
@@ -156,15 +163,11 @@ def _merge_map_distributed(key_sets_df: DataFrame, max_iter: int = 50) -> DataFr
     smallest key; ASCII keys, so Python and UTF8-binary orderings
     agree), identical to the union-find path's labels.
     """
-    from .graph import connected_components
-
     pairs = key_sets_df.filter(F.size("keys") > 1).select(
         F.element_at("keys", 1).alias("src"),
         F.explode(F.slice("keys", 2, F.size("keys") - 1)).alias("dst"),
     )
-    cc = connected_components(
-        pairs, src="src", dst="dst", max_iter=max_iter, mode="distributed"
-    )
+    cc = connected_components(pairs, src="src", dst="dst", max_iter=max_iter)
     all_keys = key_sets_df.select(F.explode("keys").alias("node")).distinct()
     labels = all_keys.join(cc, "node", "left").select(
         "node", F.coalesce(F.col("rep"), F.col("node")).alias("rep")
@@ -187,9 +190,6 @@ def dbscan(
     coord: str = "sky",
     out_col: str = "clusterID",
     purge_noise: bool = False,
-    cell_factor: float = 4.0,
-    merge_mode: str = "auto",
-    driver_merge_max_sets: int = 100_000,
 ) -> DataFrame:
     """Distributed DBSCAN; adds ``out_col`` (long; −1 = noise).
 
@@ -202,36 +202,19 @@ def dbscan(
 
     ``id_col`` must be unique per row.  Labels are deterministic: global
     cluster ids are dense ranks of the lexicographically smallest
-    (cell, local-label) key in each merged component.
-
-    ``cell_factor`` scales the grid cell above eps: larger cells mean
-    fewer, bigger local groups — less per-group (Arrow) overhead for
-    sparse data, more O(n_cell²) work for dense data.  Correctness is
-    unaffected (cells ≥ eps keep the 3×3 neighborhood complete).
-
-    ``merge_mode``: how local-cluster labels are merged globally.
-    ``'driver'`` collects the distinct core key-sets into a driver
-    union-find (one action, rows ≤ local-cluster count); ``'distributed'``
-    runs iterative-join connected components with no unbounded collect;
-    ``'auto'`` (default) collects at most ``driver_merge_max_sets + 1``
-    rows via ``limit()`` and falls back to the distributed path when the
-    cap is exceeded.  Both paths produce identical labels (component
-    representative = lexicographically smallest local key; ASCII keys, so
+    (cell, local-label) key in each merged component; both merge paths
+    (module docstring, step 5) give identical labels (ASCII keys, so
     Python and UTF8-binary string orderings agree).
     """
-    if merge_mode not in ("auto", "driver", "distributed"):
-        raise ValueError(
-            f"merge_mode must be 'auto', 'driver' or 'distributed', got {merge_mode!r}"
-        )
     check_col([id_col, x_col, y_col], df)
     pts, eeps, ndim = _project(df, x_col, y_col, coord, eps)
     if coord == "sky":
         pts = pts.select(id_col, x_col, y_col, "__p0", "__p1", "__p2")
-        cell_deg = (eps / 3600.0) * cell_factor
+        cell_deg = (eps / 3600.0) * CELL_FACTOR
         cells = _explode_sky_cells(pts, x_col, y_col, cell_deg).drop(x_col, y_col)
     else:
         pts = pts.select(id_col, "__p0", "__p1")
-        cells = _explode_planar_cells(pts, eeps * cell_factor)
+        cells = _explode_planar_cells(pts, eeps * CELL_FACTOR)
     # Drop cells with no home points: they yield no pass-1 counts, and every
     # core-core merge edge already appears in each endpoint's home group —
     # for sparse data this prunes ~8/9 of the groups.
@@ -428,65 +411,28 @@ def dbscan(
         .select("keys")
         .distinct()
     )
-    key_sets = None
-    if merge_mode == "driver":
-        key_sets = key_sets_df.collect()
-    elif merge_mode == "auto":
-        # Materialize the (small) key-set frame ONCE before the bounded
-        # probe: ``limit().collect()`` on an unmaterialized plan runs
-        # Spark's incremental take (1 → 4 → 16 → all final-stage
-        # partitions), and under AQE each escalation wave replans and
-        # re-executes the aggregation above the cache — measured +18 s on
-        # the sf0.1 flagship (25.5 s → 7.5 s once removed).  After the
-        # checkpoint the probe and any follow-up read scan stored blocks;
-        # the distributed fallback also stops double-reading the
-        # groupBy/distinct (it consumes ``keys`` twice).  utils.materialize
-        # upgrades to a reliable checkpoint() when the session has a
-        # checkpoint dir (executor loss on a real cluster can't recompute
-        # localCheckpoint blocks); local mode keeps localCheckpoint.
-        key_sets_df = materialize(key_sets_df)
-        probe = key_sets_df.limit(driver_merge_max_sets + 1).collect()
-        if len(probe) <= driver_merge_max_sets:
-            key_sets = probe
-
-    if key_sets is not None:
+    # Materialize the (small) key-set frame ONCE before the bounded
+    # probe: ``limit().collect()`` on an unmaterialized plan runs Spark's
+    # incremental take (1 → 4 → 16 → all final-stage partitions), and
+    # under AQE each escalation wave replans and re-executes the
+    # aggregation above the cache — measured +18 s on the sf0.1 flagship
+    # (25.5 s → 7.5 s once removed).  After the checkpoint the probe and
+    # any follow-up read scan stored blocks; the distributed fallback also
+    # stops double-reading the groupBy/distinct (it consumes ``keys``
+    # twice).
+    key_sets_df = materialize(key_sets_df)
+    probe = key_sets_df.limit(DRIVER_MERGE_MAX_SETS + 1).collect()
+    if len(probe) <= DRIVER_MERGE_MAX_SETS:
         # driver union-find: one bounded action over the local-cluster graph
-        parent: dict[str, str] = {}
-
-        def ufind(k: str) -> str:
-            root = k
-            while parent.setdefault(root, root) != root:
-                root = parent[root]
-            while parent[k] != root:
-                parent[k], k = root, parent[k]
-            return root
-
-        all_keys_set: set[str] = set()
-        for row in key_sets:
-            keys = row.keys
-            all_keys_set.update(keys)
-            if len(keys) < 2:
-                continue
-            r0 = ufind(keys[0])
-            for k in keys[1:]:
-                r = ufind(k)
-                if r != r0:
-                    a, b = sorted((r, r0))
-                    parent[b] = a
-                    r0 = a
-
-        all_keys = sorted(all_keys_set)
-        rep = {k: ufind(k) for k in all_keys}
-        reps_sorted = sorted(set(rep.values()))
-        global_id = {r: i for i, r in enumerate(reps_sorted)}
-        mapping = [(k, global_id[rep[k]]) for k in all_keys]
-        spark = df.sparkSession
+        rep = union_find(r.keys for r in probe)
+        global_id = {r: i for i, r in enumerate(sorted(set(rep.values())))}
+        mapping = [(k, global_id[r]) for k, r in rep.items()]
         map_df = F.broadcast(
-            local_df(spark, mapping, "label_key string, __gcid long")
+            local_df(df.sparkSession, mapping, "label_key string, __gcid long")
         )
     else:
-        # iterative-join connected components; the mapping can be large, so
-        # the join below is a plain shuffle join (no broadcast)
+        # the mapping can be large, so the join below is a plain shuffle
+        # join (no broadcast)
         map_df = _merge_map_distributed(key_sets_df)
 
     home_labels = (

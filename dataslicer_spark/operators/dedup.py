@@ -23,6 +23,9 @@ Scale design notes:
   and estimates are computed by the same code at every width.
 - All verification math is exact integer/fixed-point arithmetic, so
   results are reproducible across partitionings.
+- Operators pick their physical plan from the input, with the bounds as
+  module constants: ``PREFIX_MIN_THRESHOLD`` selects the n-gram Jaccard
+  plan, ``MATRIX_MAX_ROWS`` the broadcast-matrix cosine scoring.
 
 Algorithms are the classic public constructions: MinHash resemblance
 sketches (Broder, "On the resemblance and containment of documents",
@@ -35,7 +38,6 @@ WWW 2007).
 from __future__ import annotations
 
 import logging
-from typing import Sequence
 
 import numpy as np
 import pandas as pd
@@ -44,10 +46,21 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
-from ..functions.text import normalized_fingerprint, tokens_ws, word_shingles
+from ..functions.text import normalized_fingerprint, word_shingles
 from ..utils import check_col, local_df, materialize, spread
 
 _LOG = logging.getLogger(__name__)
+
+#: ``ngram_jaccard_pairs`` runs the prefix-filtered plan at thresholds
+#: from here up and the direct posting join below.  A/B-measured on the
+#: sf0.1 corpus (salted 4×): prefix wins 7× at t=0.8 (tiny prefixes, few
+#: candidates) and loses at t=0.5 (prefix ≈ half the doc → candidate
+#: verify dominates); 0.7 is where the prefix drops below ~1/3 of each doc.
+PREFIX_MIN_THRESHOLD = 0.7
+#: Largest corpus whose vectors are collected into one numpy matrix and
+#: broadcast for cosine scoring (n·dim·8 bytes — 200k×1k ≈ 1.6 GB);
+#: larger corpora, and non-integral ids, attach vectors by join.
+MATRIX_MAX_ROWS = 200_000
 
 
 # ---------------------------------------------------------------------------
@@ -93,13 +106,12 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_posting: int | None = 10_000,
-    use_prefix: bool | None = None,
 ) -> DataFrame:
     """Document pairs with n-gram-shingle Jaccard ≥ threshold.
 
     Two lossless physical plans, identical output, selected by how much
-    structural pruning the threshold allows (``use_prefix=None`` =
-    auto: prefix filtering at ``threshold ≥ 0.7``, direct below):
+    structural pruning the threshold allows: prefix filtering at
+    ``threshold ≥ PREFIX_MIN_THRESHOLD``, direct below.
 
     **Direct** (low thresholds): distinct shingles per doc → inverted
     index → self-join within posting lists → count common shingles.  At
@@ -126,12 +138,6 @@ def ngram_jaccard_pairs(
     the filtered sets (documented approximation, both plans identical).
     """
     check_col([id_col, text_col], df)
-    if use_prefix is None:
-        # A/B-measured on the sf0.1 corpus (salted 4×): prefix wins 7×
-        # at t=0.8 (tiny prefixes, few candidates) and loses at t=0.5
-        # (prefix ≈ half the doc → candidate verify dominates); 0.7 is
-        # where the prefix drops below ~1/3 of each doc
-        use_prefix = threshold >= 0.7
     # spread before the shingle explode (guide §2.5) — see containment
     # twin below; no-op on already-wide scans
     sh = spread(
@@ -141,7 +147,7 @@ def ngram_jaccard_pairs(
         F.explode(F.array_distinct(word_shingles(F.col("__txt"), n))).alias("s"),
     )
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    if not use_prefix:
+    if threshold < PREFIX_MIN_THRESHOLD:
         inv = sh
         if max_posting is not None:
             posting = sh.groupBy("s").agg(F.count(F.lit(1)).alias("__df"))
@@ -1010,9 +1016,8 @@ def _matrix_cosine_attach(
     The arithmetic is bit-identical to :func:`fp_dot` /
     :func:`_fp_cosine_udf` (floor(x·y·2^30) int64 sums, NULL on zero
     norms), so swapping the join-attach plan for this one cannot change
-    results.  Valid while the matrix fits in executor memory
-    (n·dim·8 bytes — 200k×1k ≈ 1.6 GB); callers gate on
-    ``max_matrix_rows`` and integral ids.
+    results.  Valid while the matrix fits in executor memory; callers
+    gate on ``MATRIX_MAX_ROWS`` and integral ids.
     """
     rows = df.select(id_col, vec_col).collect()
     ids = np.array([r[0] for r in rows], dtype=np.int64)
@@ -1137,8 +1142,6 @@ def embedding_near_dup(
     seed: int = 42,
     dim: int | None = None,
     exact: bool = False,
-    max_matrix_rows: int = 200_000,
-    log_candidates: bool = False,
 ) -> DataFrame:
     """Pairs with cosine similarity ≥ threshold.
 
@@ -1151,14 +1154,11 @@ def embedding_near_dup(
     the corpus grows; pass an explicit k to pin buckets (e.g. for an
     engine-replaying oracle).  Probabilistic recall (see
     :func:`_lsh_candidate_pairs`); raise ``n_tables`` to push recall
-    toward 1.  ``log_candidates=True`` persists the candidate-pair set,
-    counts it, and logs (n, k, L, realized candidates) — the number to
-    watch for super-linear drift; the persisted ids are reused by the
-    re-rank and reclaimed by the ContextCleaner when unreferenced.
+    toward 1.
 
     ``exact=True``: exhaustive all-pairs (id_a < id_b) — recall 1, O(n²),
     a verification baseline for modest n only.  When the corpus fits in
-    ``max_matrix_rows`` the matrix-broadcast numpy kernel runs it
+    ``MATRIX_MAX_ROWS`` the matrix-broadcast numpy kernel runs it
     vectorized; beyond that an (intentionally unscalable) crossJoin.
 
     Cosines use fixed-point arithmetic → cross-engine exact either way.
@@ -1167,7 +1167,7 @@ def embedding_near_dup(
     # NULL vectors can't be scored (np.stack in the fixed-point kernel
     # would raise); drop them up front like the join paths drop unmatched
     df = df.filter(F.col(vec_col).isNotNull())
-    if exact and df.count() <= max_matrix_rows:
+    if exact and df.count() <= MATRIX_MAX_ROWS:
         return _matrix_pairwise_cosine(df, id_col, vec_col, threshold)
     # spread below the per-row work (guide §2.5): the LSH bucket
     # expression evaluates n_planes x n_tables fixed-point dots per row
@@ -1210,12 +1210,6 @@ def embedding_near_dup(
                 max(1, n_rows >> n_planes),
             )
         cand = _lsh_candidate_pairs(norms, n_planes, n_tables, seed, dim)
-        if log_candidates:
-            cand = cand.persist()
-            _LOG.info(
-                "embedding_near_dup: %d realized candidate pairs "
-                "(k=%d, L=%d)", cand.count(), n_planes, n_tables,
-            )
         # Re-rank plan choice (guide §8): the candidate pairs only need
         # vectors ATTACHED for scoring — joining them back ships two
         # dim-sized arrays per candidate through the plan (at sf0.1:
@@ -1227,7 +1221,7 @@ def embedding_near_dup(
         if _is_integral_id(df, id_col):
             if n_rows is None:
                 n_rows = df.count()
-            if n_rows <= max_matrix_rows:
+            if n_rows <= MATRIX_MAX_ROWS:
                 return _matrix_cosine_attach(
                     cand, df, id_col, vec_col, threshold
                 ).select("id_a", "id_b", "cosine")
@@ -1262,7 +1256,6 @@ def semantic_dedup(
     n_iter: int = 3,
     fp_bits: int | None = None,
     target_cluster_rows: int = 512,
-    max_matrix_rows: int = 200_000,
 ) -> tuple[DataFrame, DataFrame]:
     """SemDeDup (Abbas et al., arXiv:2303.09540): k-means-cluster the
     embedding corpus, then drop every document that has a smaller-id
@@ -1309,7 +1302,7 @@ def semantic_dedup(
     int_id = _is_integral_id(df, id_col)
     if int_id and n_rows is None:
         n_rows = df.count()
-    use_matrix = int_id and n_rows is not None and n_rows <= max_matrix_rows
+    use_matrix = int_id and n_rows is not None and n_rows <= MATRIX_MAX_ROWS
     if use_matrix:
         # guide §8: the within-cluster pair join only needs ids — gather
         # vectors from the broadcast matrix at scoring time instead of
@@ -1398,10 +1391,11 @@ def resolve_duplicate_groups(
 
     ``is_kept`` FALSE rows are the purge list.  Documents in no pair are
     trivially kept and not emitted (anti-join the purge list to filter a
-    corpus).  Distributed end-to-end: O(log diameter) label-propagation
-    shuffles (``graph.connected_components``) plus one component-size
-    aggregation — no driver collect, so a 100 TB corpus with millions of
-    duplicate groups resolves without touching the driver.
+    corpus).  Components come from ``graph.connected_components``: a
+    driver union-find when the pair graph fits its bounded probe, else
+    O(log diameter) label-propagation shuffles — so a 100 TB corpus with
+    millions of duplicate groups never collects more than the bound —
+    plus one component-size aggregation.
     """
     from .graph import connected_components
 

@@ -1,20 +1,27 @@
-"""Generic distributed connected components over an edge DataFrame.
+"""Distributed graph kernels over edge DataFrames: connected
+components, PageRank, triangle census, BFS, weighted shortest paths,
+label propagation and k-core.
 
-The training-data dedup pipeline needs the step AFTER near-dup pair
-mining (``dedup.py``): pairs form a similarity graph, every connected
-component is one duplicate group, and the group's canonical document is
-the one that survives.  The reference has no analogue (its dedup is
-pandas ``drop_duplicates``); this is the set-based Spark formulation.
+Connected components is the step AFTER near-dup pair mining
+(``dedup.py``): pairs form a similarity graph, every connected component
+is one duplicate group, and the group's canonical document is the one
+that survives.  The reference has no analogue (its dedup is pandas
+``drop_duplicates``); this is the set-based Spark formulation.
 
-Algorithm: min-label propagation with pointer jumping, the same
-construction the DBSCAN merge fallback uses (``clustering.py``,
-``_merge_map_distributed``) but over arbitrary vertex ids instead of
-cell-label strings.  Each round every node takes the min representative
-over {itself} ∪ neighbors, then shortcuts ``rep ← rep(rep)`` — the
-pointer jump halves chain lengths, so rounds are O(log diameter), each a
-plain hash shuffle on the node id.  No driver collect at any point; the
-growing plan lineage is truncated per-round with ``localCheckpoint``.
-At the fixed point every node carries its component's smallest id.
+The operator picks its path from the graph it sees: a bounded
+``limit()`` probe collects graphs of at most ``DRIVER_MAX_EDGES`` edges
+into :func:`union_find` (one action, no propagation rounds), and larger
+graphs run min-label propagation with pointer jumping.  Each round every
+node takes the min representative over {itself} ∪ neighbors, then
+shortcuts ``rep ← rep(rep)`` — the pointer jump halves chain lengths, so
+rounds are O(log diameter), each a plain hash shuffle on the node id.
+Both paths give every node its component's smallest id.  The DBSCAN
+merge (``clustering.py``) runs the same two paths over its local-cluster
+keys.
+
+Iterative kernels truncate their growing lineage per round with
+``utils.materialize`` (a reliable checkpoint when the session has a
+checkpoint dir, ``localCheckpoint`` otherwise).
 """
 
 from __future__ import annotations
@@ -23,7 +30,58 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..utils import local_df
+from ..utils import local_df, materialize
+
+#: Driver bound of ``connected_components``, in undirected edges: graphs
+#: up to this size (≈16 MB of long pairs) are collected into a driver
+#: union-find; larger ones run the distributed rounds.
+DRIVER_MAX_EDGES = 1_000_000
+
+
+def union_find(groups) -> dict:
+    """``{vertex: smallest vertex of its component}`` over an iterable of
+    vertex groups, where every group's members are connected to each
+    other (an edge is a 2-group; a 1-group just registers its vertex).
+
+    Unions always hang the larger root under the smaller one, so a
+    root is its component's minimum, and paths are compressed on find.
+    """
+    parent: dict = {}
+
+    def find(k):
+        root = k
+        while parent.setdefault(root, root) != root:
+            root = parent[root]
+        while parent[k] != root:
+            parent[k], k = root, parent[k]
+        return root
+
+    for g in groups:
+        r0 = find(g[0])
+        for k in g[1:]:
+            r = find(k)
+            if r != r0:
+                lo, hi = (r, r0) if r < r0 else (r0, r)
+                parent[hi] = lo
+                r0 = lo
+    return {k: find(k) for k in parent}
+
+
+def _undirected_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Distinct ``(u, v)`` in both directions of every edge, self-loops
+    and NULL endpoints dropped, materialized once: every round of the
+    iterative kernels joins it, and without the checkpoint the full
+    upstream edge-mining plan would re-execute each round."""
+    return materialize(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        .filter(
+            F.col("u").isNotNull()
+            & F.col("v").isNotNull()
+            & (F.col("u") != F.col("v"))
+        )
+        .distinct()
+    )
 
 
 def connected_components(
@@ -31,8 +89,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    mode: str = "auto",
-    driver_max_edges: int = 1_000_000,
 ) -> DataFrame:
     """(node, rep) for every vertex in ``edges``; ``rep`` is the smallest
     vertex id (by the column's natural ordering) in the node's component.
@@ -40,73 +96,32 @@ def connected_components(
     Vertices appear only via edges — isolated vertices (no pair) are the
     caller's concern (they are their own representative by definition).
 
-    ``mode``: ``'driver'`` collects the (deduplicated, bidirectional)
-    edge list into a driver union-find — one action, no propagation
-    rounds; ``'distributed'`` always runs iterative min-label propagation;
-    ``'auto'`` (default) probes with a bounded ``limit()`` collect and
-    takes the driver path when the edge count is ≤ ``driver_max_edges``
-    (≈16 MB of long pairs at the default — trivial driver memory), else
-    falls back to the distributed rounds.  Both paths produce identical
-    labels (rep = smallest id in the component).  The same dual-path
-    rationale as the DBSCAN merge (clustering.py): near-dup graphs are
-    orders of magnitude smaller than the corpus, so the driver path is
-    the common case even at large corpus scale, while the distributed
-    path removes the unbounded collect for adversarial graphs.
+    A bounded ``limit()`` probe collects graphs of at most
+    ``DRIVER_MAX_EDGES`` edges into :func:`union_find` — one action, no
+    propagation rounds; near-dup graphs are orders of magnitude smaller
+    than the corpus, so this is the common case even at large corpus
+    scale.  Larger graphs fall back to the distributed rounds, so no
+    collect is unbounded.  Both paths give identical labels.
     """
-    if mode not in ("auto", "driver", "distributed"):
-        raise ValueError(
-            f"mode must be 'auto', 'driver' or 'distributed', got {mode!r}"
+    nbrs = _undirected_edges(edges, src, dst)
+    # nbrs holds BOTH directions of every undirected edge, so the probe
+    # budget is 2× the edge cap
+    cap = 2 * DRIVER_MAX_EDGES
+    rows = nbrs.limit(cap + 1).collect()
+    if len(rows) <= cap:
+        node_type = nbrs.schema["u"].dataType
+        schema = T.StructType(
+            [
+                T.StructField("node", node_type),
+                T.StructField("rep", node_type),
+            ]
         )
-    nbrs = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        # truncate the (possibly expensive) edge-mining lineage once:
-        # every propagation round joins nbrs twice, and without this the
-        # full upstream plan would re-execute each round
-        .localCheckpoint()
-    )
-    if mode != "distributed":
-        # nbrs holds BOTH directions of every undirected edge, so the
-        # probe budget is 2× the documented edge cap
-        cap = 2 * driver_max_edges
-        rows = (
-            nbrs.collect()
-            if mode == "driver"
-            else nbrs.limit(cap + 1).collect()
-        )
-        if mode == "driver" or len(rows) <= cap:
-            parent: dict = {}
-
-            def find(k):
-                root = k
-                while parent.setdefault(root, root) != root:
-                    root = parent[root]
-                while parent[k] != root:
-                    parent[k], k = root, parent[k]
-                return root
-
-            for r in rows:
-                a, b = find(r.u), find(r.v)
-                if a != b:
-                    lo, hi = (a, b) if a < b else (b, a)
-                    parent[hi] = lo
-            mapping = [(n, find(n)) for n in parent]
-            spark = edges.sparkSession
-            node_type = nbrs.schema["u"].dataType
-            schema = T.StructType(
-                [
-                    T.StructField("node", node_type),
-                    T.StructField("rep", node_type),
-                ]
-            )
-            return local_df(spark, mapping, schema)
-    labels = (
+        mapping = list(union_find(rows).items())
+        return local_df(edges.sparkSession, mapping, schema)
+    labels = materialize(
         nbrs.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("rep", F.col("node"))
-        .localCheckpoint()
     )
     for _ in range(max_iter):
         nbr_min = (
@@ -126,26 +141,22 @@ def connected_components(
         ptr = stepped.select(
             F.col("node").alias("pnode"), F.col("rep").alias("prep")
         )
-        jumped = (
-            stepped.join(ptr, stepped.rep == ptr.pnode, "left")
-            .select(
+        jumped = materialize(
+            stepped.join(ptr, stepped.rep == ptr.pnode, "left").select(
                 stepped.node,
                 F.col("old"),
                 F.least(
                     stepped.rep, F.coalesce(F.col("prep"), stepped.rep)
                 ).alias("rep"),
             )
-            .localCheckpoint()
         )
         changed = jumped.filter(F.col("rep") != F.col("old")).limit(1).count()
         labels = jumped.drop("old")
         if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
-        )
-    return labels
+            return labels
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} rounds"
+    )
 
 
 def pagerank(
@@ -193,18 +204,17 @@ def pagerank(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     ).filter(F.col(src).isNotNull() & F.col(dst).isNotNull()).distinct()
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # materialize the prepared graph ONCE (localCheckpoint, like
-    # connected_components): every iteration references it, and a lazy
-    # plan would re-run the upstream edge derivation per reference —
+    # materialize the prepared graph ONCE (like connected_components):
+    # every iteration references it, and a lazy plan would re-run the
+    # upstream edge derivation per reference —
     # measured 7.9 s → 2 s at sf0.1 for the 3-iteration plan.  The nodes
     # come from the checkpointed edges too: every src has out-degree ≥ 1,
     # so ``ed`` holds every edge of ``e``
-    ed = e.join(outdeg, "src").localCheckpoint(eager=True)
-    nodes = (
+    ed = materialize(e.join(outdeg, "src"))
+    nodes = materialize(
         ed.select(F.col("src").alias("node"))
         .unionByName(ed.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     n = nodes.count()  # one bounded scalar to size the teleport base
@@ -269,8 +279,8 @@ def triangle_count(
 
     The canonical edge set feeds THREE plan branches (degree aggregate,
     orientation join, closure semi-join) and the oriented list feeds
-    both sides of the wedge self-join — they are ``localCheckpoint``ed
-    eagerly so the dedup shuffle and orientation join run once, not
+    both sides of the wedge self-join — they are materialized eagerly
+    so the dedup shuffle and orientation join run once, not
     once per consumer (uncached, the recomputation tripled the scan
     work and showed up as a superlinear scale-probe exponent).
     Measured (round 8, isolated, best-of-2 warmed): 1.1 s at 119k edges
@@ -282,20 +292,18 @@ def triangle_count(
 
     check_col([src, dst], edges)
     a, b = F.col(src), F.col(dst)
-    canon = (
+    canon = materialize(
         edges.filter(a.isNotNull() & b.isNotNull() & (a != b))
         .select(
             F.least(a, b).alias("u"), F.greatest(a, b).alias("v")
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    deg = (
+    deg = materialize(
         canon.select(F.col("u").alias("x"))
         .unionAll(canon.select(F.col("v").alias("x")))
         .groupBy("x")
         .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=True)
     )
     du = deg.select(
         F.col("x").alias("u"), F.col("d").alias("du")
@@ -304,7 +312,7 @@ def triangle_count(
         F.col("x").alias("v"), F.col("d").alias("dv")
     )
     # orient low→high degree, ties by id (u<v already): struct compare
-    oriented = (
+    oriented = materialize(
         canon.join(du, "u").join(dv, "v")
         .select(
             F.when(
@@ -318,7 +326,6 @@ def triangle_count(
             .alias("e")
         )
         .select("e.s", "e.t")
-        .localCheckpoint(eager=True)
     )
     o1 = oriented.select(F.col("s").alias("c"), F.col("t").alias("b1"))
     o2 = oriented.select(F.col("s").alias("c"), F.col("t").alias("b2"))
@@ -376,7 +383,7 @@ def bfs_hops(
     distance, no min-aggregate over candidate distances is needed — set
     semantics only, no floats, so the whole trajectory replays exactly
     in SQL (chained CTEs with EXCEPT).  State stays distributed;
-    per-round ``localCheckpoint`` truncates the growing lineage (the
+    per-round ``materialize`` truncates the growing lineage (the
     connected_components / pagerank device) and the one driver-side
     action per round is an emptiness check that also provides early
     exit.  Rounds are bounded by ``max_hops`` — at 100 TB you cap the
@@ -394,28 +401,26 @@ def bfs_hops(
         e = e.unionByName(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-    e = e.distinct().localCheckpoint(eager=True)
+    e = materialize(e.distinct())
 
-    dist = (
+    dist = materialize(
         sources.select(F.col(node_col).alias("node"))
         .filter(F.col(node_col).isNotNull())
         .distinct()
         .withColumn("dist", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
     )
     frontier = dist.select("node")
     for r in range(1, max_hops + 1):
-        new = (
+        new = materialize(
             e.join(frontier.withColumnRenamed("node", "src"), "src")
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(dist.select("node"), "node", "left_anti")
             .withColumn("dist", F.lit(r).cast("long"))
-            .localCheckpoint(eager=True)
         )
         if new.limit(1).count() == 0:
             break
-        dist = dist.unionByName(new).localCheckpoint(eager=True)
+        dist = materialize(dist.unionByName(new))
         frontier = new.select("node")
     return dist
 
@@ -456,7 +461,7 @@ def sssp_weighted(
     already guaranteed by the lake schema (the cast still happens, so
     the guarantee MUST hold — the flag skips the scan, not the
     contract).
-    Per-round ``localCheckpoint`` truncates the growing lineage; one
+    Per-round ``materialize`` truncates the growing lineage; one
     emptiness probe per round doubles as early exit.  Rounds bound the
     EDGE COUNT of paths, not the node count — at 100 TB you cap the
     search radius exactly as in :func:`bfs_hops`.
@@ -502,14 +507,13 @@ def sssp_weighted(
                 "w",
             )
         )
-    e = e.localCheckpoint(eager=True)
+    e = materialize(e)
 
-    dist = (
+    dist = materialize(
         sources.select(F.col(node_col).alias("node"))
         .filter(F.col(node_col).isNotNull())
         .distinct()
         .withColumn("dist", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
     )
     frontier = dist
     for _ in range(max_rounds):
@@ -528,20 +532,18 @@ def sssp_weighted(
             .groupBy("node")
             .agg(F.min("__nd").alias("__nd"))
         )
-        improved = (
+        improved = materialize(
             cand.join(dist, "node", "left")
             .filter(
                 F.col("dist").isNull() | (F.col("__nd") < F.col("dist"))
             )
             .select("node", F.col("__nd").alias("dist"))
-            .localCheckpoint(eager=True)
         )
         if improved.limit(1).count() == 0:
             break
-        dist = (
+        dist = materialize(
             dist.join(improved.select("node"), "node", "left_anti")
             .unionByName(improved)
-            .localCheckpoint(eager=True)
         )
         frontier = improved
     return dist
@@ -570,7 +572,7 @@ def label_propagation(
     Per round: one hash join (labels ⋈ edges), one (node, label) count
     aggregate with map-side partials, one per-node argmax window —
     state fully distributed, lineage truncated per round
-    (localCheckpoint), no driver action at all.
+    (``materialize``), no driver action at all.
 
     Measured scaling (round 8, isolated, best-of-2 warmed): 2.0 s at
     119k edges vs 2.9 s at 4× edges = 1.4× — the fixed per-round
@@ -583,22 +585,11 @@ def label_propagation(
     from ..utils import check_col
 
     check_col([src, dst], edges)
-    nbrs = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .filter(
-            F.col("u").isNotNull()
-            & F.col("v").isNotNull()
-            & (F.col("u") != F.col("v"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = (
+    nbrs = _undirected_edges(edges, src, dst)
+    labels = materialize(
         nbrs.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
     )
     pick = Window.partitionBy("u").orderBy(
         F.col("cnt").desc(), F.col("label").asc()
@@ -609,11 +600,10 @@ def label_propagation(
             .groupBy("u", "label")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        labels = (
+        labels = materialize(
             counts.withColumn("rn", F.row_number().over(pick))
             .filter(F.col("rn") == 1)
             .select(F.col("u").alias("node"), "label")
-            .localCheckpoint(eager=True)
         )
     return labels
 
@@ -640,7 +630,7 @@ def kcore(
     rounds are no-ops and the Spark loop can stop early.
 
     Per round: one degree aggregate over the undirected edge view + two
-    semi-joins, lineage truncated (localCheckpoint); the only driver
+    semi-joins, lineage truncated (``materialize``); the only driver
     value is the surviving-edge count used for the stop test (an
     aggregate scalar, same contract as the DBSCAN merge loop).  Rounds
     are bounded by ``max_rounds``; at most O(V) ever needed.
@@ -652,27 +642,16 @@ def kcore(
     check_col([src, dst], edges)
     if k < 1:
         raise ValueError("k must be >= 1")
-    und = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .filter(
-            F.col("u").isNotNull()
-            & F.col("v").isNotNull()
-            & (F.col("u") != F.col("v"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _undirected_edges(edges, src, dst)
     n_edges = und.count()
     for _ in range(max_rounds):
         if n_edges == 0:
             break
         deg = und.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select("u")
-        pruned = (
+        pruned = materialize(
             und.join(keep, "u", "left_semi")
             .join(keep.withColumnRenamed("u", "v"), "v", "left_semi")
-            .localCheckpoint(eager=True)
         )
         n_next = pruned.count()
         if n_next == n_edges:

@@ -183,7 +183,9 @@ def weighted_minhash_signatures(
         pos = np.arange(total, dtype=np.int64)
         sig = np.empty((len(live), num_hashes), dtype=np.int64)
         for i in range(num_hashes):
-            hx = np.uint64(i + 1) * _GOLDEN
+            # Python ints masked to 64 bits: the same wrap-around as
+            # uint64 arithmetic, without numpy's scalar-overflow warning
+            hx = np.uint64((i + 1) * int(_GOLDEN) & 0xFFFFFFFFFFFFFFFF)
             x1 = _splitmix64(flat_seeds ^ hx)
             x2 = _splitmix64(x1)
             x3 = _splitmix64(x2)

@@ -315,9 +315,10 @@ WHERE CAST(n_common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE)
 def dd_ngram_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PPJoin prefix-filtered plan at a genuine near-dup threshold
     (0.8): rare-first prefix index + length/positional candidate filters
-    + array_intersect verify (operators/dedup.ngram_jaccard_pairs,
-    use_prefix auto-selects above t=0.7).  Prefix filtering is lossless,
-    so the oracle is the SAME naive pair SQL at the higher threshold —
+    + array_intersect verify (operators/dedup.ngram_jaccard_pairs takes
+    it from t=PREFIX_MIN_THRESHOLD=0.7 up).  Prefix filtering is
+    lossless, so the oracle is the SAME naive pair SQL at the higher
+    threshold —
     the twin to ``dd_ngram_jaccard``, which certifies the direct
     posting-join plan at t=0.05."""
     docs = _t(spark, sf_dir, "documents")
@@ -3712,6 +3713,7 @@ def txt_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         perceptron_predict,
         substring_count,
     )
+    from ..utils import materialize
 
     docs = _t(spark, sf_dir, "documents")
     feats = docs.select(
@@ -3727,15 +3729,12 @@ def txt_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     fcols = [name for name, _ in _CLF_FEATURES]
-    feats = feats.persist()
-    try:
-        w = batch_perceptron_fit(
-            feats, fcols, "y", n_epochs=len(_CLF_LR), lr=_CLF_LR
-        )
-        out = perceptron_predict(feats, fcols, w)
-        return out.select("doc_id", "y", "score", "pred")
-    finally:
-        feats.unpersist()
+    feats = materialize(feats)
+    w = batch_perceptron_fit(
+        feats, fcols, "y", n_epochs=len(_CLF_LR), lr=_CLF_LR
+    )
+    out = perceptron_predict(feats, fcols, w)
+    return out.select("doc_id", "y", "score", "pred")
 
 
 def _sql_perceptron_chain() -> str:
@@ -4452,10 +4451,11 @@ def txt_ridge_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         ridge_predict,
         ridge_weights,
     )
+    from ..utils import materialize
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     t = F.col("text")
-    feats = docs.select(
+    feats = materialize(docs.select(
         "doc_id",
         F.col("n_chars").alias("y"),
         (F.length(t) - F.length(F.regexp_replace(t, " ", ""))).cast(
@@ -4463,16 +4463,13 @@ def txt_ridge_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("f_spaces"),
         substring_count(t, " the ").alias("f_the"),
         substring_count(t, "fast").alias("f_fast"),
-    ).persist()
-    try:
-        det, nums = ridge_fit_exact(
-            feats, ["f_spaces", "f_the", "f_fast"], "y", lam=_RIDGE_LAM
-        )
-        w = ridge_weights(det, nums)
-        out = ridge_predict(feats, ["f_spaces", "f_the", "f_fast"], w)
-        return out.select("doc_id", "y", "pred")
-    finally:
-        feats.unpersist()
+    ))
+    det, nums = ridge_fit_exact(
+        feats, ["f_spaces", "f_the", "f_fast"], "y", lam=_RIDGE_LAM
+    )
+    w = ridge_weights(det, nums)
+    out = ridge_predict(feats, ["f_spaces", "f_the", "f_fast"], w)
+    return out.select("doc_id", "y", "pred")
 
 
 def _sql_leibniz(cell: "callable") -> str:
@@ -4843,6 +4840,7 @@ def txt_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         substring_count,
     )
     from ..operators.evaluation import binary_classification_report
+    from ..utils import materialize
 
     docs = _t(spark, sf_dir, "documents")
     feats = docs.select(
@@ -4858,15 +4856,12 @@ def txt_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     fcols = [name for name, _ in _CLF_FEATURES]
-    feats = feats.persist()
-    try:
-        w = batch_perceptron_fit(
-            feats, fcols, "y", n_epochs=len(_CLF_LR), lr=_CLF_LR
-        )
-        scored = perceptron_predict(feats, fcols, w)
-        return binary_classification_report(scored, "y", "score")
-    finally:
-        feats.unpersist()
+    feats = materialize(feats)
+    w = batch_perceptron_fit(
+        feats, fcols, "y", n_epochs=len(_CLF_LR), lr=_CLF_LR
+    )
+    scored = perceptron_predict(feats, fcols, w)
+    return binary_classification_report(scored, "y", "score")
 
 
 TXT_CLASSIFIER_EVAL_SQL = f"""
@@ -5381,7 +5376,7 @@ def txt_calibration_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         perceptron_predict,
         substring_count,
     )
-    from ..utils import dense_ids
+    from ..utils import dense_ids, materialize
 
     docs = _t(spark, sf_dir, "documents")
     feats = docs.select(
@@ -5397,33 +5392,30 @@ def txt_calibration_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     fcols = [name for name, _ in _CLF_FEATURES]
-    feats = feats.persist()
-    try:
-        w = batch_perceptron_fit(
-            feats, fcols, "y", n_epochs=len(_CLF_LR), lr=_CLF_LR
-        )
-        sc = perceptron_predict(feats, fcols, w).filter(
-            F.col("score").isNotNull()
-        )
-        dv = dense_ids(sc.select("score"), "score", "rk")
-        nd = dv.count()
-        per = sc.join(dv, "score").withColumn(
-            "bucket", F.expr(f"CAST((rk * 10) DIV {nd} AS BIGINT)")
-        )
-        pos = F.sum(F.when(F.col("y") == 1, 1).otherwise(0))
-        return per.groupBy("bucket").agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            pos.cast("long").alias("n_pos"),
-            F.try_divide(
-                pos.cast("double"), F.count(F.lit(1)).cast("double")
-            ).alias("pos_rate"),
-            F.try_divide(
-                F.sum("score").cast("double"),
-                F.count(F.lit(1)).cast("double"),
-            ).alias("mean_score"),
-        )
-    finally:
-        feats.unpersist()
+    feats = materialize(feats)
+    w = batch_perceptron_fit(
+        feats, fcols, "y", n_epochs=len(_CLF_LR), lr=_CLF_LR
+    )
+    sc = perceptron_predict(feats, fcols, w).filter(
+        F.col("score").isNotNull()
+    )
+    dv = dense_ids(sc.select("score"), "score", "rk")
+    nd = dv.count()
+    per = sc.join(dv, "score").withColumn(
+        "bucket", F.expr(f"CAST((rk * 10) DIV {nd} AS BIGINT)")
+    )
+    pos = F.sum(F.when(F.col("y") == 1, 1).otherwise(0))
+    return per.groupBy("bucket").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        pos.cast("long").alias("n_pos"),
+        F.try_divide(
+            pos.cast("double"), F.count(F.lit(1)).cast("double")
+        ).alias("pos_rate"),
+        F.try_divide(
+            F.sum("score").cast("double"),
+            F.count(F.lit(1)).cast("double"),
+        ).alias("mean_score"),
+    )
 
 
 TXT_CALIBRATION_SQL = f"""

@@ -465,6 +465,34 @@ def sum_partials(df: DataFrame, kernel, width: int):
     return unpack(r["v"] for r in parts.collect())
 
 
+#: Logical-plan node names that ``spread`` treats as already wide
+#: (matched as substrings of the node name, so ``RepartitionByExpression``
+#: and ``DeduplicateWithinWatermark`` count too).
+_WIDE_NODES = (
+    "Repartition", "Join", "Aggregate", "Sort", "Window", "Distinct",
+    "Deduplicate",
+)
+
+
+def _has_wide_node(plan) -> bool:
+    """Whether the JVM ``plan`` holds a shuffle-introducing node.  Walks
+    ``nodeName()`` over the plan tree, so column names, expressions and
+    file paths cannot match.  ``innerChildren`` reach a cached relation's
+    plan and subqueries; an adaptive plan keeps its own under
+    ``inputPlan``."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if any(k in name for k in _WIDE_NODES):
+            return True
+        for kids in (node.children(), node.innerChildren()):
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.inputPlan())
+    return False
+
+
 def spread(df: DataFrame, factor: int = 1, barrier: bool = False) -> DataFrame:
     """Round-robin repartition ``df`` to cluster parallelism when its
     current partitioning would leave most cores idle.
@@ -492,8 +520,9 @@ def spread(df: DataFrame, factor: int = 1, barrier: bool = False) -> DataFrame:
       stages to finalize the plan (measured: one full job fired just
       probing a repartitioned frame).  On a narrow scan-rooted plan the
       probe is pure planning, zero jobs.  A guard below skips frames
-      whose optimized plan contains shuffle-introducing nodes — they
-      already have shuffle-determined (wide) partitioning anyway.
+      whose optimized plan contains shuffle-introducing nodes
+      (``_has_wide_node``) — they already have shuffle-determined (wide)
+      partitioning anyway.
     - **Below Python UDF columns.**  ``spread(df.select(udf(x)))``
       exchanges rows AFTER the ArrowEvalPython node — the kernel still
       runs at scan width.  Spread the input, then attach the kernel
@@ -514,14 +543,7 @@ def spread(df: DataFrame, factor: int = 1, barrier: bool = False) -> DataFrame:
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism * factor
     try:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        if any(
-            k in plan
-            for k in (
-                "Repartition", "Join", "Aggregate", "Sort",
-                "Window", "Distinct", "Deduplicate",
-            )
-        ):
+        if _has_wide_node(df._jdf.queryExecution().optimizedPlan()):
             return df
         nparts = df.rdd.getNumPartitions()
     except Exception:  # pragma: no cover - Connect / planning quirks

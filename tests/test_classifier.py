@@ -140,24 +140,34 @@ def test_substring_count_literal_only(spark):
         substring_count(F.col("t"), "a.*b")
 
 
-def test_engines_agree_and_validate(toy):
+def test_engines_agree_and_validate(toy, monkeypatch):
+    """The fit takes the expression path at ≤ ``EXPR_MAX_FEATURES``
+    features and the Arrow kernel beyond; forcing each path through the
+    bound gives identical weights."""
+    from dataslicer_spark.operators import classifier
+
     X, y, df = toy
     sched = [4, 2, 1]
-    a = batch_perceptron_fit(
-        df, ["a", "b", "c"], "y", n_epochs=3, lr=sched, engine="expr"
-    )
-    b = batch_perceptron_fit(
-        df, ["a", "b", "c"], "y", n_epochs=3, lr=sched, engine="arrow"
-    )
+    calls = []
+    orig = classifier._fit_arrow
+
+    def spy(*args):
+        calls.append(1)
+        return orig(*args)
+
+    monkeypatch.setattr(classifier, "_fit_arrow", spy)
+    a = batch_perceptron_fit(df, ["a", "b", "c"], "y", n_epochs=3, lr=sched)
+    assert not calls
+    monkeypatch.setattr(classifier, "EXPR_MAX_FEATURES", 2)
+    b = batch_perceptron_fit(df, ["a", "b", "c"], "y", n_epochs=3, lr=sched)
+    assert calls
     assert a == b
-    with pytest.raises(ValueError, match="engine"):
-        batch_perceptron_fit(df, ["a"], "y", engine="numpy")
 
 
 def test_wide_fit_runs_one_job_per_epoch(spark, count_jobs):
-    """The Arrow path (> 16 features) reduces each epoch's partial
-    gradients on the driver: one job per epoch on a materialized input,
-    and the same weights as the numpy replay."""
+    """The Arrow path (> ``EXPR_MAX_FEATURES`` = 16 features) reduces
+    each epoch's partial gradients on the driver: one job per epoch on a
+    materialized input, and the same weights as the numpy replay."""
     from dataslicer_spark.utils import materialize
 
     rng = np.random.default_rng(5)
@@ -257,18 +267,17 @@ def test_sql_text_paths_quote_column_names(spark, toy):
     """The fit, predict and featurize expressions are SQL text: column
     names with spaces, dashes and backticks give the same results as
     plain names."""
+    from dataslicer_spark.operators import classifier
     from dataslicer_spark.operators.classifier import hashed_bow_features
 
     _, _, df = toy
     odd = ["a b", "x-y", "q`t"]
     df_odd = df.toDF("id", "l-y", *odd)
-    for engine in ("expr", "arrow"):
-        w = batch_perceptron_fit(
-            df, ["a", "b", "c"], "y", n_epochs=3, engine=engine
-        )
-        assert batch_perceptron_fit(
-            df_odd, odd, "l-y", n_epochs=3, engine=engine
-        ) == w
+    for bound in (16, 0):  # expression path, then the Arrow kernel
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(classifier, "EXPR_MAX_FEATURES", bound)
+            w = batch_perceptron_fit(df, ["a", "b", "c"], "y", n_epochs=3)
+            assert batch_perceptron_fit(df_odd, odd, "l-y", n_epochs=3) == w
     want = {r.id: r.score for r in perceptron_predict(df, ["a", "b", "c"], w).collect()}
     got = {r.id: r.score for r in perceptron_predict(df_odd, odd, w).collect()}
     assert got == want

@@ -11,6 +11,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from dataslicer_spark.operators import clustering
 from dataslicer_spark.operators.clustering import dbscan
 
 
@@ -140,10 +141,14 @@ def test_dbscan_labels_deterministic(spark):
 
 
 @pytest.mark.parametrize("merge_mode", ["driver", "distributed"])
-def test_dbscan_merge_paths_identical(spark, merge_mode):
+def test_dbscan_merge_paths_identical(spark, monkeypatch, merge_mode):
     """Both merge paths must produce byte-identical labels — including a
     long chain cluster threading dozens of grid cells (worst case for the
-    iterative merge: component diameter ≈ cell count)."""
+    iterative merge: component diameter ≈ cell count).  The distributed
+    path is forced by a driver bound of 0 key sets, and inside it the
+    components by a connected-components edge bound of 0."""
+    from dataslicer_spark.operators import graph
+
     rng = np.random.default_rng(31)
     # chain: points every 0.8 < eps=1 along x → one cluster over ~40 cells
     chain = np.column_stack([np.arange(0, 40, 0.8), np.zeros(50)])
@@ -158,33 +163,37 @@ def test_dbscan_merge_paths_identical(spark, merge_mode):
     )
     kw = dict(eps=1.0, min_samples=2, id_col="pid", x_col="x", y_col="y",
               coord="planar")
-    got = (
-        dbscan(df, merge_mode=merge_mode, **kw)
-        .select("pid", "clusterID").toPandas().set_index("pid").clusterID
-    )
+
+    def run():
+        return (
+            dbscan(df, **kw)
+            .select("pid", "clusterID").toPandas().set_index("pid").clusterID
+        )
+
+    got = run()
+    if merge_mode == "distributed":
+        drv = got
+        monkeypatch.setattr(clustering, "DRIVER_MERGE_MAX_SETS", 0)
+        monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 0)
+        got = run()
+        # labels (not just partitions) must match the driver path exactly
+        assert (got.sort_index().to_numpy() == drv.sort_index().to_numpy()).all()
     is_core, expect = brute_dbscan(pts, 1.0, 2)
     assert _partition(got.index, got.to_numpy()) == _partition(
         np.arange(len(pts)), expect
     )
     assert set(got.index[got == -1]) == set(np.where(expect == -1)[0])
-    # labels (not just partitions) must match the driver path exactly
-    if merge_mode == "distributed":
-        drv = (
-            dbscan(df, merge_mode="driver", **kw)
-            .select("pid", "clusterID").toPandas().set_index("pid").clusterID
-        )
-        assert (got.sort_index().to_numpy() == drv.sort_index().to_numpy()).all()
 
 
-def test_dbscan_auto_falls_back_to_distributed(spark):
-    """auto with a tiny driver cap must still be correct (forces the
-    distributed merge through the public default path)."""
+def test_dbscan_auto_falls_back_to_distributed(spark, monkeypatch):
+    """A driver bound of one key set must still be correct: the probe
+    overflows and the distributed merge runs."""
+    monkeypatch.setattr(clustering, "DRIVER_MERGE_MAX_SETS", 1)
     pts = [(0, 0.0, 0.0), (1, 0.5, 0.0), (2, 1.0, 0.0), (3, 30.0, 30.0),
            (4, 30.5, 30.0), (5, 90.0, 90.0)]
     df = spark.createDataFrame(pts, "pid long, x double, y double")
     out = dbscan(df, eps=1.0, min_samples=2, id_col="pid", x_col="x",
-                 y_col="y", coord="planar", merge_mode="auto",
-                 driver_merge_max_sets=1)
+                 y_col="y", coord="planar")
     got = {r.pid: r.clusterID for r in out.collect()}
     assert got[0] == got[1] == got[2] != -1
     assert got[3] == got[4] != -1

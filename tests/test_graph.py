@@ -3,6 +3,7 @@
 import numpy as np
 import pytest
 
+from dataslicer_spark.operators import graph
 from dataslicer_spark.operators.dedup import resolve_duplicate_groups
 from dataslicer_spark.operators.graph import connected_components
 
@@ -26,9 +27,32 @@ def _uf_components(edges):
     return {n: find(n) for n in parent}
 
 
+def _force(monkeypatch, mode, n_edges):
+    """Pin ``connected_components``' path through its driver bound and
+    spy on the driver union-find: ``'driver'`` keeps the default bound,
+    ``'distributed'`` sets it to 0 (every graph falls back), ``'auto'``
+    sets it to exactly the graph's undirected edge count (the probe's
+    boundary, still the driver path).  Returns the spy's call list."""
+    if mode == "distributed":
+        monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 0)
+    elif mode == "auto":
+        monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", n_edges)
+    calls = []
+    orig = graph.union_find
+
+    def spy(groups):
+        calls.append(1)
+        return orig(groups)
+
+    monkeypatch.setattr(graph, "union_find", spy)
+    return calls
+
+
 @pytest.mark.parametrize("mode", ["driver", "distributed", "auto"])
 @pytest.mark.parametrize("seed,n_nodes,n_edges", [(0, 30, 20), (1, 200, 150), (2, 500, 700)])
-def test_connected_components_matches_union_find(spark, seed, n_nodes, n_edges, mode):
+def test_connected_components_matches_union_find(
+    spark, monkeypatch, seed, n_nodes, n_edges, mode
+):
     rng = np.random.default_rng(seed)
     edges = [
         (int(a), int(b))
@@ -38,9 +62,9 @@ def test_connected_components_matches_union_find(spark, seed, n_nodes, n_edges, 
         if a != b
     ]
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r.node: r.rep for r in connected_components(df, mode=mode).collect()
-    }
+    calls = _force(monkeypatch, mode, len({tuple(sorted(e)) for e in edges}))
+    got = {r.node: r.rep for r in connected_components(df).collect()}
+    assert bool(calls) == (mode != "distributed")
     # reference: min-id representative per component via union-find, but a
     # union-find root is not necessarily the min id — remap by component
     ref_root = _uf_components(edges)
@@ -51,29 +75,74 @@ def test_connected_components_matches_union_find(spark, seed, n_nodes, n_edges, 
     assert got == expect
 
 
-def test_connected_components_long_chain_converges(spark):
+def test_connected_components_long_chain_converges(spark, monkeypatch):
     """A path graph is the worst case for label propagation; pointer
     jumping must converge in O(log n) rounds, well under max_iter."""
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 0)
     n = 300
     df = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "src long, dst long"
     )
-    got = connected_components(df, max_iter=20, mode="distributed").collect()
+    got = connected_components(df, max_iter=20).collect()
     assert len(got) == n + 1
     assert {r.rep for r in got} == {0}
 
 
-def test_auto_mode_cap_falls_back_to_distributed(spark):
-    """With a tiny driver_max_edges cap, auto must take the distributed
-    path and still produce identical labels."""
+def test_auto_mode_cap_falls_back_to_distributed(spark, monkeypatch):
+    """With a tiny driver bound the probe overflows and the distributed
+    path must give labels identical to the driver union-find's."""
     pairs = [(i, i + 1) for i in range(50)] + [(100, 101), (101, 102)]
     df = spark.createDataFrame(pairs, "src long, dst long")
-    a = {r.node: r.rep for r in connected_components(df, mode="driver").collect()}
-    b = {
-        r.node: r.rep
-        for r in connected_components(df, mode="auto", driver_max_edges=5).collect()
-    }
+    a = {r.node: r.rep for r in connected_components(df).collect()}
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 5)
+    b = {r.node: r.rep for r in connected_components(df).collect()}
     assert a == b
+
+
+def test_union_find_min_representative():
+    """Groups of any size (1-groups only register their vertex); every
+    vertex maps to its component's smallest member."""
+    got = graph.union_find([("c", "b"), ("e",), ["d", "c", "a"], ("x", "y")])
+    assert got == {
+        "a": "a", "b": "a", "c": "a", "d": "a", "e": "e", "x": "x", "y": "x",
+    }
+
+
+def test_checkpoint_dir_gives_same_rows(spark, tmp_path):
+    """With a checkpoint dir set, ``utils.materialize`` takes the reliable
+    ``checkpoint()`` path; connected components (both paths) and
+    PageRank must return the same rows as with ``localCheckpoint``."""
+    from dataslicer_spark.operators.graph import pagerank
+
+    rng = np.random.default_rng(5)
+    edges = spark.createDataFrame(
+        [(int(a), int(b)) for a, b in rng.integers(0, 60, (120, 2)) if a != b],
+        "src long, dst long",
+    )
+
+    def run():
+        out = [sorted(connected_components(edges).collect()),
+               sorted(pagerank(edges).collect())]
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(graph, "DRIVER_MAX_EDGES", 0)
+            out.append(sorted(connected_components(edges).collect()))
+        return out
+
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    plain = run()
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        assert sc.getCheckpointDir() is not None
+        reliable = run()
+    finally:
+        # unset the dir again so later tests see the default session
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+            sc._jvm.scala.Option.empty()
+        )
+    assert sc.getCheckpointDir() is None
+    assert reliable == plain
+    assert plain[0] == plain[2]
 
 
 def test_resolve_duplicate_groups(spark):

@@ -219,6 +219,35 @@ def test_semantic_dedup_drops_planted_near_dups(spark):
     assert all(r.cosine >= 0.999 and r.id_a < r.id_b for r in p)
 
 
+def test_semantic_dedup_join_attach_matches_matrix(spark, monkeypatch):
+    """With ``MATRIX_MAX_ROWS`` at 0 the within-cluster pairs attach
+    vectors by join instead of the broadcast matrix: same pairs, same
+    cosines, same survivors."""
+    from dataslicer_spark.operators import dedup
+
+    rng = np.random.default_rng(7)
+    base = rng.normal(0, 1, (40, 6))
+    rows = [(int(i), [float(x) for x in base[i]]) for i in range(40)]
+    rows += [
+        (100 + i, [float(x) for x in base[i] + rng.normal(0, 0.05, 6)])
+        for i in range(8)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    def run():
+        surv, pairs = semantic_dedup(df, threshold=0.6, k=3, n_iter=2)
+        return (
+            sorted(r.vec_id for r in surv.collect()),
+            sorted(tuple(r) for r in pairs.collect()),
+        )
+
+    matrix = run()
+    monkeypatch.setattr(dedup, "MATRIX_MAX_ROWS", 0)
+    joined = run()
+    assert len(matrix[1]) > 8
+    assert joined == matrix
+
+
 def test_semantic_dedup_null_vectors_ignored(spark):
     df = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, None), (3, [1.0, 0.0])],

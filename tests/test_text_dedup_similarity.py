@@ -164,22 +164,25 @@ def test_ngram_jaccard_exact_vs_python(docs):
         assert got_pairs[k] == pytest.approx(v, rel=1e-12)
 
 
-def test_ngram_jaccard_prefix_path_matches_direct(docs):
+def test_ngram_jaccard_prefix_path_matches_direct(docs, monkeypatch):
     """The PPJoin prefix-filtered plan (rare-first prefix index + length
     + positional candidate filters, Bayardo WWW'07 / Xiao WWW'08) is
     LOSSLESS: bit-identical pairs, counts, and jaccards vs the direct
     posting-join plan at every threshold, including ones where ceil(t·|d|)
-    sits on a float boundary (0.8·5)."""
+    sits on a float boundary (0.8·5).  Each plan is forced through
+    ``PREFIX_MIN_THRESHOLD``: above every threshold (direct) or 0 (prefix)."""
+    from dataslicer_spark.operators import dedup
+
+    def run(t, bound):
+        monkeypatch.setattr(dedup, "PREFIX_MIN_THRESHOLD", bound)
+        return (
+            ngram_jaccard_pairs(sample, "doc_id", threshold=t)
+            .toPandas().sort_values(["id_a", "id_b"]).reset_index(drop=True)
+        )
+
     sample = docs.limit(60)
     for t in (0.05, 0.5, 0.8, 0.95):
-        a = (
-            ngram_jaccard_pairs(sample, "doc_id", threshold=t, use_prefix=False)
-            .toPandas().sort_values(["id_a", "id_b"]).reset_index(drop=True)
-        )
-        b = (
-            ngram_jaccard_pairs(sample, "doc_id", threshold=t, use_prefix=True)
-            .toPandas().sort_values(["id_a", "id_b"]).reset_index(drop=True)
-        )
+        a, b = run(t, 2.0), run(t, 0.0)
         assert a.equals(b), f"prefix/direct divergence at t={t}"
     sample.sparkSession.catalog.clearCache()
 
@@ -389,6 +392,28 @@ def test_embedding_near_dup_and_fp_dot(spark, emb):
     assert (int(first.vec_id), 999999) in {
         (r.id_a, r.id_b) for r in pairs.itertuples()
     }
+
+
+def test_embedding_near_dup_join_attach_matches_matrix(emb, monkeypatch):
+    """With ``MATRIX_MAX_ROWS`` at 0 the LSH re-rank attaches vectors by
+    join and ``exact=True`` runs the crossJoin, instead of the broadcast
+    matrix; both plans give the same pairs and bit-identical cosines."""
+    from dataslicer_spark.operators import dedup
+
+    v = emb.filter(F.col("vec_id") < 80)
+
+    def run(**kw):
+        return sorted(
+            tuple(r) for r in embedding_near_dup(v, threshold=0.2, **kw).collect()
+        )
+
+    for kw in (dict(n_planes=3), dict(exact=True)):
+        matrix = run(**kw)
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(dedup, "MATRIX_MAX_ROWS", 0)
+            joined = run(**kw)
+        assert matrix, kw
+        assert joined == matrix, kw
 
 
 # ---------------------------------------------------------------------------

@@ -115,6 +115,34 @@ def test_spread_noop_on_shuffle_rooted_frames(spark):
     assert spread(agg) is agg
 
 
+def test_spread_guard_reads_plan_nodes_not_names(spark, tmp_path, count_jobs):
+    """The already-wide guard matches plan node names, not the plan text:
+    a narrow scan whose column name spells three wide operators is still
+    widened, while a real join or aggregate comes back unchanged without
+    running a job."""
+    from pyspark.sql import functions as F
+
+    from dataslicer_spark.utils import spread
+
+    p = str(tmp_path / "one_group_named.parquet")
+    spark.range(200).selectExpr("id", "id AS Sorted_Window_Join").coalesce(
+        1
+    ).write.parquet(p)
+    df = spark.read.parquet(p)
+    out = spread(df)
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert sorted(r["Sorted_Window_Join"] for r in out.collect()) == list(
+        range(200)
+    )
+
+    joined = df.join(spark.range(50), "id")
+    agg = df.groupBy((F.col("id") % 7).alias("k")).count()
+    for wide in (joined, agg):
+        got, jobs = count_jobs(lambda: spread(wide))
+        assert got is wide
+        assert jobs == 0
+
+
 def test_spread_barrier_truncates_lineage_and_keeps_rows(spark, tmp_path):
     """barrier=True must leave an RDD-scan-rooted frame: Catalyst pushes
     deterministic Projects/Filters through a round-robin Exchange, so a
