@@ -23,7 +23,9 @@ Plan shape (the part that matters at scale):
 - a probe derives each artifact once: the batch is round-robined once
   (one checkpoint feeds both the signature kernel and the verify
   shingles), its signatures and the candidate pairs are checkpointed,
-  and nothing stays in the session cache when the call returns;
+  the stored band table is read with the id type the meta records (no
+  schema-inference job), and nothing stays in the session cache when
+  the call returns;
 - the streaming form is this operator inside ``foreachBatch``:
   dedup the micro-batch against the index, append survivors.
 
@@ -48,7 +50,7 @@ from .dedup import band_buckets, est_jaccard, minhash_signatures
 
 #: index layout: <path>/{signatures,bands,meta} parquet directories.
 _SIGS, _BANDS, _META = "signatures", "bands", "meta"
-_META_SCHEMA = "n int, num_perm int, bands int, bits int"
+_META_SCHEMA = "n int, num_perm int, bands int, bits int, id_type string"
 
 #: Most candidate pairs whose corpus ids the exact-verify fetch pushes
 #: into the corpus scan as an ``In()`` literal list; more pairs take a
@@ -107,17 +109,22 @@ def build_minhash_index(
     ).hint("rebalance").write.mode("overwrite").parquet(
         os.path.join(path, _BANDS)
     )
+    # the id type lets a probe read the band table with a declared schema
+    id_type = sigs.schema["id"].dataType.simpleString()
     local_df(
-        df.sparkSession, [(n, num_perm, bands, bits)], _META_SCHEMA
+        df.sparkSession, [(n, num_perm, bands, bits, id_type)], _META_SCHEMA
     ).write.mode("overwrite").parquet(os.path.join(path, _META))
 
 
-def _read_meta(spark: SparkSession, path: str) -> tuple[int, int, int, int]:
+def _read_meta(
+    spark: SparkSession, path: str
+) -> tuple[int, int, int, int, str | None]:
     row = spark.read.schema(_META_SCHEMA).parquet(
         os.path.join(path, _META)
     ).collect()[0]
-    # pre-round-11 indexes have no bits column (reads as null): full-width
-    return row.n, row.num_perm, row.bands, row.bits or 0
+    # older indexes lack bits (full-width) and id_type (schema inferred):
+    # a missing column reads as null
+    return row.n, row.num_perm, row.bands, row.bits or 0, row.id_type
 
 
 def dedup_against_minhash_index(
@@ -174,7 +181,7 @@ def dedup_against_minhash_index(
 
     spark = new_df.sparkSession
     check_col([id_col, text_col], new_df)
-    n, num_perm, bands, bits = _read_meta(spark, path)
+    n, num_perm, bands, bits, id_type = _read_meta(spark, path)
     # ONE spread of the batch (guide §2.5): the signature kernel's own
     # spread() is a 0-job no-op on this already-wide checkpoint, and the
     # verify shingles below read the same rows.  barrier: the shingle
@@ -187,7 +194,11 @@ def dedup_against_minhash_index(
     )
     bands_new = band_buckets(sigs_new, num_perm, bands, bits)
 
-    stored_bands = spark.read.parquet(os.path.join(path, _BANDS))
+    reader = spark.read
+    if id_type:
+        # declared schema: no parquet schema-inference job
+        reader = reader.schema(f"id {id_type}, band int, bucket bigint")
+    stored_bands = reader.parquet(os.path.join(path, _BANDS))
     # both the verify join and the candidate-id fetch below consume this
     # bounded (|batch|·matches) frame — checkpoint it so the stored band
     # table is scanned once, not once per consumer

@@ -17,7 +17,10 @@ shortcuts ``rep ← rep(rep)`` — the pointer jump halves chain lengths, so
 rounds are O(log diameter), each a plain hash shuffle on the node id.
 Both paths give every node its component's smallest id.  The DBSCAN
 merge (``clustering.py``) runs the same two paths over its local-cluster
-keys.
+keys.  PageRank makes the same choice through the same probe: up to
+``DRIVER_MAX_EDGES`` distinct edges it runs its integer rounds in numpy
+on the driver, above it one lazy distributed join/aggregate plan; the
+ranks are identical either way.
 
 Iterative kernels truncate their growing lineage per round with
 ``utils.materialize`` (a reliable checkpoint when the session has a
@@ -32,9 +35,10 @@ from pyspark.sql import types as T
 
 from ..utils import local_df, materialize
 
-#: Driver bound of ``connected_components``, in undirected edges: graphs
-#: up to this size (≈16 MB of long pairs) are collected into a driver
-#: union-find; larger ones run the distributed rounds.
+#: Driver bound of ``connected_components`` (in undirected edges) and
+#: ``pagerank`` (in distinct directed edges): graphs up to this size
+#: (≈16 MB of long pairs) are collected and solved on the driver; larger
+#: ones run the distributed rounds.
 DRIVER_MAX_EDGES = 1_000_000
 
 
@@ -65,6 +69,16 @@ def union_find(groups) -> dict:
                 parent[hi] = lo
                 r0 = lo
     return {k: find(k) for k in parent}
+
+
+def _bounded_rows(df: DataFrame, cap: int) -> list | None:
+    """The rows of ``df`` if it holds at most ``cap`` of them, else
+    ``None`` — one ``limit(cap + 1)`` collect, so no driver collect is
+    unbounded.  The driver paths of :func:`connected_components` and
+    :func:`pagerank` run on its rows; ``None`` sends them to their
+    distributed rounds."""
+    rows = df.limit(cap + 1).collect()
+    return rows if len(rows) <= cap else None
 
 
 def _undirected_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -106,9 +120,8 @@ def connected_components(
     nbrs = _undirected_edges(edges, src, dst)
     # nbrs holds BOTH directions of every undirected edge, so the probe
     # budget is 2× the edge cap
-    cap = 2 * DRIVER_MAX_EDGES
-    rows = nbrs.limit(cap + 1).collect()
-    if len(rows) <= cap:
+    rows = _bounded_rows(nbrs, 2 * DRIVER_MAX_EDGES)
+    if rows is not None:
         node_type = nbrs.schema["u"].dataType
         schema = T.StructType(
             [
@@ -183,13 +196,20 @@ def pagerank(
     same units — determinism is the contract, the ranking is standard
     PageRank (Page et al., 1999) to within the quantization.
 
-    Scale shape: the canonical distributed PageRank — per iteration one
-    shuffle of ranks on the join key and one of contributions on the
-    destination; state stays fully distributed (no driver collect, the
-    whole n-iteration computation is ONE lazy plan).  Multi-edges are
+    Two paths, picked from the graph it sees (like
+    :func:`connected_components`): a bounded ``limit()`` probe collects
+    graphs of at most ``DRIVER_MAX_EDGES`` distinct edges and runs the
+    rounds in numpy on the driver — one action, the result a local
+    table of at most ⌈nodes / ``maxRecordsPerBatch``⌉ partitions.
+    Larger graphs run the canonical distributed PageRank: per iteration
+    one shuffle of ranks on the join key and one of contributions on the
+    destination, the n iterations ONE lazy plan over the checkpointed
+    edges; there the probe costs one extra evaluation of the edge
+    derivation.  Both paths give identical ranks.  Multi-edges are
     collapsed (DISTINCT) so out-degree has graph semantics.
 
-    Returns (node, rank) for every node appearing as src or dst.
+    Returns (node, rank) for every node appearing as src or dst; ``node``
+    keeps the edge columns' type, ``rank`` is long.
     """
     d_num, d_den = damping
     # the floor divisions run as (x − x mod y)/y with the division in
@@ -203,6 +223,9 @@ def pagerank(
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     ).filter(F.col(src).isNotNull() & F.col(dst).isNotNull()).distinct()
+    rows = _bounded_rows(e, DRIVER_MAX_EDGES)
+    if rows is not None:
+        return _pagerank_driver(e, rows, n_iter, d_num, d_den, scale)
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # materialize the prepared graph ONCE (like connected_components):
     # every iteration references it, and a lazy plan would re-run the
@@ -251,6 +274,54 @@ def pagerank(
             )
         )
     return ranks
+
+
+def _pagerank_driver(
+    e: DataFrame, rows: list, n_iter: int, d_num: int, d_den: int, scale: int
+) -> DataFrame:
+    """:func:`pagerank`'s integer rounds in numpy over the collected
+    distinct ``(src, dst)`` rows — the same floor divisions in int64, so
+    the ranks are bit-identical to the distributed plan's."""
+    import numpy as np
+
+    spark = e.sparkSession
+    node_type = e.schema["src"].dataType
+    schema = T.StructType(
+        [
+            T.StructField("node", node_type),
+            T.StructField("rank", T.LongType()),
+        ]
+    )
+    if not rows:
+        return local_df(spark, [], schema)
+    m = len(rows)
+    ends = [r[0] for r in rows] + [r[1] for r in rows]
+    # numeric ids sort natively; any other id type as Python objects
+    keys = (
+        np.array(ends)
+        if isinstance(node_type, T.NumericType)
+        else np.fromiter(ends, dtype=object, count=2 * m)
+    )
+    nodes, idx = np.unique(keys, return_inverse=True)
+    s_i, d_i = idx[:m], idx[m:]
+    n = len(nodes)
+    deg = np.bincount(s_i, minlength=n)
+    base = (scale * (d_den - d_num) // d_den) // n
+    r = np.full(n, scale // n, dtype=np.int64)
+    for _ in range(n_iter):
+        sh = r * d_num // d_den
+        nxt = np.full(n, base, dtype=np.int64)
+        np.add.at(nxt, d_i, sh[s_i] // deg[s_i])
+        r = nxt
+    # a local table is sliced into defaultParallelism partitions; keep
+    # one per Arrow batch so a sink writes no near-empty files
+    per_part = int(
+        spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    )
+    parts = -(-n // per_part) if per_part > 0 else 1
+    return local_df(
+        spark, list(zip(nodes.tolist(), r.tolist())), schema
+    ).coalesce(parts)
 
 
 def triangle_count(

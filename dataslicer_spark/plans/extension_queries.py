@@ -4363,11 +4363,13 @@ FROM clean f CROSS JOIN ep{len(_HBOW_LR)} e
 def gr_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer PageRank (operators/graph.pagerank) over the bidirected
     customer↔supplier purchase graph (distinct lineitem⋈orders pairs;
-    node = 2·custkey / 2·suppkey+1).  The iterative JOIN-shaped scale
-    pattern: per round one shuffle of ranks on the join key, one of
-    contributions on the destination — state stays fully distributed.
-    Fixed-point int64 ranks make the 3-round trajectory exact, so the
-    DuckDB oracle replays it as chained CTEs."""
+    node = 2·custkey / 2·suppkey+1).  Up to ``graph.DRIVER_MAX_EDGES``
+    distinct edges (every sf here) one bounded collect feeds the rounds
+    on the driver and the result is a local table; larger graphs run the
+    iterative JOIN-shaped plan — per round one shuffle of ranks on the
+    join key, one of contributions on the destination.  Both paths give
+    the same ranks: fixed-point int64 makes the 3-round trajectory
+    exact, so the DuckDB oracle replays it as chained CTEs."""
     from ..operators.graph import pagerank
 
     li = _t(spark, sf_dir, "lineitem")

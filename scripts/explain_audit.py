@@ -131,9 +131,11 @@ CHECKS: list[tuple[str, str, list[str], list[str]]] = [
      "map-only replace chain (training's pair counts already ran as "
      "partial+final aggregates)",
      [], ["Join", "Exchange", "Python", "CartesianProduct"]),
-    ("gr_pagerank", "rank iterations are equi-joins + hash aggregates — "
-     "state stays distributed, no Python, no cartesian",
-     ["HashAggregate"], ["Python", "CartesianProduct", "NestedLoop"]),
+    ("gr_pagerank", "below graph.DRIVER_MAX_EDGES the ranks are computed "
+     "on the driver: the plan is a local scan — no shuffle, join or "
+     "Python (the distributed rounds' plan is checked in "
+     "tests/test_pagerank.py)",
+     ["LocalTableScan"], ["Exchange", "Join", "Python", "CartesianProduct"]),
     ("txt_hashed_bow_classifier", "hashed-BoW features are materialized "
      "once before the fit; prediction is a literal-weights projection "
      "over the checkpoint — no shuffle, join or Python",

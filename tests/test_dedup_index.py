@@ -384,8 +384,9 @@ def test_build_and_probe_job_counts(spark, scanned, tmp_path, count_jobs):
     from the written signatures read with their known schema, meta write.
     Dry-run exact-verify probe: meta read with its declared schema, ONE
     batch spread, signature and candidate checkpoints, one collect of
-    the candidate pairs — no schema inference of the unused signature
-    table, no cache stages, no distinct shuffle for the id list."""
+    the candidate pairs — no schema inference of the band table (its id
+    type is in the meta) or of the unused signature table, no cache
+    stages, no distinct shuffle for the id list."""
     if spark.sparkContext.defaultParallelism < 2:
         pytest.skip("the batch spread is a no-op on one core")
     corpus, batch = scanned
@@ -399,7 +400,7 @@ def test_build_and_probe_job_counts(spark, scanned, tmp_path, count_jobs):
             append_survivors=False, exact_verify_with=corpus,
         )
     )
-    assert (build_jobs, probe_jobs) == (7, 9)
+    assert (build_jobs, probe_jobs) == (7, 8)
     assert matches.count() >= 30  # the planted near-dups are found
 
 
@@ -457,3 +458,34 @@ def test_meta_without_bits_probes_full_width(spark, scanned, tmp_path):
         [(3, 64, 16)], "n int, num_perm int, bands int"
     ).write.mode("overwrite").parquet(os.path.join(path, "meta"))
     assert matches() == want and len(want) >= 30
+
+
+def test_meta_without_id_type_probes_identically(
+    spark, scanned, tmp_path, count_jobs
+):
+    """An index whose meta predates the ``id_type`` column reads it as
+    null and infers the band table's schema instead (one more job);
+    survivors and matches are the same."""
+    import os
+
+    corpus, batch = scanned
+    path = str(tmp_path / "noidtype")
+    build_minhash_index(corpus, path, "doc_id")
+    meta = spark.read.parquet(os.path.join(path, "meta"))
+    assert [tuple(r) for r in meta.collect()] == [(3, 64, 16, 0, "bigint")]
+
+    def probe():
+        (surv, m), jobs = count_jobs(
+            lambda: dedup_against_minhash_index(
+                batch, path, "doc_id", threshold=0.5, append_survivors=False
+            )
+        )
+        return sorted(surv.collect()), sorted(m.collect()), jobs
+
+    surv, want, jobs = probe()
+    spark.createDataFrame(
+        [(3, 64, 16, 0)], "n int, num_perm int, bands int, bits int"
+    ).write.mode("overwrite").parquet(os.path.join(path, "meta"))
+    old_surv, got, old_jobs = probe()
+    assert (old_surv, got) == (surv, want) and len(want) >= 30
+    assert old_jobs == jobs + 1

@@ -110,8 +110,8 @@ def test_union_find_min_representative():
 
 def test_checkpoint_dir_gives_same_rows(spark, tmp_path):
     """With a checkpoint dir set, ``utils.materialize`` takes the reliable
-    ``checkpoint()`` path; connected components (both paths) and
-    PageRank must return the same rows as with ``localCheckpoint``."""
+    ``checkpoint()`` path; connected components and PageRank (both
+    paths each) must return the same rows as with ``localCheckpoint``."""
     from dataslicer_spark.operators.graph import pagerank
 
     rng = np.random.default_rng(5)
@@ -126,6 +126,7 @@ def test_checkpoint_dir_gives_same_rows(spark, tmp_path):
         with pytest.MonkeyPatch.context() as mp:
             mp.setattr(graph, "DRIVER_MAX_EDGES", 0)
             out.append(sorted(connected_components(edges).collect()))
+            out.append(sorted(pagerank(edges).collect()))
         return out
 
     sc = spark.sparkContext
@@ -143,6 +144,7 @@ def test_checkpoint_dir_gives_same_rows(spark, tmp_path):
     assert sc.getCheckpointDir() is None
     assert reliable == plain
     assert plain[0] == plain[2]
+    assert plain[1] == plain[3]
 
 
 def test_resolve_duplicate_groups(spark):
