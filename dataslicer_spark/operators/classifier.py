@@ -11,20 +11,25 @@ trajectory is int64 — order-independent sums, no floats anywhere — so
 the n-epoch training run replays bit for bit in the DuckDB oracle
 (chained CTEs), the same device as operators/kmeans.py.
 
-Scale design mirrors every distributed SGD/L-BFGS implementation:
+Scale design: the fit picks its path from the input it sees.
 
-- weights reach the executors each epoch as literal expressions for
+- Inputs up to ``utils.DRIVER_MAX_CELLS`` int64 cells (rows × (d+1),
+  32 MB) train on the driver, as the reference fits its models in
+  pandas/numpy: one bounded Arrow probe (``utils.bounded_arrow``) reads
+  the label and features, and every epoch runs the gradient kernel in
+  numpy — one job for the whole fit instead of one per epoch.
+- Larger inputs mirror every distributed SGD/L-BFGS implementation.
+  Weights reach the executors each epoch as literal expressions for
   ≤ ``EXPR_MAX_FEATURES`` features (scan → filter → partial aggregate,
-  pure JVM whole-stage codegen, no Python) and inside an Arrow kernel
-  beyond — the fit picks the path from the feature count;
-- the wire carries one (d+1)-vector per partition per epoch, never
-  per-row gradients: the map-side partial aggregate, or on the Arrow
-  path one binary row per partition that ``utils.sum_partials`` sums
-  on the driver — one job per epoch, at most
-  ``SUM_PARTIALS_MAX_CELLS`` int64 cells collected at once (a √P tree
-  level pre-sums beyond that);
-- the driver holds d ints — model state is microscopic;
-- prediction is a map-only literal-weights projection.
+  pure JVM whole-stage codegen, no Python) and inside the same Arrow
+  gradient kernel beyond.  The wire carries one (d+1)-vector per
+  partition per epoch, never per-row gradients: the map-side partial
+  aggregate, or on the Arrow path one binary row per partition that
+  ``utils.sum_partials`` sums on the driver — one job per epoch, at
+  most ``SUM_PARTIALS_MAX_CELLS`` int64 cells collected at once (a √P
+  tree level pre-sums beyond that).
+- The driver holds d ints between epochs — model state is microscopic.
+- Prediction is a map-only literal-weights projection.
 
 The wide expressions — the weighted sum, the fit's null filter and the
 expression path's gradient sums — are built as one SQL string each
@@ -47,6 +52,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import utils
 from ..utils import check_col, sql_ident, sum_partials
 
 #: Widest feature set the fit runs as JVM aggregate expressions; wider
@@ -158,21 +164,25 @@ def batch_perceptron_fit(
     see streaming/train.py).
 
     ``label_col`` must hold ±1.  Rows with any NULL feature or label are
-    ignored (mirrored by the oracle's WHERE).  Every epoch re-reads
-    ``df``: hand it a materialized frame (``utils.materialize``) when
-    the source is expensive to re-scan — on one, the Arrow path runs
-    exactly one job per epoch.
+    ignored (mirrored by the oracle's WHERE).
 
     ``lr`` may be a per-epoch integer schedule (len == n_epochs): a
     decaying schedule (e.g. ``[16, 8, 4, 2, 1, 1]``) damps the
     batch-update zigzag the same way a decaying step size does in batch
     gradient descent, while every update stays integer-exact.
 
-    The epoch gradient runs as JVM aggregate expressions (d+1
-    conditional sums, whole-stage codegen) for at most
-    ``EXPR_MAX_FEATURES`` features, and beyond that as an Arrow kernel
-    computing per-partition partial gradients in one int64 matmul.
-    Identical integer math, identical results.
+    The fit picks its path from the input it sees.  One bounded probe
+    (``utils.bounded_arrow``) reads the label and features of inputs up
+    to ``utils.DRIVER_MAX_CELLS`` int64 cells (rows × (d+1)) into the
+    driver, and every epoch runs there in numpy — one job in all.
+    Larger inputs run one job per epoch, and every epoch re-reads
+    ``df``: hand it a materialized frame (``utils.materialize``) when
+    the source is expensive to re-scan.  Their epoch gradient runs as
+    JVM aggregate expressions (d+1 conditional sums, whole-stage
+    codegen) for at most ``EXPR_MAX_FEATURES`` features, and beyond that
+    as an Arrow kernel computing per-partition partial gradients in one
+    int64 matmul — the same kernel the driver path calls.  Identical
+    integer math, identical results on every path.
     """
     check_col([label_col, *feature_cols], df)
     lrs = [int(lr)] * n_epochs if isinstance(lr, int) else [int(v) for v in lr]
@@ -194,8 +204,17 @@ def batch_perceptron_fit(
                 f"{1 + len(feature_cols)} (bias + features)"
             )
         w = [int(v) for v in init_weights]
+    # positional names: mapInPandas cannot address a column named with
+    # a backtick
+    src = clean.selectExpr(
+        f"{sql_ident(label_col)} AS y",
+        *[f"{sql_ident(c)} AS x{j}" for j, c in enumerate(feature_cols)],
+    )
+    tbl = utils.bounded_arrow(src, utils.DRIVER_MAX_CELLS // len(w))
+    if tbl is not None:
+        return _fit_arrow(src, lrs, w, tbl.to_pandas())
     if len(feature_cols) > EXPR_MAX_FEATURES:
-        return _fit_arrow(clean, feature_cols, label_col, lrs, w)
+        return _fit_arrow(src, lrs, w)
     y = sql_ident(label_col)
     for step in lrs:
         miscls = f"{y} * ({_dot(w, feature_cols)}) <= 0"
@@ -212,39 +231,40 @@ def batch_perceptron_fit(
 
 
 def _fit_arrow(
-    clean: DataFrame,
-    feature_cols: list[str],
-    label_col: str,
+    src: DataFrame,
     lrs: list[int],
     w: list[int],
+    rows=None,
 ) -> list[int]:
-    """Epoch loop with Arrow-kernel partial gradients: each partition
-    reduces to one (d+1)-vector and ``sum_partials`` adds them on the
-    driver — one job per epoch, identical int64 math to the expression
-    path (matmul of int64 never leaves numpy's exact integer domain)."""
+    """Epoch loop over one int64 gradient kernel on frames of
+    ``src``'s ``(y, x0, …)`` columns.  With ``rows`` (the driver probe's
+    pandas frame) every epoch calls it on the driver; without, every
+    epoch runs it per partition and ``sum_partials`` adds the partials
+    on the driver — one job per epoch.  Integer sums do not depend on
+    how the rows are split, so both give the expression path's weights
+    (matmul of int64 never leaves numpy's exact integer domain)."""
     import numpy as np
 
-    # positional names: mapInPandas cannot address a column named with
-    # a backtick
-    src = clean.selectExpr(
-        f"{sql_ident(label_col)} AS y",
-        *[f"{sql_ident(c)} AS x{j}" for j, c in enumerate(feature_cols)],
-    )
-    d = len(feature_cols)
+    d = len(w) - 1
+
+    # nested, not module-level: a closure ships to the Python workers by
+    # value, so they need not import this package
+    def grad(batches, wa):
+        g = np.zeros(d + 1, dtype=np.int64)
+        for pdf in batches:
+            A = pdf.to_numpy(dtype=np.int64)
+            y, X = A[:, 0], A[:, 1:]
+            m = y * (wa[0] + X @ wa[1:]) <= 0
+            g[0] += y[m].sum()
+            g[1:] += (X[m] * y[m, None]).sum(axis=0)
+        return g
+
     for step in lrs:
         wa = np.asarray(w, dtype=np.int64)
-
-        def grad(batches):
-            g = np.zeros(d + 1, dtype=np.int64)
-            for pdf in batches:
-                A = pdf.to_numpy(dtype=np.int64)
-                y, X = A[:, 0], A[:, 1:]
-                m = y * (wa[0] + X @ wa[1:]) <= 0
-                g[0] += y[m].sum()
-                g[1:] += (X[m] * y[m, None]).sum(axis=0)
-            return g
-
-        g = sum_partials(src, grad, d + 1)
+        if rows is not None:
+            g = grad([rows], wa)
+        else:
+            g = sum_partials(src, lambda batches: grad(batches, wa), d + 1)
         w = [wj + step * int(gj) for wj, gj in zip(w, g)]
     return w
 

@@ -127,6 +127,18 @@ def _read_meta(
     return row.n, row.num_perm, row.bands, row.bits or 0, row.id_type
 
 
+def _read_stored(
+    spark: SparkSession, path: str, table: str, id_type: str | None, rest: str
+) -> DataFrame:
+    """The index's ``table``, read with the declared schema
+    ``id <id_type>, <rest>`` (no parquet schema-inference job); a meta
+    without ``id_type`` keeps the inferred read."""
+    reader = spark.read
+    if id_type:
+        reader = reader.schema(f"id {id_type}, {rest}")
+    return reader.parquet(os.path.join(path, table))
+
+
 def dedup_against_minhash_index(
     new_df: DataFrame,
     path: str,
@@ -194,11 +206,9 @@ def dedup_against_minhash_index(
     )
     bands_new = band_buckets(sigs_new, num_perm, bands, bits)
 
-    reader = spark.read
-    if id_type:
-        # declared schema: no parquet schema-inference job
-        reader = reader.schema(f"id {id_type}, band int, bucket bigint")
-    stored_bands = reader.parquet(os.path.join(path, _BANDS))
+    stored_bands = _read_stored(
+        spark, path, _BANDS, id_type, "band int, bucket bigint"
+    )
     # both the verify join and the candidate-id fetch below consume this
     # bounded (|batch|·matches) frame — checkpoint it so the stored band
     # table is scanned once, not once per consumer
@@ -276,7 +286,9 @@ def dedup_against_minhash_index(
             .select("new_id", "index_id", "jaccard")
         )
     else:
-        stored_sigs = spark.read.parquet(os.path.join(path, _SIGS))
+        stored_sigs = _read_stored(
+            spark, path, _SIGS, id_type, "signature array<bigint>"
+        )
         est = (
             cand.join(
                 F.broadcast(

@@ -8,13 +8,14 @@ is one duplicate group, and the group's canonical document is the one
 that survives.  The reference has no analogue (its dedup is pandas
 ``drop_duplicates``); this is the set-based Spark formulation.
 
-The operator picks its path from the graph it sees: a bounded
-``limit()`` probe collects graphs of at most ``DRIVER_MAX_EDGES`` edges
-into :func:`union_find` (one action, no propagation rounds), and larger
-graphs run min-label propagation with pointer jumping.  Each round every
-node takes the min representative over {itself} ∪ neighbors, then
-shortcuts ``rep ← rep(rep)`` — the pointer jump halves chain lengths, so
-rounds are O(log diameter), each a plain hash shuffle on the node id.
+The operator picks its path from the graph it sees: a bounded Arrow
+probe (``utils.bounded_arrow``) reads graphs of at most
+``DRIVER_MAX_EDGES`` edges into :func:`union_find` (one action, no
+propagation rounds), and larger graphs run min-label propagation with
+pointer jumping.  Each round every node takes the min representative
+over {itself} ∪ neighbors, then shortcuts ``rep ← rep(rep)`` — the
+pointer jump halves chain lengths, so rounds are O(log diameter), each
+a plain hash shuffle on the node id.
 Both paths give every node its component's smallest id.  The DBSCAN
 merge (``clustering.py``) runs the same two paths over its local-cluster
 keys.  PageRank makes the same choice through the same probe: up to
@@ -33,12 +34,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..utils import local_df, materialize
+from ..utils import bounded_arrow, local_df, materialize
 
 #: Driver bound of ``connected_components`` (in undirected edges) and
 #: ``pagerank`` (in distinct directed edges): graphs up to this size
-#: (≈16 MB of long pairs) are collected and solved on the driver; larger
-#: ones run the distributed rounds.
+#: (≈16 MB of long pairs) are probed into the driver and solved there;
+#: larger ones run the distributed rounds.
 DRIVER_MAX_EDGES = 1_000_000
 
 
@@ -71,16 +72,6 @@ def union_find(groups) -> dict:
     return {k: find(k) for k in parent}
 
 
-def _bounded_rows(df: DataFrame, cap: int) -> list | None:
-    """The rows of ``df`` if it holds at most ``cap`` of them, else
-    ``None`` — one ``limit(cap + 1)`` collect, so no driver collect is
-    unbounded.  The driver paths of :func:`connected_components` and
-    :func:`pagerank` run on its rows; ``None`` sends them to their
-    distributed rounds."""
-    rows = df.limit(cap + 1).collect()
-    return rows if len(rows) <= cap else None
-
-
 def _undirected_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Distinct ``(u, v)`` in both directions of every edge, self-loops
     and NULL endpoints dropped, materialized once: every round of the
@@ -110,18 +101,18 @@ def connected_components(
     Vertices appear only via edges — isolated vertices (no pair) are the
     caller's concern (they are their own representative by definition).
 
-    A bounded ``limit()`` probe collects graphs of at most
-    ``DRIVER_MAX_EDGES`` edges into :func:`union_find` — one action, no
-    propagation rounds; near-dup graphs are orders of magnitude smaller
-    than the corpus, so this is the common case even at large corpus
-    scale.  Larger graphs fall back to the distributed rounds, so no
+    A bounded Arrow probe (``utils.bounded_arrow``) reads graphs of at
+    most ``DRIVER_MAX_EDGES`` edges into :func:`union_find` — one
+    action, no propagation rounds; near-dup graphs are orders of
+    magnitude smaller than the corpus, so this is the common case even
+    at large corpus scale.  Larger graphs fall back to the distributed rounds, so no
     collect is unbounded.  Both paths give identical labels.
     """
     nbrs = _undirected_edges(edges, src, dst)
     # nbrs holds BOTH directions of every undirected edge, so the probe
     # budget is 2× the edge cap
-    rows = _bounded_rows(nbrs, 2 * DRIVER_MAX_EDGES)
-    if rows is not None:
+    tbl = bounded_arrow(nbrs, 2 * DRIVER_MAX_EDGES)
+    if tbl is not None:
         node_type = nbrs.schema["u"].dataType
         schema = T.StructType(
             [
@@ -129,7 +120,8 @@ def connected_components(
                 T.StructField("rep", node_type),
             ]
         )
-        mapping = list(union_find(rows).items())
+        pairs = zip(tbl.column("u").to_pylist(), tbl.column("v").to_pylist())
+        mapping = list(union_find(pairs).items())
         return local_df(edges.sparkSession, mapping, schema)
     labels = materialize(
         nbrs.select(F.col("u").alias("node"))
@@ -197,9 +189,10 @@ def pagerank(
     PageRank (Page et al., 1999) to within the quantization.
 
     Two paths, picked from the graph it sees (like
-    :func:`connected_components`): a bounded ``limit()`` probe collects
-    graphs of at most ``DRIVER_MAX_EDGES`` distinct edges and runs the
-    rounds in numpy on the driver — one action, the result a local
+    :func:`connected_components`): a bounded Arrow probe
+    (``utils.bounded_arrow``) reads graphs of at most
+    ``DRIVER_MAX_EDGES`` distinct edges as numpy columns and runs the
+    rounds on the driver — one action, the result a local
     table of at most ⌈nodes / ``maxRecordsPerBatch``⌉ partitions.
     Larger graphs run the canonical distributed PageRank: per iteration
     one shuffle of ranks on the join key and one of contributions on the
@@ -223,9 +216,9 @@ def pagerank(
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     ).filter(F.col(src).isNotNull() & F.col(dst).isNotNull()).distinct()
-    rows = _bounded_rows(e, DRIVER_MAX_EDGES)
-    if rows is not None:
-        return _pagerank_driver(e, rows, n_iter, d_num, d_den, scale)
+    tbl = bounded_arrow(e, DRIVER_MAX_EDGES)
+    if tbl is not None:
+        return _pagerank_driver(e, tbl, n_iter, d_num, d_den, scale)
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # materialize the prepared graph ONCE (like connected_components):
     # every iteration references it, and a lazy plan would re-run the
@@ -277,30 +270,28 @@ def pagerank(
 
 
 def _pagerank_driver(
-    e: DataFrame, rows: list, n_iter: int, d_num: int, d_den: int, scale: int
+    e: DataFrame, tbl, n_iter: int, d_num: int, d_den: int, scale: int
 ) -> DataFrame:
-    """:func:`pagerank`'s integer rounds in numpy over the collected
-    distinct ``(src, dst)`` rows — the same floor divisions in int64, so
-    the ranks are bit-identical to the distributed plan's."""
+    """:func:`pagerank`'s integer rounds in numpy over the probed
+    distinct ``(src, dst)`` Arrow table — the same floor divisions in
+    int64, so the ranks are bit-identical to the distributed plan's."""
     import numpy as np
+    import pandas as pd
 
     spark = e.sparkSession
-    node_type = e.schema["src"].dataType
     schema = T.StructType(
         [
-            T.StructField("node", node_type),
+            T.StructField("node", e.schema["src"].dataType),
             T.StructField("rank", T.LongType()),
         ]
     )
-    if not rows:
+    m = tbl.num_rows
+    if not m:
         return local_df(spark, [], schema)
-    m = len(rows)
-    ends = [r[0] for r in rows] + [r[1] for r in rows]
-    # numeric ids sort natively; any other id type as Python objects
-    keys = (
-        np.array(ends)
-        if isinstance(node_type, T.NumericType)
-        else np.fromiter(ends, dtype=object, count=2 * m)
+    # numeric ids come back as native arrays, any other id type as
+    # Python objects; np.unique sorts either
+    keys = np.concatenate(
+        [tbl.column("src").to_numpy(), tbl.column("dst").to_numpy()]
     )
     nodes, idx = np.unique(keys, return_inverse=True)
     s_i, d_i = idx[:m], idx[m:]
@@ -319,8 +310,8 @@ def _pagerank_driver(
         spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     )
     parts = -(-n // per_part) if per_part > 0 else 1
-    return local_df(
-        spark, list(zip(nodes.tolist(), r.tolist())), schema
+    return spark.createDataFrame(
+        pd.DataFrame({"node": nodes, "rank": r}), schema
     ).coalesce(parts)
 
 

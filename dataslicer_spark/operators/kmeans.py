@@ -30,16 +30,22 @@ Scale design:
   ONE SQL string over a once-projected quantized column — a ``Column``
   tree of k×d ``F.lit`` nodes costs one Py4J round trip per node
   (measured 0.7–1.0 s of driver time at 8×64 before Spark saw a plan);
-- the update ships only partial sums: an Arrow kernel reduces each
-  partition to k·(d+1) int64 cells (coordinate sums and the count per
-  cluster), one binary row that ``utils.sum_partials`` sums on the
-  driver — the wire carries ``partitions · k · (d+1)`` cells, never
-  ``n · d``, and each iteration is ONE job with no shuffle;
+- the fit picks its update path from the input it sees: vectors of up
+  to ``utils.DRIVER_MAX_CELLS`` int64 cells (rows × d, 32 MB) are read
+  into the driver by one bounded Arrow probe (``utils.bounded_arrow``)
+  and all ``n_iter`` updates run there in numpy — the seed collect and
+  the probe are the fit's only two jobs;
+- larger inputs ship only partial sums: the same assign-and-accumulate
+  kernel reduces each partition to k·(d+1) int64 cells (coordinate sums
+  and the count per cluster), one binary row that ``utils.sum_partials``
+  sums on the driver — the wire carries ``partitions · k · (d+1)``
+  cells, never ``n · d``, and each iteration is ONE job with no
+  shuffle; the driver collects at most ``SUM_PARTIALS_MAX_CELLS``
+  partial cells at once (a √P tree level pre-sums beyond that), and the
+  projected vectors are materialized once, so the iterations re-read
+  that checkpoint, not the source;
 - the driver holds k·d ints per iteration (microscopic), exactly like
-  MLlib's Lloyd's loop, and collects at most ``SUM_PARTIALS_MAX_CELLS``
-  partial cells at once (a √P tree level pre-sums beyond that);
-- the projected vectors are materialized once, so the iterations
-  re-read that checkpoint, not the source.
+  MLlib's Lloyd's loop.
 
 Overflow bounds: |x| ≤ 2 and fp_bits = 20 give |X| ≤ 2²¹, squared
 diffs ≤ 2⁴⁴, and d = 64 sums ≤ 2⁵⁰ — inside int64 with headroom.
@@ -54,6 +60,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import utils
 from ..utils import check_col, materialize, spread, sql_ident, sum_partials
 
 FP_BITS_DEFAULT = 20
@@ -125,62 +132,80 @@ def kmeans_fit(
 ) -> list[list[int]]:
     """Lloyd's iterations; returns the final centroids (k×d ints in the
     ``fp_bits`` scale).  Empty clusters keep their previous centroid
-    (mirrored by the oracle's UNION ALL branch)."""
+    (mirrored by the oracle's UNION ALL branch).
+
+    After the k-row seed collect, the fit picks its path from the input
+    it sees: one bounded probe (``utils.bounded_arrow``) reads vectors
+    of up to ``utils.DRIVER_MAX_CELLS`` int64 cells (rows × d) into the
+    driver, and the ``n_iter`` updates run there — two jobs for any
+    ``n_iter``.  Larger inputs are materialized once and each update is
+    one job.  Both paths call the same assign-and-accumulate kernel, so
+    the centroids are identical."""
     check_col([id_col, vec_col], df)
     centroids = np.asarray(
         init_centroids(df, id_col, vec_col, k, fp_bits), dtype=np.int64
     )
     k, dim = centroids.shape  # fewer than k rows → fewer centroids
-    # materialize the projected vectors once — n_iter jobs read this one
-    # column instead of re-scanning the source, and sum_partials probes
-    # its partition count without running a job.  spread first (guide
-    # §2.5): the per-iteration Arrow kernel runs at this frame's
-    # partitioning, and a one-row-group scan is one task — guarded no-op
-    # on already-wide inputs
-    src = materialize(
-        spread(
-            df.select(F.col(sql_ident(vec_col)).alias("__v"))
-            .filter(F.col("__v").isNotNull())
-        )
-    )
     scale = float(1 << fp_bits)
-    sc = df.sparkSession.sparkContext
     # (chunk × k × dim) int64 distance temporary bounded to ~16 MB
     chunk_rows = max(1, 2_000_000 // max(k * dim, 1))
 
+    # nested, not module-level: a closure ships to the Python workers by
+    # value, so they need not import this package.  The identical integer
+    # math of the literal HOF argmin (floor-quantize, int64 squared L2,
+    # first-min tie-break) in vectorized numpy — HOFs are CodegenFallback
+    # (interpreted), measured ~8 s per iteration at 2k×64 — reducing its
+    # rows to k × (d + 1) cells: per-cluster coordinate sums, then the
+    # count
+    def partial_stats(batches: Iterator[pd.DataFrame], C) -> np.ndarray:
+        acc = np.zeros((k, dim + 1), dtype=np.int64)
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            X = np.floor(
+                np.stack(pdf["__v"].to_numpy()).astype(np.float64) * scale
+            ).astype(np.int64)
+            for lo in range(0, len(X), chunk_rows):
+                xb = X[lo : lo + chunk_rows]
+                d2 = ((xb[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+                assign = d2.argmin(axis=1)  # first min = smallest id
+                for j in np.unique(assign):
+                    sel = xb[assign == j]
+                    acc[j, :dim] += sel.sum(axis=0)
+                    acc[j, dim] += len(sel)
+        return acc.reshape(-1)
+
+    vecs = df.select(F.col(sql_ident(vec_col)).alias("__v")).filter(
+        F.col("__v").isNotNull()
+    )
+    tbl = utils.bounded_arrow(vecs, utils.DRIVER_MAX_CELLS // max(dim, 1))
+    if tbl is not None:
+        rows = tbl.to_pandas()
+
+        def stats(C: np.ndarray) -> np.ndarray:
+            return partial_stats([rows], C)
+
+    else:
+        # materialize the projected vectors once — n_iter jobs read this
+        # one column instead of re-scanning the source, and sum_partials
+        # probes its partition count without running a job.  spread
+        # first (guide §2.5): the per-iteration Arrow kernel runs at this
+        # frame's partitioning, and a one-row-group scan is one task —
+        # guarded no-op on already-wide inputs
+        src = materialize(spread(vecs))
+        sc = df.sparkSession.sparkContext
+
+        def stats(C: np.ndarray) -> np.ndarray:
+            bc = sc.broadcast(C)
+            acc = sum_partials(
+                src, lambda batches: partial_stats(batches, bc.value),
+                k * (dim + 1),
+            )
+            bc.unpersist()
+            return acc
+
     for _ in range(n_iter):
-        # Arrow kernel, not a JVM HOF argmin: higher-order functions are
-        # CodegenFallback (interpreted), and a k×d literal expression is
-        # re-parsed and re-evaluated per exploded row — measured ~8 s per
-        # iteration at 2k×64; this kernel runs the identical integer math
-        # (floor-quantize, int64 squared L2, first-min tie-break) in
-        # vectorized numpy and reduces each PARTITION to k × (d + 1)
-        # cells: per-cluster coordinate sums, then the count
-        bc = sc.broadcast(centroids)
-
-        def partial_stats(batches: Iterator[pd.DataFrame]) -> np.ndarray:
-            C = bc.value
-            acc = np.zeros((k, dim + 1), dtype=np.int64)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.floor(
-                    np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-                    * scale
-                ).astype(np.int64)
-                for lo in range(0, len(X), chunk_rows):
-                    xb = X[lo : lo + chunk_rows]
-                    d2 = ((xb[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-                    assign = d2.argmin(axis=1)  # first min = smallest id
-                    for j in np.unique(assign):
-                        sel = xb[assign == j]
-                        acc[j, :dim] += sel.sum(axis=0)
-                        acc[j, dim] += len(sel)
-            return acc.reshape(-1)
-
-        acc = sum_partials(src, partial_stats, k * (dim + 1))
-        acc = acc.reshape(k, dim + 1)
-        bc.unpersist()
+        acc = stats(centroids).reshape(k, dim + 1)
         n = acc[:, dim]
         nz = n > 0  # empty clusters keep their position
         # numpy // on int64 is floor division, exact like the oracle's

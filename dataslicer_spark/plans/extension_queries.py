@@ -3538,8 +3538,11 @@ def emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     an int64 (quantized coordinates, integer squared distances, exact
     floor-division centroid means), so the DuckDB oracle replays the full
     iterative trajectory as chained CTEs — init, three updates, final
-    assignment — bit for bit.  The returned plan is map-only (centroids
-    inline as literals after the fit's bounded k×d driver collects)."""
+    assignment — bit for bit.  The fit runs two jobs: the k-row seed
+    collect and one bounded Arrow probe of the vectors, whose three
+    updates then run on the driver (every sf here fits
+    ``utils.DRIVER_MAX_CELLS``; larger inputs run one job per update).
+    The returned plan is map-only (centroids inline as literals)."""
     from ..operators.kmeans import kmeans
 
     emb = (
@@ -4252,7 +4255,11 @@ def txt_hashed_bow_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets through hash collisions (reaches ≈0.92 train accuracy; the
     collisions are why it is not 1.0 — the honest hashing-trick
     trade-off).  Training remains integer-exact, so the oracle replays
-    featurization AND all 8 epochs as chained CTEs."""
+    featurization AND all 8 epochs as chained CTEs.  The features are
+    materialized once: the fit's one bounded Arrow probe and the final
+    write both read the checkpoint, and all 8 epochs run on the driver
+    (every sf here fits ``utils.DRIVER_MAX_CELLS``; larger inputs run
+    one job per epoch)."""
     from ..operators.classifier import (
         batch_perceptron_fit,
         hashed_bow_features,
@@ -4268,7 +4275,7 @@ def txt_hashed_bow_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(1),
     ).otherwise(F.lit(-1)).alias("y")
     # label and features in one projection of the scan, derived once:
-    # the epochs and the final write read the checkpoint
+    # the fit's probe and the final write read the checkpoint
     feats = materialize(
         hashed_bow_features(
             docs.select("doc_id", "text", y), "doc_id", "text", dim=_HBOW_DIM
@@ -4364,10 +4371,11 @@ def gr_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer PageRank (operators/graph.pagerank) over the bidirected
     customer↔supplier purchase graph (distinct lineitem⋈orders pairs;
     node = 2·custkey / 2·suppkey+1).  Up to ``graph.DRIVER_MAX_EDGES``
-    distinct edges (every sf here) one bounded collect feeds the rounds
-    on the driver and the result is a local table; larger graphs run the
-    iterative JOIN-shaped plan — per round one shuffle of ranks on the
-    join key, one of contributions on the destination.  Both paths give
+    distinct edges (sf0.01 and below; sf0.1 has 1,173,742) one bounded
+    Arrow probe feeds the rounds on the driver and the result is a local
+    table; larger graphs run the iterative JOIN-shaped plan — per round
+    one shuffle of ranks on the join key, one of contributions on the
+    destination.  Both paths give
     the same ranks: fixed-point int64 makes the 3-round trajectory
     exact, so the DuckDB oracle replays it as chained CTEs."""
     from ..operators.graph import pagerank

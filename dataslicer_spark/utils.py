@@ -410,6 +410,36 @@ def materialize(df: DataFrame) -> DataFrame:
 #: 2²² cells = 32 MB of partial vectors collected at once.
 SUM_PARTIALS_MAX_CELLS = 1 << 22
 
+#: Driver bound of the iterative fits' driver paths, in int64 cells
+#: (rows × cells per row): inputs up to 2²² cells (32 MB, the same
+#: budget as ``SUM_PARTIALS_MAX_CELLS``) are probed into the driver and
+#: fitted in numpy; larger ones run one Spark job per iteration.
+DRIVER_MAX_CELLS = 1 << 22
+
+
+def bounded_arrow(df: DataFrame, cap: int):
+    """``df`` as a ``pyarrow.Table`` if it holds at most ``cap`` rows,
+    else ``None`` — one ``limit(cap + 1).toArrow()`` job, so no driver
+    collect is unbounded, and the rows arrive as Arrow columns rather
+    than pickled ``Row`` objects.  A negative ``cap`` fits nothing and
+    runs no job.
+
+    The job runs under the description ``"<caller>:bounded_probe"``
+    (``<caller>`` the calling function's name); the previous description
+    is restored afterwards and the job group is left alone."""
+    import sys
+
+    if cap < 0:
+        return None
+    sc = df.sparkSession.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"{sys._getframe(1).f_code.co_name}:bounded_probe")
+    try:
+        tbl = df.limit(cap + 1).toArrow()
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+    return tbl if tbl.num_rows <= cap else None
+
 
 def sum_partials(df: DataFrame, kernel, width: int):
     """Exact sum over partitions of one int64 vector each, in one job.

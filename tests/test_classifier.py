@@ -141,12 +141,15 @@ def test_substring_count_literal_only(spark):
 
 
 def test_engines_agree_and_validate(toy, monkeypatch):
-    """The fit takes the expression path at ≤ ``EXPR_MAX_FEATURES``
-    features and the Arrow kernel beyond; forcing each path through the
-    bound gives identical weights."""
+    """Above the driver bound (forced to −1 here) the fit takes the
+    expression path at ≤ ``EXPR_MAX_FEATURES`` features and the Arrow
+    kernel beyond; forcing each path through the bound gives identical
+    weights."""
+    from dataslicer_spark import utils
     from dataslicer_spark.operators import classifier
 
     X, y, df = toy
+    monkeypatch.setattr(utils, "DRIVER_MAX_CELLS", -1)
     sched = [4, 2, 1]
     calls = []
     orig = classifier._fit_arrow
@@ -164,11 +167,15 @@ def test_engines_agree_and_validate(toy, monkeypatch):
     assert a == b
 
 
-def test_wide_fit_runs_one_job_per_epoch(spark, count_jobs):
-    """The Arrow path (> ``EXPR_MAX_FEATURES`` = 16 features) reduces
-    each epoch's partial gradients on the driver: one job per epoch on a
+def test_wide_fit_runs_one_job_per_epoch(spark, count_jobs, monkeypatch):
+    """Above the driver bound (forced to −1, which runs no probe job),
+    the Arrow path (> ``EXPR_MAX_FEATURES`` = 16 features) reduces each
+    epoch's partial gradients on the driver: one job per epoch on a
     materialized input, and the same weights as the numpy replay."""
+    from dataslicer_spark import utils
     from dataslicer_spark.utils import materialize
+
+    monkeypatch.setattr(utils, "DRIVER_MAX_CELLS", -1)
 
     rng = np.random.default_rng(5)
     X = rng.integers(-3, 4, size=(150, 20))
@@ -267,15 +274,18 @@ def test_sql_text_paths_quote_column_names(spark, toy):
     """The fit, predict and featurize expressions are SQL text: column
     names with spaces, dashes and backticks give the same results as
     plain names."""
+    from dataslicer_spark import utils
     from dataslicer_spark.operators import classifier
     from dataslicer_spark.operators.classifier import hashed_bow_features
 
     _, _, df = toy
     odd = ["a b", "x-y", "q`t"]
     df_odd = df.toDF("id", "l-y", *odd)
-    for bound in (16, 0):  # expression path, then the Arrow kernel
+    # expression path, the Arrow kernel, then the driver path
+    for bound, cells in ((16, -1), (0, -1), (16, utils.DRIVER_MAX_CELLS)):
         with pytest.MonkeyPatch.context() as mp:
             mp.setattr(classifier, "EXPR_MAX_FEATURES", bound)
+            mp.setattr(utils, "DRIVER_MAX_CELLS", cells)
             w = batch_perceptron_fit(df, ["a", "b", "c"], "y", n_epochs=3)
             assert batch_perceptron_fit(df_odd, odd, "l-y", n_epochs=3) == w
     want = {r.id: r.score for r in perceptron_predict(df, ["a", "b", "c"], w).collect()}
@@ -294,3 +304,93 @@ def test_sql_text_paths_quote_column_names(spark, toy):
     assert sorted(tuple(r) for r in quoted.collect()) == sorted(
         tuple(r) for r in plain.collect()
     )
+
+
+def _path_spy(monkeypatch):
+    """Record, per fit, whether the driver probe returned rows."""
+    from dataslicer_spark import utils
+
+    probes = []
+    orig = utils.bounded_arrow
+
+    def spy(df, cap):
+        out = orig(df, cap)
+        probes.append(out is not None)
+        return out
+
+    monkeypatch.setattr(utils, "bounded_arrow", spy)
+    return probes
+
+
+def test_three_paths_give_identical_weights(toy, monkeypatch):
+    """Driver, expression and Arrow paths give the numpy replay's
+    weights, over an ``lr`` schedule and when resuming from
+    ``init_weights``."""
+    from dataslicer_spark import utils
+    from dataslicer_spark.operators import classifier
+
+    X, y, df = toy
+    X, y = X.astype(np.int64), y.astype(np.int64)
+    Xb = np.hstack([np.ones((len(X), 1), dtype=np.int64), X])
+
+    def replay(w, schedule):
+        w = np.asarray(w, dtype=np.int64)
+        for lr in schedule:
+            m = y * (Xb @ w) <= 0
+            w = w + lr * (Xb[m] * y[m, None]).sum(axis=0)
+        return [int(v) for v in w]
+
+    def fits():
+        first = batch_perceptron_fit(
+            df, ["a", "b", "c"], "y", n_epochs=3, lr=[8, 2, 1]
+        )
+        resumed = batch_perceptron_fit(
+            df, ["a", "b", "c"], "y", n_epochs=2, lr=3, init_weights=first
+        )
+        return first, resumed
+
+    probes = _path_spy(monkeypatch)
+    want = replay([0] * 4, [8, 2, 1])
+    want = (want, replay(want, [3, 3]))
+    assert fits() == want
+    assert probes == [True, True]  # driver path
+    monkeypatch.setattr(utils, "DRIVER_MAX_CELLS", 0)
+    assert fits() == want  # expression path
+    monkeypatch.setattr(classifier, "EXPR_MAX_FEATURES", 2)
+    assert fits() == want  # Arrow kernel
+    assert probes == [True, True] + [False] * 4
+
+
+def test_driver_path_runs_one_job(spark, toy, count_jobs, monkeypatch):
+    """On a materialized input the driver path runs only its probe: one
+    job for every epoch; forced over the bound, the expression path runs
+    the probe plus at least one job per epoch."""
+    from dataslicer_spark import utils
+    from dataslicer_spark.utils import materialize
+
+    _, _, df = toy
+    ck = materialize(df.repartition(3))
+    fit = lambda: batch_perceptron_fit(ck, ["a", "b", "c"], "y", n_epochs=5)
+    w, jobs = count_jobs(fit)
+    assert jobs == 1
+    monkeypatch.setattr(utils, "DRIVER_MAX_CELLS", 0)
+    w_dist, jobs_dist = count_jobs(fit)
+    assert w_dist == w and jobs_dist >= 1 + 5
+
+
+def test_driver_bound_is_the_cell_count(toy, monkeypatch):
+    """``DRIVER_MAX_CELLS`` counts rows × (features + 1) int64 cells: a
+    bound equal to the input's cell count takes the driver path, one
+    less falls back, with the same weights."""
+    from dataslicer_spark import utils
+
+    X, _, df = toy
+    cells = len(X) * (X.shape[1] + 1)
+    probes = _path_spy(monkeypatch)
+    fit = lambda: batch_perceptron_fit(df, ["a", "b", "c"], "y", n_epochs=3)
+    monkeypatch.setattr(utils, "DRIVER_MAX_CELLS", cells)
+    at = fit()
+    monkeypatch.setattr(utils, "DRIVER_MAX_CELLS", cells - 1)
+    below = fit()
+    assert probes == [True, False]
+    assert at == below

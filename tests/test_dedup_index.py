@@ -460,12 +460,33 @@ def test_meta_without_bits_probes_full_width(spark, scanned, tmp_path):
     assert matches() == want and len(want) >= 30
 
 
+def test_estimate_probe_reads_signatures_without_inference(
+    spark, scanned, tmp_path, count_jobs
+):
+    """The estimate-only probe (no ``exact_verify_with``) reads the
+    stored signature table with the declared ``id <id_type>, signature
+    array<bigint>`` schema: 7 jobs, one fewer than an inferred read of
+    the signature table costs."""
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("the batch spread is a no-op on one core")
+    corpus, batch = scanned
+    path = str(tmp_path / "estjobs")
+    build_minhash_index(corpus, path, "doc_id")
+    (_surv, matches), jobs = count_jobs(
+        lambda: dedup_against_minhash_index(
+            batch, path, "doc_id", threshold=0.5, append_survivors=False
+        )
+    )
+    assert jobs == 7
+    assert matches.count() >= 30
+
+
 def test_meta_without_id_type_probes_identically(
     spark, scanned, tmp_path, count_jobs
 ):
     """An index whose meta predates the ``id_type`` column reads it as
-    null and infers the band table's schema instead (one more job);
-    survivors and matches are the same."""
+    null and infers the band and signature tables' schemas instead (two
+    more jobs); survivors and matches are the same."""
     import os
 
     corpus, batch = scanned
@@ -488,4 +509,4 @@ def test_meta_without_id_type_probes_identically(
     ).write.mode("overwrite").parquet(os.path.join(path, "meta"))
     old_surv, got, old_jobs = probe()
     assert (old_surv, got) == (surv, want) and len(want) >= 30
-    assert old_jobs == jobs + 1
+    assert old_jobs == jobs + 2

@@ -83,9 +83,13 @@ def test_kmeans_partitioning_invariance(vecs):
     assert a == b == c
 
 
-def test_kmeans_fit_runs_one_job_per_iteration(vecs, count_jobs):
-    """Each Lloyd's update is one job: the partition partials reduce on
-    the driver, with no shuffle behind them."""
+def test_kmeans_fit_runs_one_job_per_iteration(vecs, count_jobs, monkeypatch):
+    """Above the driver bound (forced to −1) each Lloyd's update is one
+    job: the partition partials reduce on the driver, with no shuffle
+    behind them."""
+    from dataslicer_spark import utils
+
+    monkeypatch.setattr(utils, "DRIVER_MAX_CELLS", -1)
     _, df = vecs
     _, one = count_jobs(lambda: kmeans_fit(df, "vec_id", "embedding", k=4, n_iter=1))
     _, four = count_jobs(lambda: kmeans_fit(df, "vec_id", "embedding", k=4, n_iter=4))
@@ -334,3 +338,140 @@ def test_kmeans_assign_quotes_column_names(vecs):
         assert kmeans_fit(odd, f"{name} id", name, k=4, n_iter=1) == cents
         out = kmeans_assign(odd, wide, name)
         assert out.columns == [f"{name} id", name, "cluster", "d2"]
+
+
+def _probe_spy(mp):
+    """Record, per fit, whether the driver probe returned rows."""
+    from dataslicer_spark import utils
+
+    probes = []
+    orig = utils.bounded_arrow
+
+    def spy(frame, cap):
+        out = orig(frame, cap)
+        probes.append(out is not None)
+        return out
+
+    mp.setattr(utils, "bounded_arrow", spy)
+    return probes
+
+
+def _fit_both_paths(df, **kw):
+    """``kmeans_fit(df, "vec_id", "embedding", **kw)`` on the driver
+    path (default bound) and the distributed updates (bound −1),
+    asserted identical; a spy on the probe checks which path ran."""
+    from dataslicer_spark import utils
+
+    with pytest.MonkeyPatch.context() as mp:
+        probes = _probe_spy(mp)
+        drv = kmeans_fit(df, "vec_id", "embedding", **kw)
+        mp.setattr(utils, "DRIVER_MAX_CELLS", -1)
+        dist = kmeans_fit(df, "vec_id", "embedding", **kw)
+    assert probes == [True, False]
+    assert drv == dist
+    return drv
+
+
+def test_kmeans_paths_identical_centroids(spark, vecs):
+    """Driver and distributed updates give the numpy replay's centroids,
+    through an empty cluster and with fewer rows than k."""
+    rows, df = vecs
+    C_np, _, _ = _numpy_kmeans(
+        [r[0] for r in rows], [r[1] for r in rows], k=5, n_iter=3
+    )
+    got = _fit_both_paths(df, k=5, n_iter=3)
+    assert np.array_equal(np.asarray(got), C_np)
+
+    # duplicate seeds: the second of two equal centroids never wins a
+    # point (ties go to the smaller id) and keeps its position
+    dup = spark.createDataFrame(
+        [(i, [0.0, 0.0] if i < 6 else [100.0, 100.0]) for i in range(8)],
+        "vec_id long, embedding array<double>",
+    )
+    got = _fit_both_paths(dup, k=4, n_iter=2)
+    ordered = dup.orderBy("vec_id").collect()
+    C_np, assign, _ = _numpy_kmeans(
+        [r[0] for r in ordered], [list(r[1]) for r in ordered], 4, 2
+    )
+    assert len(set(assign.tolist())) < 4  # some cluster was empty
+    assert np.array_equal(np.asarray(got), C_np)
+
+    few = dup.filter("vec_id IN (1, 6, 7)")
+    got = _fit_both_paths(few, k=5, n_iter=2)
+    assert len(got) == 3
+
+
+def test_kmeans_fit_runs_two_jobs(vecs, count_jobs):
+    """On the driver path the fit runs the k-row seed collect and the
+    probe, whatever ``n_iter`` is."""
+    _, df = vecs
+    for n_iter in (1, 4):
+        _, jobs = count_jobs(
+            lambda: kmeans_fit(df, "vec_id", "embedding", k=4, n_iter=n_iter)
+        )
+        assert jobs == 2
+
+
+def test_kmeans_driver_bound_is_the_cell_count(vecs, monkeypatch):
+    """``DRIVER_MAX_CELLS`` counts rows × d vector cells: a bound equal
+    to the input's cell count takes the driver path, one less falls
+    back, with the same centroids."""
+    from dataslicer_spark import utils
+
+    rows, df = vecs
+    cells = len(rows) * len(rows[0][1])
+    probes = _probe_spy(monkeypatch)
+    monkeypatch.setattr(utils, "DRIVER_MAX_CELLS", cells)
+    at = kmeans_fit(df, "vec_id", "embedding", k=4, n_iter=2)
+    monkeypatch.setattr(utils, "DRIVER_MAX_CELLS", cells - 1)
+    below = kmeans_fit(df, "vec_id", "embedding", k=4, n_iter=2)
+    assert probes == [True, False]
+    assert at == below
+
+
+def _clean_seed_rows(bad: dict) -> list:
+    """40 two-dim rows whose smallest-md5 id (the k=1 seed) is clean,
+    with the vectors of ``bad`` ({position: vector}) placed on other
+    ids."""
+    ids = sorted(range(40), key=lambda i: hashlib.md5(str(i).encode()).hexdigest())
+    rows = {i: [float(i % 7), float(i % 5)] for i in range(40)}
+    for pos, vec in bad.items():
+        rows[ids[pos]] = vec
+    return sorted(rows.items())
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [
+        {3: [1.0, None]},
+        {5: [float("nan"), 1.0], 9: [float("inf"), 2.0]},
+    ],
+    ids=["null-element", "non-finite"],
+)
+def test_kmeans_irregular_vectors_same_on_both_paths(spark, bad):
+    """NULL elements and non-finite values reach the shared kernel the
+    same way on both paths (a NULL element arrives as NaN), so the two
+    paths give the same centroids."""
+    import warnings
+
+    df = spark.createDataFrame(
+        _clean_seed_rows(bad), "vec_id long, embedding array<double>"
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", RuntimeWarning)  # NaN → int64
+        _fit_both_paths(df, k=1, n_iter=2)
+
+
+def test_kmeans_ragged_vectors_raise_on_both_paths(spark, monkeypatch):
+    """A vector shorter than the others fails the fit on either path:
+    the Arrow rows are never reshaped past their list offsets."""
+    from dataslicer_spark import utils
+
+    df = spark.createDataFrame(
+        _clean_seed_rows({4: [1.0]}), "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match="same shape"):
+        kmeans_fit(df, "vec_id", "embedding", k=1, n_iter=1)
+    monkeypatch.setattr(utils, "DRIVER_MAX_CELLS", -1)
+    with pytest.raises(Exception, match="same shape"):
+        kmeans_fit(df, "vec_id", "embedding", k=1, n_iter=1)

@@ -159,8 +159,9 @@ def test_bound_is_the_distinct_edge_count(spark, monkeypatch):
 
 def test_driver_path_jobs_are_the_probe_only(spark, count_jobs):
     """On a materialized 2,000-node graph the driver path runs exactly
-    the probe's jobs and none more to build its result, which is one
-    partition (2,000 nodes ≤ one Arrow batch)."""
+    the probe's one job (a ``limit`` read through ``toArrow``) and none
+    more to build its result, which is one partition (2,000 nodes ≤ one
+    Arrow batch)."""
     from dataslicer_spark.utils import materialize
 
     g = materialize(
@@ -173,10 +174,10 @@ def test_driver_path_jobs_are_the_probe_only(spark, count_jobs):
         F.col("src").isNotNull() & F.col("dst").isNotNull()
     ).distinct()
     _, probe_jobs = count_jobs(
-        lambda: graph._bounded_rows(e, graph.DRIVER_MAX_EDGES)
+        lambda: graph.bounded_arrow(e, graph.DRIVER_MAX_EDGES)
     )
     out, jobs = count_jobs(lambda: pagerank(g))
-    assert jobs == probe_jobs == 2
+    assert jobs == probe_jobs == 1
     assert out.rdd.getNumPartitions() == 1
     assert out.count() == 2000
 

@@ -214,3 +214,39 @@ def test_local_df_ddl_split_keeps_nested_commas():
         " b array<struct<x:int,y:int>>",
         " c map<int,int>",
     ]
+
+
+def test_bounded_arrow_labels_its_probe_job(spark, count_jobs):
+    """``bounded_arrow`` returns the frame as Arrow within the cap and
+    ``None`` above it.  Its job carries ``"<caller>:bounded_probe"`` in
+    the status store and stays in the caller's job group, whose own
+    description comes back afterwards; a negative cap runs no job."""
+    import uuid
+
+    from dataslicer_spark.utils import bounded_arrow
+
+    sc = spark.sparkContext
+    group = f"perfbench.0.q.plans.{uuid.uuid4().hex}"
+
+    def some_fit(cap):
+        return bounded_arrow(spark.range(5), cap)
+
+    sc.setJobGroup(group, group)
+    try:
+        within, over = some_fit(5), some_fit(4)
+        restored = sc.getLocalProperty("spark.job.description")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    labels = [
+        store.job(j).description().get()
+        for j in sorted(sc.statusTracker().getJobIdsForGroup(group))
+    ]
+    assert labels == ["some_fit:bounded_probe"] * 2
+    assert restored == group
+    assert within.column("id").to_pylist() == [0, 1, 2, 3, 4]
+    assert over is None
+    none, jobs = count_jobs(lambda: bounded_arrow(spark.range(5), -1))
+    assert (none, jobs) == (None, 0)
