@@ -29,10 +29,11 @@ MR-DBSCAN / RDD-DBSCAN decomposition):
    between local labels.
 5. **Merge** over the local-cluster graph → global labels.  The cluster
    graph is orders of magnitude smaller than the point set.  A bounded
-   ``limit()`` probe collects at most ``DRIVER_MERGE_MAX_SETS`` key sets
-   into :func:`..graph.union_find` (the common case); past the bound the
-   merge runs :func:`..graph.connected_components` over the key graph,
-   so the driver never holds more than the bound.
+   Arrow probe (``utils.bounded_arrow``) reads at most
+   ``DRIVER_MERGE_MAX_SETS`` key sets into :func:`..graph.union_find`
+   (the common case); past the bound the merge runs
+   :func:`..graph.connected_components` over the key graph, so the
+   driver never holds more than the bound.
 
 Scale notes: both passes shuffle on cell id only; the per-cell kernel is
 O(n_cell²) vectorized numpy — cell size equals eps, so density, not data
@@ -56,7 +57,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..utils import check_col, grouped_map_in_pandas, local_df, materialize
+from ..utils import (
+    bounded_arrow,
+    check_col,
+    grouped_map_in_pandas,
+    local_df,
+    materialize,
+)
 from .graph import connected_components, union_find
 
 #: Grid cell size in units of eps: larger cells mean fewer, bigger local
@@ -412,19 +419,17 @@ def dbscan(
         .distinct()
     )
     # Materialize the (small) key-set frame ONCE before the bounded
-    # probe: ``limit().collect()`` on an unmaterialized plan runs Spark's
-    # incremental take (1 → 4 → 16 → all final-stage partitions), and
-    # under AQE each escalation wave replans and re-executes the
-    # aggregation above the cache — measured +18 s on the sf0.1 flagship
-    # (25.5 s → 7.5 s once removed).  After the checkpoint the probe and
-    # any follow-up read scan stored blocks; the distributed fallback also
-    # stops double-reading the groupBy/distinct (it consumes ``keys``
-    # twice).
+    # probe, so the probe and the distributed fallback (which consumes
+    # ``keys`` twice) scan stored blocks instead of re-running the
+    # groupBy/distinct.  The probe is one ``bounded_arrow`` job whatever
+    # the checkpoint's partition count (a ``limit().collect()`` runs one
+    # job per wave of Spark's incremental take: 1 → 4 → 16 → …
+    # partitions).
     key_sets_df = materialize(key_sets_df)
-    probe = key_sets_df.limit(DRIVER_MERGE_MAX_SETS + 1).collect()
-    if len(probe) <= DRIVER_MERGE_MAX_SETS:
+    probe = bounded_arrow(key_sets_df, DRIVER_MERGE_MAX_SETS)
+    if probe is not None:
         # driver union-find: one bounded action over the local-cluster graph
-        rep = union_find(r.keys for r in probe)
+        rep = union_find(probe.column("keys").to_pylist())
         global_id = {r: i for i, r in enumerate(sorted(set(rep.values())))}
         mapping = [(k, global_id[r]) for k, r in rep.items()]
         map_df = F.broadcast(

@@ -45,7 +45,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..utils import check_col, local_df, materialize, spread
+from ..utils import bounded_arrow, check_col, local_df, materialize, spread
 from .dedup import band_buckets, est_jaccard, minhash_signatures
 
 #: index layout: <path>/{signatures,bands,meta} parquet directories.
@@ -184,7 +184,7 @@ def dedup_against_minhash_index(
     shingles); its signatures and the candidate pairs are checkpointed,
     so the stored band table is scanned once, map-side hash-joined
     against the broadcast batch keys; the candidate ids for the corpus
-    fetch come from one bounded collect of the candidate checkpoint.
+    fetch come from one bounded Arrow probe of the candidate checkpoint.
     Nothing enters the session cache, so a caller that runs this in a
     loop (the streaming form, every micro-batch) accumulates no cache
     generations — checkpoint blocks are reclaimed when their frames are
@@ -240,15 +240,15 @@ def dedup_against_minhash_index(
         # the plan/codegen and costs MORE than the semi-join it replaces
         # (measured: a 60k-literal list added ~20% to the ingestion
         # bench row) — corpus-sized candidate sets take the broadcast
-        # semi-join instead.  The pairs themselves are collected (one
+        # semi-join instead.  The pairs' index ids are probed (one Arrow
         # job on the checkpoint, no distinct shuffle): a pair set within
         # the cap bounds its distinct ids too.
-        pairs = cand.limit(ISIN_MAX_IDS + 1).collect()
+        pairs = bounded_arrow(cand.select("index_id"), ISIN_MAX_IDS)
         src = exact_verify_with.select(
             F.col(id_col), F.col(text_col).alias("__ct")
         )
-        if len(pairs) <= ISIN_MAX_IDS:
-            id_list = list(dict.fromkeys(r.index_id for r in pairs))
+        if pairs is not None:
+            id_list = list(dict.fromkeys(pairs.column("index_id").to_pylist()))
             # In()-literal prune first, spread after: the pruned scan is
             # candidate-sized, so the exchange is bounded by the batch
             fetched = spread(src.filter(F.col(id_col).isin(id_list)))

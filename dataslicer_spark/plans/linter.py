@@ -1,6 +1,7 @@
 """Plan linter: flag 100 TB scale antipatterns in a DataFrame's physical
-plan BEFORE running it — the library form of ``scripts/explain_audit.py``
-(which pins these properties for the registry queries in CI).
+plan BEFORE running it — the library form of the registry plan gate
+(``tests/test_registry_plans.py``, which runs it on every registry
+query).
 
 A finding is a heuristic, not a verdict: a broadcast nested-loop join of
 a 10-row dimension is fine — the linter's job is to make the plan's

@@ -523,7 +523,7 @@ def _has_wide_node(plan) -> bool:
     return False
 
 
-def spread(df: DataFrame, factor: int = 1, barrier: bool = False) -> DataFrame:
+def spread(df: DataFrame, barrier: bool = False) -> DataFrame:
     """Round-robin repartition ``df`` to cluster parallelism when its
     current partitioning would leave most cores idle.
 
@@ -537,9 +537,9 @@ def spread(df: DataFrame, factor: int = 1, barrier: bool = False) -> DataFrame:
     held one core for >4 minutes of an 8.7 s-floor query.
 
     Scale guard: when the input already has at least
-    ``defaultParallelism × factor`` partitions — every scan of a
-    large table on a real cluster — this is a NO-OP, so the 100 TB
-    plan shape is unchanged and no payload-shuffle is added at scale.
+    ``defaultParallelism`` partitions — every scan of a large table on
+    a real cluster — this is a NO-OP, so the 100 TB plan shape is
+    unchanged and no payload-shuffle is added at scale.
     Only apply where per-row compute dominates; the repartition itself
     costs one exchange of the projected input rows.
 
@@ -571,7 +571,7 @@ def spread(df: DataFrame, factor: int = 1, barrier: bool = False) -> DataFrame:
     wide scans — ``barrier`` never adds a job.
     """
     sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * factor
+    target = sc.defaultParallelism
     try:
         if _has_wide_node(df._jdf.queryExecution().optimizedPlan()):
             return df

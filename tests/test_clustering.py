@@ -221,3 +221,46 @@ def test_dbscan_dense_single_cell_chunked(spark, min_samples):
     assert (out.clusterID == out.clusterID.iloc[0]).all()
     assert (out.clusterID != -1).all()
     assert len(out) == n
+
+
+def test_dbscan_merge_probe_is_one_job(spark, monkeypatch):
+    """The merge's bounded probe reads a multi-partition key-set
+    checkpoint in ONE job, where a ``limit().collect()`` runs Spark's
+    incremental take, one job per 1 → 4 → 16 partition wave.  A
+    spy spreads the key-set checkpoint over 16 partitions and marks the
+    jobs run so far: the probe is the only later job of ``dbscan``."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"dbscan_probe.{uuid.uuid4().hex}"
+    real = clustering.materialize
+    seen = {}
+
+    def jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(group))
+
+    def spy(df):
+        out = real(df.repartition(16))
+        seen["parts"], seen["jobs"] = out.rdd.getNumPartitions(), jobs()
+        return out
+
+    monkeypatch.setattr(clustering, "materialize", spy)
+    pts = [(0, 0.0, 0.0), (1, 0.5, 0.0), (2, 1.0, 0.0), (3, 30.0, 30.0),
+           (4, 30.5, 30.0), (5, 90.0, 90.0)]
+    df = spark.createDataFrame(pts, "pid long, x double, y double")
+    sc.setJobGroup(group, group)
+    try:
+        out = dbscan(df, eps=1.0, min_samples=2, id_col="pid", x_col="x",
+                     y_col="y", coord="planar")
+        probe_jobs = jobs() - seen["jobs"]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert seen["parts"] == 16
+    assert len(probe_jobs) == 1
+    got = {r.pid: r.clusterID for r in out.collect()}
+    assert got[0] == got[1] == got[2] != -1
+    assert got[3] == got[4] != -1
+    assert got[0] != got[3]
+    assert got[5] == -1
