@@ -25,26 +25,24 @@ generated code on a cold JVM and then runs in ~6.5s; min-of-2 would
 report the compiler, not the query.)  Full per-query run vectors are
 persisted in BENCH_LOCAL.json so false plateaus are visible.
 
-Host-steal handling (round 10 — the canary ACTS, not just records):
-every family JVM times a fixed CPU-bound canary workload after warmup.
-If the canary exceeds the committed quiet-state reference
-(CANARY_REF_SEC) by >1.3x, the family is automatically re-run in a
-fresh JVM (bounded: 2 retries/family, 8 global; round 11 — only
-families containing a >=2 s query are worth a retry; cheap families
-just take the normalization), per-query timings merged as min across
-attempts.  Families still above after retries are listed in
-`canary_unresolved`, and every timing is also published
-canary-NORMALIZED (raw / max(1, canary/ref)) — BENCH_diff regression
-flags are computed on the normalized vector, so steady hypervisor steal
-can no longer masquerade as a plan regression.
+Structure (the exact record): every rep's build (the query function,
+with its eager fits, probes and checkpoints) and its noop write are each
+counted by ``dataslicer_spark.trace.counted`` — Spark jobs, executed
+stages, completed tasks — from the status tracker, with no extra job.
+The last rep's counts land in BENCH_LOCAL.json as ``structure`` next to
+``cpus`` (the session's defaultParallelism), and BENCH_diff lists every
+query whose structure changed ahead of the wall-clock table.  Wall
+time on a shared host swings one query 3x between identical reps; the
+counts do not move, so a plan regression shows as "+2 build jobs", not
+as a guess about host steal.  ``--only <query> …`` also prints the
+per-rep counts to stderr.
 
 Timeout survival (round 11 — r10's driver run was killed at the outer
 timeout with ZERO parseable output because everything was emitted only
 at process end):
 
 * **Total wall-clock budget** (`SPARK_GRAFT_BENCH_BUDGET_SEC`, default
-  1500): past 50% of budget canary re-runs are disabled (normalization
-  still applies); rep caps degrade 8 → 3 → 2 → 1 as the budget drains
+  1500): rep caps degrade 8 → 3 → 2 → 1 as the budget drains
   (``_rep_cap``; per-family caps recorded in ``rep_cap_by_family``);
   only at 100% are remaining families skipped and listed in
   ``budget_skipped`` — a degraded-but-complete artifact beats a perfect
@@ -62,10 +60,7 @@ at process end):
 
 Cold/warm honesty (round 11): per-query ``first_rep_sec`` (cold
 JVM-position cost) is persisted next to the plateau min, and the family
-packing is recorded; BENCH_diff annotates flagged rows whose family
-membership changed since the previous run as ``repacked`` — a floor
-that moved because the registry grew is not a plan regression
-(r10: dd_simhash 2.77->5.44 s with byte-identical code).
+packing is recorded.
 """
 
 from __future__ import annotations
@@ -92,38 +87,16 @@ _OUT_DIR = os.environ.get("SPARK_GRAFT_BENCH_OUT", _HERE)
 # for triage/tests (1 → one JVM per query).
 MAX_FAMILY = int(os.environ.get("SPARK_GRAFT_BENCH_MAX_FAMILY", "14"))
 
-# Quiet-state reference for the fixed-workload canary (see child_main):
-# measured on this host with nothing else running, round 10 — four
-# fresh-JVM min-of-3 canary runs read 0.651/0.688/0.724/0.933 s, so
-# 0.75 with the 1.3x tolerance trips at 0.975 s, above quiet jitter.  A
-# family JVM whose canary exceeds REF*TOL is running on a stolen host —
-# its timings are upper bounds, so the family is re-run (bounded) and,
-# if steal persists, every timing is additionally reported
-# canary-NORMALIZED (raw / (canary/REF)) so the artifact is readable
-# without a judge-side re-adjudication of host noise.
-# Override: SPARK_GRAFT_CANARY_REF.
-CANARY_REF_SEC = float(os.environ.get("SPARK_GRAFT_CANARY_REF", "0.75"))
-CANARY_TOL = 1.3
-# bounded retries: per-family and global, so a steadily-loaded host
-# cannot triple the whole benchmark's wall clock
-CANARY_RETRIES_PER_FAMILY = 2
-CANARY_RETRIES_TOTAL = 8
-# a canary-tripped family is only worth a fresh-JVM retry if it holds a
-# query whose raw timing is at least this — re-running a family of
-# 0.3 s rows to fix sub-second noise burns budget for nothing; the
-# normalized vector already absorbs steady steal on cheap rows
-RERUN_MIN_QUERY_SEC = 2.0
-
 # total wall-clock budget for the whole benchmark (seconds).  The r10
 # driver run died at the harness's outer timeout with no output at all;
 # the budget keeps us comfortably inside it by degrading gracefully —
 # see _rep_cap(): full adaptive reps early, then rep caps 3 → 2 → 1 as
-# the budget drains, canary re-runs only in the first half, and family
-# skipping (budget_skipped) only as the last resort at 100%.  The first
-# r11 measurement run proved the old ladder (adaptive until 85%, skip
-# at 100%) wrong: 7 adaptive-rep families consumed the whole budget and
-# 130 queries were SKIPPED — complete coverage at 1 rep beats perfect
-# floors for a third of the registry.
+# the budget drains, and family skipping (budget_skipped) only as the
+# last resort at 100%.  The first r11 measurement run proved the old
+# ladder (adaptive until 85%, skip at 100%) wrong: 7 adaptive-rep
+# families consumed the whole budget and 130 queries were SKIPPED —
+# complete coverage at 1 rep beats perfect floors for a third of the
+# registry.
 BENCH_BUDGET_SEC = float(
     os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "1500")
 )
@@ -192,9 +165,9 @@ def _pack_families(names: list[str]) -> list[list[str]]:
 
 def _time_query(
     spark, fn, sf_dir: str, max_reps: int | None = None
-) -> tuple[float, list[float], bool]:
+) -> tuple[float, list[float], list[dict]]:
     """Adaptive-rep timing of one query; returns
-    (plateau_min, run_vector, contended).
+    (plateau_min, run_vector, per-rep {"build", "write"} structure).
 
     Plateau rule: cheap queries (min ≤ 1 s) stop after 2 runs; mid-range
     stop when the last two runs agree within 10% (cap 3); expensive
@@ -210,12 +183,28 @@ def _time_query(
     max_reps=1 runs each query once — the number then carries the plan's
     cold JIT cost, which the ``first_rep_sec`` honesty field and the
     ``fast_mode`` artifact flag make explicit."""
+    from dataslicer_spark.trace import counted
+
     runs: list[float] = []
+    structure: list[dict] = []
 
     def one() -> None:
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        runs.append(round(time.perf_counter() - t0, 3))
+        # the clock covers the build and the write only: reading the
+        # counts (a listener-bus drain plus one tracker call per job and
+        # stage) costs up to ~0.2 s on a 50-job query and is not timed
+        secs: list[float] = []
+
+        def timed(f):
+            t0 = time.perf_counter()
+            out = f()
+            secs.append(time.perf_counter() - t0)
+            return out
+
+        df, build = counted(spark, lambda: timed(lambda: fn(spark, sf_dir)))
+        save = df.write.format("noop").mode("overwrite").save
+        _, write = counted(spark, lambda: timed(save))
+        runs.append(round(sum(secs), 3))
+        structure.append({"build": build, "write": write})
         # drop DataFrames cached inside operators so runs and queries are
         # timed independently (data is recomputed every rep)
         spark.catalog.clearCache()
@@ -225,7 +214,7 @@ def _time_query(
 
     one()
     if max_reps is not None and len(runs) >= max_reps:
-        return min(runs), runs, False
+        return min(runs), runs, structure
     one()
     while True:
         mn = min(runs)
@@ -247,25 +236,7 @@ def _time_query(
         elif close(runs[-1], runs[-2]):
             break
         one()
-    # Host-steal detection (round 9, refined round 10): a >3× max/min
-    # rep spread on a non-trivial query means another process stole CPU
-    # mid-bench (this host demonstrably swings the same plan 8→150 s
-    # under load).  The FIRST rep is excluded — it carries the plan's
-    # codegen/JIT compile and legitimately reads 3×+ the steady floor
-    # on a perfectly quiet host (measured: dd_simhash 10.5 s rep 1 vs
-    # 3.3 s steady under a 0.47 s canary), which round 9 mis-tagged as
-    # contention.  Take ONE extra rep; if the steady-rep spread
-    # persists, the row is tagged contended in BENCH_LOCAL.json so an
-    # inflated min is never mistaken for a plan regression.
-    def steady_spread() -> float:
-        steady = runs[1:] if len(runs) > 2 else runs
-        return max(steady) / max(min(steady), 1e-9)
-
-    contended = False
-    if min(runs) > 1.0 and steady_spread() > 3.0:
-        one()
-        contended = steady_spread() > 3.0
-    return min(runs), runs, contended
+    return min(runs), runs, structure
 
 
 def child_main(names: list[str]) -> None:
@@ -280,38 +251,15 @@ def child_main(names: list[str]) -> None:
     # JVM/codegen warmup so the first measured query doesn't absorb ~6s
     # of session initialization cost
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    # calibration canary: a fixed CPU-bound aggregate, timed after
-    # warmup.  Per-rep spread catches INTERMITTENT host steal, but a
-    # steadily stolen host slows every rep equally and evades it — the
-    # canary gives each run an absolute speed reference, so a globally
-    # inflated artifact is self-describing (compare `canary_sec` across
-    # runs before reading any per-query ratio as a regression).
-    # min-of-3: the first rep pays residual JIT (~2.4s quiet vs ~0.9s
-    # steady), which would false-trip the 1.3x re-run trigger; steady
-    # host steal inflates every rep, so the min still detects it.
-    # Fast mode (budget nearly spent) drops to min-of-2.
-    canary_reps = []
-    for _ in range(2 if max_reps else 3):
-        t0 = time.perf_counter()
-        spark.range(50_000_000).selectExpr(
-            "sum((id % 1000003) * (id % 997))",  # bounded: no ANSI overflow
-            "avg(id)",
-            "count(distinct id % 1000)",
-        ).collect()
-        canary_reps.append(round(time.perf_counter() - t0, 3))
-    canary_sec = min(canary_reps)
-
     registry = entrymod.queries()
     timings: dict[str, float] = {}
     run_vectors: dict[str, list[float]] = {}
-    contended: list[str] = []
+    structure: dict[str, list[dict]] = {}
     for name in names:
         try:
-            timings[name], run_vectors[name], was_contended = _time_query(
+            timings[name], run_vectors[name], structure[name] = _time_query(
                 spark, registry[name], sf_dir, max_reps=max_reps
             )
-            if was_contended:
-                contended.append(name)
         except Exception as e:  # noqa: BLE001
             print(f"bench: {name} failed: {e}", file=sys.stderr)
             timings[name] = -1.0
@@ -322,8 +270,8 @@ def child_main(names: list[str]) -> None:
             {
                 "timings": timings,
                 "runs": run_vectors,
-                "contended": contended,
-                "canary_sec": canary_sec,
+                "structure": structure,
+                "cpus": spark.sparkContext.defaultParallelism,
             }
         ),
         flush=True,
@@ -341,14 +289,26 @@ def _load_prev_doc() -> dict:
         return {}
 
 
-def _query_family_members(families: dict[str, list[str]]) -> dict[str, frozenset]:
-    """query name -> frozenset of its family's members."""
-    out: dict[str, frozenset] = {}
-    for members in families.values():
-        fs = frozenset(members)
-        for q in members:
-            out[q] = fs
-    return out
+# the structural record: per phase of a rep, what trace.counted reads
+_PHASES = ("build", "write")
+_COUNTS = ("jobs", "stages", "tasks")
+
+
+def _fmt_structure(st: dict) -> str:
+    """``build jobs/stages/tasks + write jobs/stages/tasks``."""
+    return " + ".join(
+        "/".join(str(st[p][k]) for k in _COUNTS) for p in _PHASES
+    )
+
+
+def _structure_delta(was: dict, now: dict) -> str:
+    """The counts that moved, e.g. ``build jobs +2, write tasks -8``."""
+    return ", ".join(
+        f"{p} {k} {now[p][k] - was[p][k]:+d}"
+        for p in _PHASES
+        for k in _COUNTS
+        if now[p][k] != was[p][k]
+    )
 
 
 class _RunState:
@@ -363,11 +323,9 @@ class _RunState:
         self.timings: dict[str, float] = {}
         self.run_vectors: dict[str, list[float]] = {}
         self.first_reps: dict[str, float] = {}
-        self.contended: list[str] = []
-        self.canaries: list[float] = []
-        self.canary_by_family: dict[str, float] = {}
-        self.query_family: dict[str, str] = {}
-        self.canary_unresolved: list[str] = []
+        # query -> {"build": counts, "write": counts} of its last rep
+        self.structure: dict[str, dict] = {}
+        self.cpus: int | None = None
         self.families: dict[str, list[str]] = {}
         self.budget_skipped: list[str] = []
         self.rep_caps: dict[str, int | None] = {}
@@ -375,32 +333,20 @@ class _RunState:
         self.families_done = 0
         self.families_total = 0
 
-    # -- derived vectors --------------------------------------------------
-    def normalized(self) -> dict[str, float]:
-        """Canary-normalized twin of `timings`: raw / the family's steal
-        factor max(1, canary/ref) — only ever deflating."""
-        out: dict[str, float] = {}
-        for n, t in self.timings.items():
-            c = self.canary_by_family.get(self.query_family.get(n, ""))
-            factor = max(1.0, c / CANARY_REF_SEC) if c else 1.0
-            out[n] = round(t / factor, 3) if t > 0 else t
-        return out
-
     # -- artifacts ---------------------------------------------------------
     def flush(self, partial: bool) -> None:
         """Rewrite BENCH_LOCAL.json + BENCH_diff.md (full-run mode) and
         print a headline JSON line.  Called after every family so a kill
         at any point leaves a parseable, self-describing artifact."""
-        normalized = self.normalized()
         if not self.skip_artifacts:
             try:
-                self._write_local(normalized, partial)
-                self._write_diff(normalized)
+                self._write_local(partial)
+                self._write_diff()
             except OSError as e:
                 print(f"bench: artifact write failed: {e}", file=sys.stderr)
-        self._print_headline(normalized, partial)
+        self._print_headline(partial)
 
-    def _write_local(self, normalized: dict[str, float], partial: bool) -> None:
+    def _write_local(self, partial: bool) -> None:
         prev = self.prev_doc.get("queries", {})
         # a crashed query (<= 0) must not poison the baseline: keep the
         # previous good value so a recovered query still gets a comparison
@@ -416,24 +362,18 @@ class _RunState:
             "families_total": self.families_total,
             "fast_mode": self.fast_mode,
             "queries": baseline,
-            # canary-normalized twin of `queries` — the vector BENCH_diff
-            # regression flags are computed on
-            "queries_normalized": normalized,
             "runs": self.run_vectors,
-            # cold-position honesty: the first rep of the first attempt
-            # carries the plan's codegen/JIT cost at its JVM position —
-            # when family packing changes, THIS moves even though the
-            # plan didn't; BENCH_diff uses `families` to annotate that
+            # exact and host-independent: jobs/stages/tasks of the last
+            # rep's build and noop write — comparable across runs at the
+            # same sf and `cpus` (task counts follow defaultParallelism)
+            "structure": self.structure,
+            "cpus": self.cpus,
+            # cold-position honesty: the first rep carries the plan's
+            # codegen/JIT cost at its JVM position — when family packing
+            # changes, THIS moves even though the plan didn't
             "first_rep_sec": self.first_reps,
             "families": {k: sorted(v) for k, v in self.families.items()},
             "failed": failed_names,
-            # rows whose rep spread stayed >3x after an extra rep: host
-            # CPU steal — their min is an upper bound, not a regression
-            "contended": sorted(set(self.contended)),
-            "canary_sec": self.canaries,
-            "canary_ref_sec": CANARY_REF_SEC,
-            "canary_by_family": self.canary_by_family,
-            "canary_unresolved": sorted(self.canary_unresolved),
             # families never run because the wall-clock budget ran out
             "budget_skipped": sorted(self.budget_skipped),
             "budget_sec": BENCH_BUDGET_SEC,
@@ -447,69 +387,78 @@ class _RunState:
             json.dump(doc, f, indent=1, sort_keys=True)
         os.replace(tmp, os.path.join(_OUT_DIR, "BENCH_LOCAL.json"))
 
-    def _write_diff(self, normalized: dict[str, float]) -> None:
+    def _structure_lines(self) -> list[str]:
+        """The structural section of BENCH_diff: every query whose
+        counts changed, when both runs ran at the same sf and cpus."""
+        prev = self.prev_doc.get("structure", {})
+        if not prev:
+            return []
+        sf, cpus = self.prev_doc.get("sf"), self.prev_doc.get("cpus")
+        if (sf, cpus) != (self.sf, self.cpus):
+            return [
+                f"Structure not compared: sf {sf}, cpus {cpus} before; "
+                f"sf {self.sf}, cpus {self.cpus} now (task counts follow "
+                "the data and the core count).",
+                "",
+            ]
+        lines = [
+            "## Structure (jobs/stages/tasks, build + write, last rep)",
+            "",
+            "| query | before | now | change |",
+            "|---|---|---|---|",
+        ]
+        changed = [
+            (name, prev[name], now)
+            for name, now in sorted(self.structure.items())
+            if name in prev and prev[name] != now
+        ]
+        for name, was, now in changed:
+            lines.append(
+                f"| {name} | {_fmt_structure(was)} | {_fmt_structure(now)} "
+                f"| {_structure_delta(was, now)} |"
+            )
+        if not changed:
+            lines.append("| (none) | | | |")
+        return lines + ["", "## Wall clock", ""]
+
+    def _write_diff(self) -> None:
         prev = self.prev_doc.get("queries", {})
         if not prev:
             return
-        prev_norm = self.prev_doc.get("queries_normalized", {})
-        prev_members = _query_family_members(self.prev_doc.get("families", {}))
-        now_members = _query_family_members(
-            {k: sorted(v) for k, v in self.families.items()}
-        )
         failed = sorted(n for n, t in self.timings.items() if t <= 0)
         lines = [
             "# BENCH diff — current run vs previous BENCH_LOCAL.json",
             "",
             f"Queries: {len(self.timings)} now / {len(prev)} before. "
-            "Flagging |log-ratio| >= 1.3x AND |delta| >= "
-            f"{DIFF_MIN_ABS_DELTA_SEC} s, computed per query on "
-            "canary-NORMALIZED timings when BOTH runs have them (raw "
-            "otherwise — never normalized-vs-raw).  Rows whose family "
-            "packing changed since the previous run are annotated "
-            "`repacked`: their JVM-position floor moved with the "
-            "registry, not the plan.",
+            "Structural changes are exact; wall-clock rows flag "
+            "|log-ratio| >= 1.3x AND |delta| >= "
+            f"{DIFF_MIN_ABS_DELTA_SEC} s of the plateau floors.",
             "",
             *(
                 ["Failed/crashed queries (baseline retained from previous "
                  "run): " + ", ".join(failed), ""]
                 if failed else []
             ),
-            "| query | before (s) | now (s) | ratio | note |",
-            "|---|---|---|---|---|",
+            *self._structure_lines(),
+            "| query | before (s) | now (s) | ratio |",
+            "|---|---|---|---|",
         ]
         flagged = []
-        for name, raw_now in sorted(self.timings.items()):
-            raw_was = prev.get(name)
-            if raw_was is None or raw_was <= 0 or raw_now <= 0:
+        for name, now in sorted(self.timings.items()):
+            was = prev.get(name)
+            if was is None or was <= 0 or now <= 0:
                 continue
-            # ADVICE r10: choose the comparison vector PER QUERY — only
-            # compare normalized-vs-normalized when both sides carry the
-            # key, else raw-vs-raw; mixing masks/invents regressions for
-            # one transition round
-            n_now, n_was = normalized.get(name), prev_norm.get(name)
-            if n_now is not None and n_now > 0 and n_was is not None and n_was > 0:
-                now, was = n_now, n_was
-            else:
-                now, was = raw_now, raw_was
             ratio = now / was
             if (
                 (ratio >= 1.3 or ratio <= 1 / 1.3)
                 and max(was, now) >= 0.2
                 and abs(now - was) >= DIFF_MIN_ABS_DELTA_SEC
             ):
-                repacked = (
-                    name in prev_members
-                    and name in now_members
-                    and prev_members[name] != now_members[name]
-                )
-                flagged.append((ratio, name, was, now,
-                                "repacked" if repacked else ""))
-        for ratio, name, was, now, note in sorted(flagged, reverse=True):
-            lines.append(
-                f"| {name} | {was:.2f} | {now:.2f} | {ratio:.2f}x | {note} |"
-            )
+                flagged.append((ratio, name, was, now))
+        for ratio, name, was, now in sorted(flagged, reverse=True):
+            lines.append(f"| {name} | {was:.2f} | {now:.2f} | {ratio:.2f}x |")
         if not flagged:
-            lines.append("| (none) | | | | |")
+            lines.append("| (none) | | | |")
         new = sorted(set(self.timings) - set(prev))
         gone = sorted(
             set(prev) - set(self.timings) - set(self.budget_skipped)
@@ -524,9 +473,8 @@ class _RunState:
         with open(os.path.join(_OUT_DIR, "BENCH_diff.md"), "w") as f:
             f.write("\n".join(lines) + "\n")
 
-    def _print_headline(self, normalized: dict[str, float], partial: bool) -> None:
+    def _print_headline(self, partial: bool) -> None:
         total = round(sum(t for t in self.timings.values() if t >= 0), 3)
-        total_norm = round(sum(t for t in normalized.values() if t >= 0), 3)
         failed = sorted(n for n, t in self.timings.items() if t < 0)
         # the driver records only the LAST ~2000 chars of stdout; a full
         # 160+-entry per-query map (~8 KB) gets head-truncated into an
@@ -566,23 +514,6 @@ class _RunState:
             "failed_queries": len(failed),
             **({"failed": failed} if failed else {}),
             **(
-                {"contended": sorted(set(self.contended))}
-                if self.contended else {}
-            ),
-            # fixed-workload reference per family JVM: families above
-            # canary_ref_sec*1.3 were automatically re-run (bounded);
-            # canary_unresolved lists the ones still above after
-            # retries.  value_normalized = sum of canary-normalized
-            # timings — read THIS against prior rounds when canaries
-            # differ.
-            **({"canary_sec": self.canaries} if self.canaries else {}),
-            "canary_ref_sec": CANARY_REF_SEC,
-            "value_normalized": total_norm,
-            **(
-                {"canary_unresolved": sorted(self.canary_unresolved)}
-                if self.canary_unresolved else {}
-            ),
-            **(
                 {"budget_skipped": sorted(self.budget_skipped)}
                 if self.budget_skipped else {}
             ),
@@ -621,7 +552,9 @@ def _run_family(
             + stderr[-2000:],
             file=sys.stderr,
         )
-        got = {"timings": {n: -1.0 for n in family}, "runs": {}}
+        got = {
+            "timings": {n: -1.0 for n in family}, "runs": {}, "structure": {}
+        }
     return got
 
 
@@ -634,9 +567,7 @@ def main(only: list[str] | None = None) -> None:
 
     names = list(entrymod.queries())
     if only:
-        # subset drive (testing/triage): full canary/retry machinery,
-        # but never overwrite the committed full-run artifacts with a
-        # partial vector
+        # subset drive (testing/triage): prints per-rep structure
         names = [n for n in names if n in set(only)]
 
     # subset runs must never clobber the committed full-run artifacts —
@@ -665,7 +596,6 @@ def main(only: list[str] | None = None) -> None:
     signal.signal(signal.SIGTERM, _on_term)
 
     child_ceiling = float(os.environ.get("SPARK_GRAFT_BENCH_TIMEOUT", "2400"))
-    retries_left = CANARY_RETRIES_TOTAL
     for fam_idx, family in enumerate(packed):
         elapsed = time.monotonic() - t0
         if elapsed >= BENCH_BUDGET_SEC:
@@ -679,7 +609,6 @@ def main(only: list[str] | None = None) -> None:
             )
             break
         frac = elapsed / BENCH_BUDGET_SEC
-        allow_rerun = frac <= 0.50
         rep_cap = _rep_cap(frac)
         state.fast_mode = state.fast_mode or rep_cap == 1
         # one wedged JVM must not stall the whole benchmark, and no
@@ -690,70 +619,23 @@ def main(only: list[str] | None = None) -> None:
         ))
         fam_key = family[0]
         state.families[fam_key] = list(family)
-        for q in family:
-            state.query_family[q] = fam_key
-        merged: dict = {"timings": {}, "runs": {}, "contended": set()}
-        best_canary: float | None = None
-        attempts = 0
         state.rep_caps[fam_key] = rep_cap
-        while True:
-            got = _run_family(family, fam_timeout, rep_cap)
-            attempts += 1
-            # merge attempts: per-query best (lowest positive) timing —
-            # every attempt's timing is a valid upper bound of the
-            # query's cost, so the min across attempts is the best
-            # estimate; run vectors concatenate so the artifact shows
-            # every rep of every attempt
-            for n, t in got["timings"].items():
-                old = merged["timings"].get(n)
-                if old is None or (t > 0 and (old <= 0 or t < old)):
-                    merged["timings"][n] = t
-            for n, v in got.get("runs", {}).items():
-                merged["runs"].setdefault(n, []).extend(v)
-                if v and n not in state.first_reps:
-                    state.first_reps[n] = v[0]
-            merged["contended"].update(got.get("contended", []))
-            c = got.get("canary_sec")
-            if c is not None:
-                best_canary = c if best_canary is None else min(best_canary, c)
-            # ACT on the canary (round 10): a canary above the quiet
-            # reference means this family JVM ran on a stolen host —
-            # re-run the family (bounded) instead of publishing an
-            # inflated artifact.  Round 11: a retry must be WORTH its
-            # fresh-JVM cost — only families holding a >=2 s query
-            # re-run (cheap rows ride the normalized vector), and no
-            # retries once 60% of the wall-clock budget is spent.
-            heavy = any(
-                t >= RERUN_MIN_QUERY_SEC
-                for t in merged["timings"].values()
-            )
-            if (
-                c is None
-                or c <= CANARY_REF_SEC * CANARY_TOL
-                or attempts > CANARY_RETRIES_PER_FAMILY
-                or retries_left <= 0
-                or not allow_rerun
-                or not heavy
-            ):
-                if (
-                    best_canary is not None
-                    and best_canary > CANARY_REF_SEC * CANARY_TOL
-                ):
-                    state.canary_unresolved.append(fam_key)
-                break
-            retries_left -= 1
-            print(
-                f"bench: family {fam_key}.. canary {c:.2f}s exceeds "
-                f"quiet reference {CANARY_REF_SEC:.2f}s x{CANARY_TOL} "
-                "(host steal) — re-running family",
-                file=sys.stderr,
-            )
-        state.timings.update(merged["timings"])
-        state.run_vectors.update(merged["runs"])
-        state.contended.extend(sorted(merged["contended"]))
-        if best_canary is not None:
-            state.canaries.append(best_canary)
-            state.canary_by_family[fam_key] = best_canary
+        got = _run_family(family, fam_timeout, rep_cap)
+        state.timings.update(got["timings"])
+        state.run_vectors.update(got["runs"])
+        for n, v in got["runs"].items():
+            state.first_reps[n] = v[0]
+        for n, reps in got["structure"].items():
+            state.structure[n] = reps[-1]
+            if only:
+                for i, (sec, st) in enumerate(zip(got["runs"][n], reps), 1):
+                    print(
+                        f"bench: {n} rep {i}: {sec:.2f} s, "
+                        f"jobs/stages/tasks {_fmt_structure(st)} "
+                        "(build + write)",
+                        file=sys.stderr,
+                    )
+        state.cpus = state.cpus or got.get("cpus")
         state.families_done += 1
         # incremental durability: every finished family lands in the
         # artifact + a partial headline immediately — a timeout kill can

@@ -38,6 +38,7 @@ from ..operators.asof import asof_join
 from ..operators.sampling import split_thresholds
 from ..operators.similarity import cosine_topk, hyperplane_lsh_topk, ivf_topk
 from ..operators.windows import largest_wins
+from ..session import load_tables as _t
 from ..streaming.events import (
     _epoch_us,
     load_events,
@@ -45,10 +46,6 @@ from ..streaming.events import (
     sliding_window_stats,
     tumbling_window_stats,
 )
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 FP30 = repr(float(2**30))

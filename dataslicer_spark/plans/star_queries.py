@@ -17,7 +17,6 @@ Cross-engine determinism rules (every oracle-checked query obeys them):
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -47,11 +46,8 @@ from ..functions.photometry import (
     compute_camera_coord,
     compute_ccd_coord,
 )
+from ..session import load_tables as _t
 from ..utils import query_df, select_columns
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 # Binary fixed-point aggregation: floor(x·2^k) is bit-reproducible across

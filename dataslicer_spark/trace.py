@@ -26,12 +26,22 @@ Observation caveat (inherent to lazy engines): a stage's count is
 available only after an action has executed the observed plan; calling
 ``rows()`` earlier raises.  Branches that are never materialized report
 ``None`` with ``rows(strict=False)``.
+
+:func:`counted` is the structural twin: the Spark jobs, executed stages
+and tasks one call ran, read from the status tracker with zero extra
+jobs.  Unlike wall time, these counts do not move with host load.
 """
 
 from __future__ import annotations
 
+import uuid
+from collections.abc import Callable
+from typing import TypeVar
+
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+T = TypeVar("T")
 
 
 class TraceLog:
@@ -104,4 +114,47 @@ class TraceLog:
         return local_df(spark, data, "stage int, label string, rows long")
 
 
-__all__ = ["TraceLog"]
+# the local properties setJobGroup writes; counted() restores them
+_GROUP_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
+
+
+def counted(spark: SparkSession, fn: Callable[[], T]) -> tuple[T, dict[str, int]]:
+    """``(fn(), {"jobs", "stages", "tasks"})``: the Spark jobs ``fn`` ran,
+    their executed stages and those stages' completed tasks.
+
+    ``fn`` runs under a job group of its own (the caller's group and
+    description come back afterwards).  The counts are read from the
+    status tracker once the listener bus is drained, so counting runs no
+    job.  A stage shared by several jobs counts once; a skipped stage (0
+    completed tasks: its shuffle output already existed) counts not at
+    all.  Jobs ``fn`` runs under a job group of its own are not counted.
+    """
+    sc = spark.sparkContext
+    group = f"counted.{uuid.uuid4().hex}"
+    prev = {k: sc.getLocalProperty(k) for k in _GROUP_PROPS}
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for k, v in prev.items():
+            sc.setLocalProperty(k, v)
+    # the tracker is fed by the listener bus: drain it before reading
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stage_ids = {
+        s for j in jobs if (job := tracker.getJobInfo(j)) for s in job.stageIds
+    }
+    ran = [
+        st.numCompletedTasks
+        for s in stage_ids
+        if (st := tracker.getStageInfo(s)) and st.numCompletedTasks > 0
+    ]
+    return out, {"jobs": len(jobs), "stages": len(ran), "tasks": sum(ran)}
+
+
+__all__ = ["TraceLog", "counted"]

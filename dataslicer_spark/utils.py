@@ -168,7 +168,6 @@ def grouped_map_in_pandas(
     keys,
     fn,
     schema,
-    num_partitions: int | None = None,
     batch_fn=None,
     sort_cols: Sequence[str] = (),
 ):
@@ -196,10 +195,7 @@ def grouped_map_in_pandas(
     import pandas as pd
 
     key_list = list(keys)
-    rep = df.repartition(*key_list) if num_partitions is None else df.repartition(
-        num_partitions, *key_list
-    )
-    rep = rep.sortWithinPartitions(*key_list, *sort_cols)
+    rep = df.repartition(*key_list).sortWithinPartitions(*key_list, *sort_cols)
 
     def run(batches):
         carry: pd.DataFrame | None = None

@@ -43,21 +43,11 @@ def customer(spark, sf_dir):
 @pytest.fixture
 def count_jobs(spark):
     """``count_jobs(fn) -> (fn(), number of Spark jobs fn ran)``, counted
-    with the status tracker under a job group of its own."""
-    import uuid
-
-    sc = spark.sparkContext
+    by :func:`dataslicer_spark.trace.counted`."""
+    from dataslicer_spark.trace import counted
 
     def run(fn):
-        group = f"count_jobs.{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        # the tracker is fed by the listener bus: drain it before reading
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+        out, n = counted(spark, fn)
+        return out, n["jobs"]
 
     return run

@@ -8,9 +8,9 @@ contract that prevents a recurrence:
   the LAST line);
 * SIGTERM flush — the driver's `timeout` sends SIGTERM first; the
   handler flushes artifacts + one final partial headline before dying;
-* diff hygiene — per-query normalized-vs-normalized only when both runs
-  carry the key (never normalized-vs-raw), a 0.5 s absolute noise floor,
-  and `repacked` annotation when a flagged query's family packing moved.
+* diff hygiene — a 0.5 s absolute noise floor on wall-clock rows, and
+  exact structural rows (jobs/stages/tasks) only between runs on the
+  same cpus.
 
 The integration tests drive the real bench.py subprocess at sf0.001 with
 SPARK_GRAFT_BENCH_OUT redirected to tmp_path so the committed artifacts
@@ -46,8 +46,6 @@ def _env(tmp_path) -> dict:
         "SPARK_GRAFT_BENCH_OUT": str(tmp_path),
         "SPARK_GRAFT_BENCH_MAX_FAMILY": "1",
         "SPARK_GRAFT_BENCH_BUDGET_SEC": "3600",
-        # quiet-host reference set sky-high so no canary retry triggers
-        "SPARK_GRAFT_CANARY_REF": "1000",
     })
     return env
 
@@ -81,7 +79,6 @@ def test_flush_writes_partial_artifact_and_headline(tmp_path, monkeypatch, capsy
     st.run_vectors = {"q_a": [2.0, 1.5], "q_b": [0.4]}
     st.first_reps = {"q_a": 2.0, "q_b": 0.4}
     st.families["q"] = ["q_a", "q_b"]
-    st.query_family = {"q_a": "q", "q_b": "q"}
     st.families_done = 1
     st.flush(partial=True)
     doc = json.loads((tmp_path / "BENCH_LOCAL.json").read_text())
@@ -102,41 +99,68 @@ def test_flush_writes_partial_artifact_and_headline(tmp_path, monkeypatch, capsy
     assert "partial" not in head
 
 
-def test_diff_noise_floor_and_repacked_annotation(tmp_path, monkeypatch, capsys):
+def test_diff_noise_floor(tmp_path, monkeypatch, capsys):
     prev = {
         "queries": {"jit_small": 0.2, "real_reg": 2.0, "moved": 3.0},
-        "queries_normalized": {},
         "families": {"f1": ["real_reg", "jit_small"], "f2": ["moved"]},
     }
     st = _mk_state(tmp_path, monkeypatch, prev_doc=prev)
     # jit_small doubles but |delta|=0.2 < 0.5 → suppressed;
-    # real_reg 2.0→3.5 (1.75x, delta 1.5) → flagged, packing unchanged;
-    # moved 3.0→5.0 → flagged but its family gained a member → repacked
+    # real_reg 2.0→3.5 (1.75x, delta 1.5) and moved 3.0→5.0 → flagged
     st.timings = {"jit_small": 0.4, "real_reg": 3.5, "moved": 5.0}
     st.families = {"f1": ["real_reg", "jit_small"], "f2": ["moved", "newq"]}
-    st.query_family = {q: f for f, qs in st.families.items() for q in qs}
     st.families_done = 3
     st.flush(partial=False)
     diff = (tmp_path / "BENCH_diff.md").read_text()
     assert "jit_small" not in diff
-    assert "| real_reg | 2.00 | 3.50 | 1.75x |  |" in diff
-    assert "| moved | 3.00 | 5.00 | 1.67x | repacked |" in diff
+    assert "| real_reg | 2.00 | 3.50 | 1.75x |" in diff
+    assert "| moved | 3.00 | 5.00 | 1.67x |" in diff
 
 
-def test_diff_never_mixes_normalized_with_raw(tmp_path, monkeypatch, capsys):
-    """ADVICE r10: prior artifact predates queries_normalized → compare
-    raw-vs-raw; a normalized 'now' against a raw 'was' would mask this
-    2x regression entirely (normalized now == raw was == 2.0)."""
-    prev = {"queries": {"q": 2.0}, "queries_normalized": {}, "families": {}}
+def _counts(jobs, stages, tasks):
+    return {"jobs": jobs, "stages": stages, "tasks": tasks}
+
+
+_SAME = {"build": _counts(3, 4, 10), "write": _counts(1, 1, 4)}
+
+
+def test_diff_lists_structural_changes_on_same_cpus(tmp_path, monkeypatch, capsys):
+    grown = {"build": _counts(5, 4, 10), "write": _counts(1, 1, 4)}
+    prev = {
+        "queries": {"q_grew": 1.0, "q_same": 1.0},
+        "structure": {"q_grew": _SAME, "q_same": _SAME},
+        "cpus": 4,
+        "sf": 0.001,
+    }
     st = _mk_state(tmp_path, monkeypatch, prev_doc=prev)
-    st.timings = {"q": 4.0}
-    st.families = {"q": ["q"]}
-    st.query_family = {"q": "q"}
-    st.canary_by_family = {"q": 1.5}  # steal factor 2 → normalized 2.0
-    st.families_done = 3
+    st.timings = {"q_grew": 1.0, "q_same": 1.0}
+    st.structure = {"q_grew": grown, "q_same": _SAME}
+    st.cpus = 4
     st.flush(partial=False)
     diff = (tmp_path / "BENCH_diff.md").read_text()
-    assert "| q | 2.00 | 4.00 | 2.00x |" in diff
+    assert (
+        "| q_grew | 3/4/10 + 1/1/4 | 5/4/10 + 1/1/4 | build jobs +2 |" in diff
+    )
+    assert "q_same" not in diff
+    # the structural rows come before the wall-clock table
+    assert diff.index("q_grew") < diff.index("| query | before (s)")
+    doc = json.loads((tmp_path / "BENCH_LOCAL.json").read_text())
+    assert doc["structure"]["q_grew"] == grown and doc["cpus"] == 4
+
+    # task counts follow the core count: no structural rows across cpus
+    # (nor across sf)
+    prev["cpus"] = 8
+    st = _mk_state(tmp_path, monkeypatch, prev_doc=prev)
+    st.timings = {"q_grew": 1.0, "q_same": 1.0}
+    st.structure = {"q_grew": grown, "q_same": _SAME}
+    st.cpus = 4
+    st.flush(partial=False)
+    diff = (tmp_path / "BENCH_diff.md").read_text()
+    assert "q_grew" not in diff
+    assert (
+        "Structure not compared: sf 0.001, cpus 8 before; sf 0.001, cpus 4 now"
+        in diff
+    )
 
 
 def test_budget_skip_recorded(tmp_path, monkeypatch, capsys):
@@ -174,6 +198,17 @@ def test_bench_incremental_flush_end_to_end(tmp_path):
     assert doc["partial"] is False
     assert set(doc["queries"]) == set(_CHEAP)
     assert set(doc["first_rep_sec"]) == set(_CHEAP)
+    # every query carries the exact structure of its last rep: the build
+    # and the noop write (at least one job), counted separately
+    assert set(doc["structure"]) == set(_CHEAP)
+    assert doc["cpus"] >= 1
+    for name in _CHEAP:
+        st = doc["structure"][name]
+        assert set(st) == {"build", "write"}, name
+        for phase in st.values():
+            assert set(phase) == {"jobs", "stages", "tasks"}, name
+            assert phase["tasks"] >= phase["stages"], name
+        assert st["write"]["jobs"] >= 1 and st["write"]["stages"] >= 1, name
 
 
 def test_bench_sigterm_flushes_parseable_partial(tmp_path):

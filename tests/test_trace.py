@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dataslicer_spark.api import SlicerFrame
-from dataslicer_spark.trace import TraceLog
+from dataslicer_spark.trace import TraceLog, counted
 
 
 @pytest.fixture()
@@ -82,3 +82,36 @@ def test_trace_shared_log_across_frames(spark, src):
     counts = [n for _, n in log.rows()]
     assert labels == ["query_df", "query_df"]
     assert sum(counts) == 100
+
+
+def test_counted_reads_executed_stages_and_tasks(spark):
+    """One shuffle job: a 4-task map stage and a 2-task reduce stage.  Run
+    again, the shuffle output exists, so the map stage is skipped and not
+    counted."""
+    from operator import add
+
+    pairs = spark.sparkContext.parallelize(range(100), 4).map(lambda x: (x % 3, 1))
+    reduced = pairs.reduceByKey(add, 2)
+    out, n = counted(spark, reduced.collect)
+    assert sorted(out) == [(0, 34), (1, 33), (2, 33)]
+    assert n == {"jobs": 1, "stages": 2, "tasks": 6}
+    _, n = counted(spark, reduced.count)
+    assert n == {"jobs": 1, "stages": 1, "tasks": 2}
+
+
+def test_counted_runs_no_job_and_restores_the_callers_group(spark):
+    """Counting is status-tracker reads only: an outer count around an
+    inner count of nothing sees zero jobs.  The caller's job group and
+    description come back."""
+    sc = spark.sparkContext
+    _, n = counted(spark, lambda: counted(spark, lambda: None))
+    assert n == {"jobs": 0, "stages": 0, "tasks": 0}
+    sc.setJobGroup("outer", "outer description")
+    try:
+        counted(spark, lambda: spark.range(3).collect())
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        description = sc.getLocalProperty("spark.job.description")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert (group, description) == ("outer", "outer description")
