@@ -1,7 +1,7 @@
 """Benchmark harness: runs every registered query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the
+host's cores) and prints ONE JSON line: {"metric": ..., "value": total_sec,
+"unit": "sec", "queries": {name: sec}, "sf": ...}.
 
 Each query is materialized through the ``noop`` sink — full computation,
 no driver-side collection, mirroring a cluster write.

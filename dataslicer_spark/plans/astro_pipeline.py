@@ -19,8 +19,6 @@ outlier pass.  Everything is integer-derived → reproducible across runs.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -30,6 +28,7 @@ from ..operators.clustering import dbscan
 from ..operators.joins import merge_metadata_to_sources, select_clusters
 from ..operators.outliers import ps1based_outlier_rm_iqr
 from ..operators.spatial import crossmatch_sky
+from ..session import load_tables
 from ..utils import query_df
 
 
@@ -39,7 +38,7 @@ def make_astro_fixture(
     """(sources, metadata, ps1cal) synthesized from the customer table.
 
     Column names/dtypes follow FIXTURES.md §B (reference-shaped)."""
-    cust = spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
+    cust = load_tables(spark, sf_dir, "customer")
     c = F.col("c_custkey")
     # position moduli are large primes so star positions stay distinct at
     # every scale factor (small moduli made stars collide beyond ~3600 ids)

@@ -1,19 +1,29 @@
-"""SparkSession factory.
+"""SparkSession factory and the sf table loader.
 
 Local-mode defaults are tuned for the test harness (``local[N]``, one JVM),
 but every knob is chosen so the same code runs unchanged on a real cluster:
 AQE handles skew and partition coalescing at runtime, shuffle partitions
-default to a cluster-friendly value that AQE coalesces down locally, and
-Arrow is enabled for the Pandas-UDF kernels (DBSCAN, ODR, similarity).
+default to the host's cores (``cluster_conf`` gives a cluster-sized value),
+and Arrow is enabled for the Pandas-UDF kernels (DBSCAN, ODR, similarity).
 """
 
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
+from weakref import WeakKeyDictionary
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def host_cpus() -> int:
+    """Local cores and default shuffle partitions: ``SPARK_GRAFT_CPUS``
+    when exported, else the cores this process may run on."""
+    exported = os.environ.get("SPARK_GRAFT_CPUS")
+    if exported:
+        return int(exported)
+    return len(os.sched_getaffinity(0))
 
 
 def driver_memory() -> str:
@@ -40,12 +50,12 @@ def get_spark(
     setting carries over.  AQE is on so runtime statistics re-plan joins
     (broadcast conversion, skew-join splitting, partition coalescing).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = host_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -118,13 +128,80 @@ def cluster_conf(
     }
 
 
+# Confs whose values change the schema Spark infers from a parquet footer.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# session -> {absolute path: (files and inference confs read with, schema)}
+_SCHEMAS: WeakKeyDictionary[SparkSession, dict[str, tuple[tuple, StructType]]] = (
+    WeakKeyDictionary()
+)
+
+
+def _listing(path: str) -> tuple[str, tuple] | None:
+    """(absolute path, its files) for a local ``path``: each file's
+    (name, size, mtime_ns) under a directory, or the file's own (size,
+    mtime_ns).  ``None`` when ``path`` is not local or does not exist."""
+    url = urlparse(path)
+    if url.scheme not in ("", "file"):
+        return None
+    local = os.path.abspath(url.path if url.scheme else path)
+    if os.path.isfile(local):
+        st = os.stat(local)
+        return local, ((st.st_size, st.st_mtime_ns),)
+    if not os.path.isdir(local):
+        return None
+    files = []
+    for root, _, names in os.walk(local):
+        for name in names:
+            f = os.path.join(root, name)
+            st = os.stat(f)
+            files.append((os.path.relpath(f, local), st.st_size, st.st_mtime_ns))
+    return local, tuple(sorted(files))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a local path's schema once
+    per session.
+
+    Spark runs one footer-reading job to infer a parquet schema, on every
+    read.  This reader keeps the schema Spark inferred in ``spark``, keyed
+    by the absolute path, its file listing (each file's name, size and
+    ``st_mtime_ns``) and the values of the confs that change inference
+    (``_INFERENCE_CONFS``); a repeat read with the same key declares that
+    schema and runs no job.  A rewritten table or a flipped conf is
+    re-inferred.  Non-local (``scheme://``) paths read as plain
+    ``spark.read.parquet``."""
+    listing = _listing(path)
+    if listing is None:
+        return spark.read.parquet(path)
+    local, files = listing
+    stamp = (files, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    schemas = _SCHEMAS.setdefault(spark, {})
+    hit = schemas.get(local)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    schemas[local] = (stamp, df.schema)
+    return df
+
+
 def load_tables(spark: SparkSession, sf_dir: str, *names: str):
     """Load one or more parquet tables from an sf directory.
 
     Returns a single DataFrame for one name, else a dict.  Scans are lazy;
     Catalyst pushes projection and predicates into the parquet reader.
+    Each table is read through :func:`read_parquet`, so only the first
+    load of a table in a session runs Spark's schema-inference job; the
+    schema is re-inferred when the table's files (name, size, mtime) or
+    the parquet inference confs change.
     """
-    dfs = {n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet")) for n in names}
+    dfs = {n: read_parquet(spark, os.path.join(sf_dir, f"{n}.parquet")) for n in names}
     if len(names) == 1:
         return dfs[names[0]]
     return dfs
