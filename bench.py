@@ -34,8 +34,12 @@ The last rep's counts land in BENCH_LOCAL.json as ``structure`` next to
 query whose structure changed ahead of the wall-clock table.  Wall
 time on a shared host swings one query 3x between identical reps; the
 counts do not move, so a plan regression shows as "+2 build jobs", not
-as a guess about host steal.  ``--only <query> …`` also prints the
-per-rep counts to stderr.
+as a guess about host steal.  A query whose reps after the first (the
+first pays schema inference) disagree is listed in
+``structure_varying`` — the order in which AQE's asynchronous stage jobs
+and checkpoint jobs reach the scheduler can decide which job runs a
+shared stage — and BENCH_diff names it instead of comparing it.
+``--only <query> …`` also prints the per-rep counts to stderr.
 
 Timeout survival (round 11 — r10's driver run was killed at the outer
 timeout with ZERO parseable output because everything was emitted only
@@ -301,6 +305,11 @@ def _fmt_structure(st: dict) -> str:
     )
 
 
+def _varies(reps: list[dict]) -> bool:
+    """Whether the reps after the first ran different structures."""
+    return any(r != reps[1] for r in reps[2:])
+
+
 def _structure_delta(was: dict, now: dict) -> str:
     """The counts that moved, e.g. ``build jobs +2, write tasks -8``."""
     return ", ".join(
@@ -325,6 +334,8 @@ class _RunState:
         self.first_reps: dict[str, float] = {}
         # query -> {"build": counts, "write": counts} of its last rep
         self.structure: dict[str, dict] = {}
+        # queries whose reps after the first disagree (see _varies)
+        self.varying: set[str] = set()
         self.cpus: int | None = None
         self.families: dict[str, list[str]] = {}
         self.budget_skipped: list[str] = []
@@ -367,6 +378,7 @@ class _RunState:
             # rep's build and noop write — comparable across runs at the
             # same sf and `cpus` (task counts follow defaultParallelism)
             "structure": self.structure,
+            "structure_varying": sorted(self.varying),
             "cpus": self.cpus,
             # cold-position honesty: the first rep carries the plan's
             # codegen/JIT cost at its JVM position — when family packing
@@ -407,10 +419,12 @@ class _RunState:
             "| query | before | now | change |",
             "|---|---|---|---|",
         ]
+        # a structure that varies between identical reps is no change
+        varying = self.varying | set(self.prev_doc.get("structure_varying", []))
         changed = [
             (name, prev[name], now)
             for name, now in sorted(self.structure.items())
-            if name in prev and prev[name] != now
+            if name in prev and prev[name] != now and name not in varying
         ]
         for name, was, now in changed:
             lines.append(
@@ -419,6 +433,9 @@ class _RunState:
             )
         if not changed:
             lines.append("| (none) | | | |")
+        shown = sorted(varying & set(self.structure))
+        if shown:
+            lines += ["", "Varying between reps, not compared: " + ", ".join(shown)]
         return lines + ["", "## Wall clock", ""]
 
     def _write_diff(self) -> None:
@@ -627,6 +644,8 @@ def main(only: list[str] | None = None) -> None:
             state.first_reps[n] = v[0]
         for n, reps in got["structure"].items():
             state.structure[n] = reps[-1]
+            if _varies(reps):
+                state.varying.add(n)
             if only:
                 for i, (sec, st) in enumerate(zip(got["runs"][n], reps), 1):
                     print(

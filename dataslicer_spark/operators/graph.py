@@ -496,7 +496,6 @@ def sssp_weighted(
     node_col: str = "node",
     max_rounds: int = 6,
     directed: bool = False,
-    validate_weights: bool = True,
 ) -> DataFrame:
     """Weighted single-source (multi-source) shortest paths — ``(node,
     dist)`` for every node whose shortest path from ``sources`` uses at
@@ -517,12 +516,8 @@ def sssp_weighted(
     negative weight raises ValueError rather than being silently
     truncated by the long cast) — integer min/+ is exact in every
     engine, so the result feeds cross-engine oracles bit-exactly; scale
-    fractional weights to integers upstream.  The check costs one extra
-    pass over the edge table; at 100 TB pass
-    ``validate_weights=False`` when the weight column's domain is
-    already guaranteed by the lake schema (the cast still happens, so
-    the guarantee MUST hold — the flag skips the scan, not the
-    contract).
+    fractional weights to integers upstream.  The check always runs and
+    costs one extra pass over the edge table (a ``limit(1)`` probe).
     Per-round ``materialize`` truncates the growing lineage; one
     emptiness probe per round doubles as early exit.  Rounds bound the
     EDGE COUNT of paths, not the node count — at 100 TB you cap the
@@ -546,20 +541,18 @@ def sssp_weighted(
     # (0.5 -> 0) and a negative weight breaks the monotone-recurrence
     # argument behind the early exit — both must be hard errors, not
     # quietly-wrong distances
-    if validate_weights:
-        bad = e.filter(
-            F.col("w").isNull()
-            | F.col("__worig").isNull()
-            | (F.col("w").cast("double") != F.col("__worig"))
-            | (F.col("__worig") < 0)
-        ).limit(1)
-        bad_row = bad.collect()
-        if bad_row:
-            raise ValueError(
-                "sssp_weighted requires non-negative INTEGER weights "
-                f"(got {bad_row[0]['__worig']!r} in column {weight_col!r}); "
-                "scale fractional weights to integers upstream"
-            )
+    bad_row = e.filter(
+        F.col("w").isNull()
+        | F.col("__worig").isNull()
+        | (F.col("w").cast("double") != F.col("__worig"))
+        | (F.col("__worig") < 0)
+    ).limit(1).collect()
+    if bad_row:
+        raise ValueError(
+            "sssp_weighted requires non-negative INTEGER weights "
+            f"(got {bad_row[0]['__worig']!r} in column {weight_col!r}); "
+            "scale fractional weights to integers upstream"
+        )
     e = e.drop("__worig")
     if not directed:
         e = e.unionByName(

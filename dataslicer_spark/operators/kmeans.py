@@ -64,6 +64,9 @@ from .. import utils
 from ..utils import check_col, materialize, spread, sql_ident, sum_partials
 
 FP_BITS_DEFAULT = 20
+# k·d cells up to which kmeans_assign inlines the centroids as literals;
+# past it the assignment runs as an Arrow kernel
+EXPR_MAX_CELLS = 512
 
 
 def quantize_expr(vec_col: str, fp_bits: int = FP_BITS_DEFAULT) -> Column:
@@ -228,9 +231,9 @@ def kmeans_assign(
 
     Two physical strategies, same integer math, bit-identical output:
 
-    - small ``k·d`` (≤ 512): the centroid table inlines as literals in a
-      ``least``-of-structs expression — zero Python, fine while the
-      expression stays small;
+    - small ``k·d`` (≤ ``EXPR_MAX_CELLS``, 512): the centroid table
+      inlines as literals in a ``least``-of-structs expression — zero
+      Python, fine while the expression stays small;
     - large ``k·d``: an Arrow ``mapInPandas`` kernel (still map-only —
       centroids ride a broadcast, the corpus never shuffles).  The HOF
       literal expression is CodegenFallback (interpreted) and its cost
@@ -245,7 +248,7 @@ def kmeans_assign(
     # or shuffle-rooted
     df = spread(df)
     k, dim = len(centroids), len(centroids[0])
-    if k * dim <= 512:
+    if k * dim <= EXPR_MAX_CELLS:
         best = _best_cluster("__xq", centroids)
         # non-finite elements must yield null cluster/d2 (matching the
         # Arrow kernel's isfinite screen): without this, non-ANSI

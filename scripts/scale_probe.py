@@ -1,829 +1,500 @@
-"""Scale probe: run the heavy kernels at 1× and 4× data volume and report
-the scaling factor — evidence that the plans scale sub-quadratically (the
-100 TB design claim, checked at the scale this box allows).
+"""Scale probe: the Spark jobs, stages and tasks of 44 heavy kernels at 1×
+and 4× data — the 100 TB design claim, checked as plan shape.  Each
+kernel runs once, cold, per size under ``trace.counted``: unlike wall
+time, the counts do not move with host load.  Equal job and stage counts
+mean one plan at both sizes.
 
-4× data is synthesized by unioning the sf0.1 tables with shifted keys
-(distinct key spaces, same distributions).  A kernel whose time grows
-≈4× is linear; the near-dup kernels are allowed the candidate-growth
-factor of their banding but must stay far from 16× (quadratic).
+Every input — an sf table, a derived table such as an edge set, and its
+4× replica (shifted keys; the near-dup corpora also salt every token of a
+copy, so the 4× corpus keeps the 1× near-dup density instead of holding
+~16× the qualifying pairs) — is written by :func:`write_input` as one
+parquet file of one row group, the sf tables' layout, so both sizes scan
+the way the sf tables do.
 
-Usage: python scripts/scale_probe.py [kernel ...] → one JSON line per
-kernel (names filter the run — triage tool for re-measuring a suspect
-row in isolation, like ``bench.py --family``; a full-probe row reflects
-the JVM/JIT state of the 25+ kernels before it, so confirm a suspect
-factor with a filtered rerun before calling it a regression).
+A kernel lists the bounds that pick its path by size (``Kernel.bounds``):
+module constants such as ``graph.DRIVER_MAX_EDGES``, or Spark confs such
+as ``spark.sql.autoBroadcastJoinThreshold``.  A row whose job or stage
+counts differ names them with their values.  One that differs with none
+listed runs twice more per size: if identical runs disagree the row is
+marked ``varying``, else ``unexplained`` and the script exits 1.
+``bpe_merge_count_16_vs_64`` is a parameter axis (16 vs 64 merges on the
+1× corpus): its row reports jobs per added merge.
+
+Usage: python scripts/scale_probe.py [SF_DIR] (default
+/root/testdata/sf0.1) → one JSON line per kernel.
 """
 
 from __future__ import annotations
 
+import glob
+import importlib
 import json
 import os
+import shutil
 import sys
-import time
+import tempfile
+from collections.abc import Callable
+from dataclasses import dataclass
+from types import SimpleNamespace
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = "/root/testdata/sf0.1"
+from pyspark.sql import DataFrame  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
+
+from dataslicer_spark.functions import text  # noqa: E402
+from dataslicer_spark.operators import (  # noqa: E402
+    asof, bootstrap, bpe, classifier, clustering, decontam, dedup, dedup_index,
+    drift, dsir, fuzzy, graph, kmeans, pq, resample, retrieval, retrieval_index,
+    sampling, similarity, span_dedup, spatial, timeseries, weighted_minhash,
+)
+from dataslicer_spark.plans.astro_pipeline import make_astro_fixture  # noqa: E402
+from dataslicer_spark.session import get_spark, load_tables, read_parquet  # noqa: E402
+from dataslicer_spark.streaming.events import load_events  # noqa: E402
+from dataslicer_spark.trace import counted  # noqa: E402
+
+SIZES = (1, 4)
 
 
-def main() -> None:
-    from pyspark.sql import functions as F
+def write_input(
+    df: DataFrame, path: str, copies: int = 1,
+    replica: Callable[[int], dict] | None = None,
+) -> str:
+    """Write ``copies`` replicas of ``df`` to ``path`` as one parquet file
+    holding one row group; replica ``i`` (0 is ``df`` itself) replaces
+    the columns ``replica(i)`` maps to new values.  Returns ``path``."""
+    out = df
+    for i in range(1, copies):
+        out = out.unionByName(df.withColumns(replica(i)))
+    tmp = path + ".parts"
+    # one task writes one file; a row group closes only past the block size
+    out.coalesce(1).write.option("parquet.block.size", 1 << 30).parquet(tmp)
+    (part,) = glob.glob(os.path.join(tmp, "part-*.parquet"))
+    os.replace(part, path)
+    shutil.rmtree(tmp)
+    return path
 
-    from dataslicer_spark.operators.clustering import dbscan
-    from dataslicer_spark.operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
-    from dataslicer_spark.operators.spatial import crossmatch_sky
-    from dataslicer_spark.plans.astro_pipeline import make_astro_fixture
-    from dataslicer_spark.session import get_spark
 
-    spark = get_spark("scale-probe")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
+def _shift(**steps: int) -> Callable[[int], dict]:
+    """Replica ``i`` adds ``i * step`` to each named key column."""
+    return lambda i: {c: F.col(c) + step * i for c, step in steps.items()}
 
-    docs1 = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-    docs4 = docs1
-    # near-dup corpora additionally salt every TOKEN of each copy: a
-    # verbatim shifted-id copy is a perfect near-dup of its original, so
-    # the 4× corpus would hold ~16× the qualifying pairs — the OUTPUT
-    # itself turns quadratic and no algorithm can scale sub-quadratically
-    # against it.  Token-salting keeps each copy's shingle-count
-    # distribution while making cross-copy shingles distinct: 4× docs,
-    # constant near-dup density — the shape a 4×-bigger crawl actually has.
-    docs4_salted = docs1
-    for i in (1, 2, 3):
-        shifted = docs1.withColumn("doc_id", F.col("doc_id") + 1_000_000 * i)
-        docs4 = docs4.unionByName(shifted)
-        docs4_salted = docs4_salted.unionByName(
-            shifted.withColumn(
-                "text", F.regexp_replace(F.col("text"), r"(\S+)", f"c{i}$1")
-            )
-        )
-    docs1, docs4 = docs1.cache(), docs4.cache()
-    docs4_salted = docs4_salted.cache()
-    docs1.count(), docs4.count(), docs4_salted.count()
 
-    src1, _, cal1 = make_astro_fixture(spark, SF_DIR)
-    src4 = src1
-    cal4 = cal1
-    for i in (1, 2, 3):
-        src4 = src4.unionByName(
-            src1.withColumn("sourceid", F.col("sourceid") + 10_000_000 * i)
-            .withColumn("ra", (F.col("ra") + 90.0 * i) % 360.0)
-        )
-        cal4 = cal4.unionByName(
-            cal1.withColumn("_id", F.col("_id") + 10_000_000 * i)
-            .withColumn("ra", (F.col("ra") + 90.0 * i) % 360.0)
-        )
-    src1, src4 = src1.cache(), src4.cache()
-    cal1, cal4 = cal1.cache(), cal4.cache()
-    src1.count(), src4.count(), cal1.count(), cal4.count()
+def _salt(col: str, key: str, step: int) -> Callable[[int], dict]:
+    """Shifted ``key``, and every token of ``col`` tagged with its replica."""
+    tagged = lambda i: F.regexp_replace(F.col(col), r"(\S+)", f"c{i}$1")  # noqa: E731
+    return lambda i: {key: F.col(key) + step * i, col: tagged(i)}
 
-    only = set(sys.argv[1:])
 
-    def run(name, fn1, fn4):
-        if only and name not in only:
-            return
-        # warm BOTH plan shapes (the 4× DAG compiles its own codegen) and
-        # take the best of two timed runs per size — sub-second kernels
-        # are otherwise dominated by scheduler jitter
-        fn1()
-        fn4()
+def _sky(id_col: str) -> Callable[[int], dict]:
+    """Shifted ids, and positions rotated a quarter turn per replica."""
+    return lambda i: {
+        id_col: F.col(id_col) + 10_000_000 * i, "ra": (F.col("ra") + 90.0 * i) % 360.0
+    }
 
-        def best(fn):
-            times = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fn()
-                times.append(time.perf_counter() - t0)
-            return min(times)
 
-        t1 = best(fn1)
-        t4 = best(fn4)
-        print(json.dumps({
-            "kernel": name, "t_1x_sec": round(t1, 2), "t_4x_sec": round(t4, 2),
-            "scaling_factor": round(t4 / t1, 2),
-        }))
+def _table(name, *cols):
+    return lambda spark, sf: load_tables(spark, sf, name).select(*(cols or ["*"]))
 
-    run(
-        "dbscan_sky",
-        lambda: dbscan(src1, 3.0, 2, "sourceid", coord="sky").write
-        .format("noop").mode("overwrite").save(),
-        lambda: dbscan(src4, 3.0, 2, "sourceid", coord="sky").write
-        .format("noop").mode("overwrite").save(),
-    )
-    run(
-        "crossmatch_sky",
-        lambda: crossmatch_sky(src1, cal1, 3.0, source_id="sourceid").write
-        .format("noop").mode("overwrite").save(),
-        lambda: crossmatch_sky(src4, cal4, 3.0, source_id="sourceid").write
-        .format("noop").mode("overwrite").save(),
-    )
-    run(
-        "minhash_lsh",
-        lambda: minhash_lsh_pairs(docs1, "doc_id").write
-        .format("noop").mode("overwrite").save(),
-        lambda: minhash_lsh_pairs(docs4, "doc_id").write
-        .format("noop").mode("overwrite").save(),
-    )
-    # near-dup regime (t=0.8): exercises the PPJoin prefix-filtered plan
-    # — the regime this exact kernel is for (below ~0.7 the operator
-    # auto-selects the direct posting join, and at crawl scale the low-
-    # threshold job belongs to MinHash LSH anyway)
-    run(
-        "ngram_jaccard",
-        lambda: ngram_jaccard_pairs(docs1, "doc_id", threshold=0.8).write
-        .format("noop").mode("overwrite").save(),
-        lambda: ngram_jaccard_pairs(docs4_salted, "doc_id", threshold=0.8)
-        .write.format("noop").mode("overwrite").save(),
-    )
 
-    # temporal kernels: 4× = more users (distinct key space), same per-key
-    # span — the shape a bigger deployment actually has
-    from dataslicer_spark.operators.asof import asof_join
-    from dataslicer_spark.operators.resample import resample_ffill
-    from dataslicer_spark.streaming.events import load_events
-
-    ev1 = load_events(spark, SF_DIR).select(
+def _events(spark, sf):
+    return load_events(spark, sf).select(
         "event_id", "user_id", "event_type",
         F.unix_micros(F.col("ts")).alias("ts_us"), "value",
     )
-    ev4 = ev1
-    for i in (1, 2, 3):
-        ev4 = ev4.unionByName(
-            ev1.withColumn("user_id", F.col("user_id") + 1_000_000 * i)
-            .withColumn("event_id", F.col("event_id") + 10_000_000 * i)
-        )
-    ev1, ev4 = ev1.cache(), ev4.cache()
-    ev1.count(), ev4.count()
 
-    def asof_fn(ev):
-        clicks = ev.filter(F.col("event_type") == "click").select(
-            "event_id", "user_id", "ts_us"
-        )
-        purch = ev.filter(F.col("event_type") == "purchase").select(
-            "user_id", "ts_us", F.col("value").alias("pv"), "event_id"
-        ).dropDuplicates(["user_id", "ts_us"])
-        return lambda: asof_join(
-            clicks, purch, "ts_us", ["user_id"], ["pv"], tiebreak_col="event_id"
-        ).write.format("noop").mode("overwrite").save()
 
-    run("asof_join", asof_fn(ev1), asof_fn(ev4))
-
-    def resample_fn(ev):
-        purch = ev.filter(F.col("event_type") == "purchase").select(
-            "user_id", "ts_us", F.col("value").alias("pv")
-        ).dropDuplicates(["user_id", "ts_us"])
-        return lambda: resample_ffill(
-            purch, "ts_us", ["user_id"], ["pv"], step_us=3_600_000_000
-        ).write.format("noop").mode("overwrite").save()
-
-    run("resample_ffill", resample_fn(ev1), resample_fn(ev4))
-
-    # decontamination: the corpus grows 4×, the eval/benchmark set stays
-    # fixed (its real-world shape) — linear-in-corpus is the claim
-    from dataslicer_spark.operators.decontam import contamination_pairs
-    from dataslicer_spark.operators.sampling import temperature_resample
-
-    ev_docs = docs1.filter(F.col("doc_id") % 10 == 0).select(
-        F.col("doc_id").alias("eval_id"), "text"
+def _cust_supp_edges(spark, sf):
+    li, o = load_tables(spark, sf, "lineitem", "orders").values()
+    return li.join(o, li.l_orderkey == o.o_orderkey).select(
+        (F.col("o_custkey") * 2).alias("src"), (F.col("l_suppkey") * 2 + 1).alias("dst")
     )
 
-    def decontam_fn(docs):
-        return lambda: contamination_pairs(
-            docs, ev_docs, "doc_id", "eval_id", n=3, min_common=2
-        ).write.format("noop").mode("overwrite").save()
 
-    run("decontaminate", decontam_fn(docs1), decontam_fn(docs4))
+def _part_edges(spark, sf):
+    """Part co-occurrence edges of the high-value orders' line items."""
+    li, o = load_tables(spark, sf, "lineitem", "orders").values()
+    hi = o.filter(F.col("o_totalprice") > 450_000.0).select("o_orderkey")
+    lines = li.join(hi, li.l_orderkey == hi.o_orderkey, "left_semi")
+    a = lines.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("src"))
+    b = lines.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("dst"))
+    pairs = a.join(b, "ok").filter(F.col("src") < F.col("dst"))
+    return pairs.select("src", "dst").distinct()
 
-    def temper_fn(docs):
-        return lambda: temperature_resample(
-            docs, "source", "doc_id", alpha=0.5, target_fraction=0.5
-        ).write.format("noop").mode("overwrite").save()
 
-    run("temperature_resample", temper_fn(docs1), temper_fn(docs4))
+# input name -> (its 1× frame from the sf dir, replica(i) column map)
+INPUTS = {
+    "docs": (_table("documents"), _shift(doc_id=1_000_000)),
+    "docs_salted": (_table("documents"), _salt("text", "doc_id", 1_000_000)),
+    "events": (_events, _shift(user_id=1_000_000, event_id=10_000_000)),
+    "customer": (
+        _table("customer", "c_custkey", "c_name"),
+        _salt("c_name", "c_custkey", 1_000_000),
+    ),
+    "emb": (_table("embeddings"), _shift(vec_id=1_000_000)),
+    "sources": (lambda s, sf: make_astro_fixture(s, sf)[0], _sky("sourceid")),
+    "catalog": (lambda s, sf: make_astro_fixture(s, sf)[2], _sky("_id")),
+    "cust_supp_edges": (_cust_supp_edges, _shift(src=10_000_000)),
+    "part_edges": (_part_edges, _shift(src=1_000_000, dst=1_000_000)),
+}
 
-    # round-3 temporal kernels (operators/timeseries.py): same
-    # more-users-fixed-span scaling shape as asof/resample
-    from dataslicer_spark.operators.timeseries import (
-        debounce, interpolate_linear, rolling_window_stats,
+
+def write_inputs(spark, sf_dir: str, root: str, names) -> dict[str, dict[int, str]]:
+    """``{input: {size: path}}``: each named input at every size in SIZES,
+    written under ``root`` by :func:`write_input`."""
+    paths: dict[str, dict[int, str]] = {}
+    for name in names:
+        load, replica = INPUTS[name]
+        base = load(spark, sf_dir)
+        paths[name] = {
+            n: write_input(base, os.path.join(root, f"{name}_{n}x.parquet"), n, replica)
+            for n in SIZES
+        }
+    return paths
+
+
+@dataclass(frozen=True)
+class Kernel:
+    """``run(d)`` returns the frame to sink, or runs the kernel's own
+    action and returns anything else.  ``d`` has one attribute per input
+    at the size under test, ``d.n`` (1 or 4), ``d.tmp`` (a fresh scratch
+    dir) and ``d.one`` (the inputs at 1×, for fixed query and eval sets).
+    """
+
+    inputs: str  # input names, space-separated
+    run: Callable[[SimpleNamespace], object]
+    # ``module.NAME`` constants and ``spark.*`` confs that pick the path by size
+    bounds: tuple[str, ...] = ()
+    # a parameter axis instead of the data axis: (unit, units added 1× → 4×)
+    axis: tuple[str, int] | None = None
+
+
+def _purchases(ev, *cols):
+    return ev.filter(F.col("event_type") == "purchase").select(
+        "user_id", "ts_us", *cols
+    ).dropDuplicates(["user_id", "ts_us"])
+
+
+def _asof(d):
+    clicks = d.events.filter(F.col("event_type") == "click")
+    purch = _purchases(d.events, F.col("value").alias("pv"), "event_id")
+    return asof.asof_join(
+        clicks.select("event_id", "user_id", "ts_us"), purch, "ts_us", ["user_id"],
+        ["pv"], tiebreak_col="event_id",
     )
 
-    def rolling_fn(ev):
-        purch = ev.filter(F.col("event_type") == "purchase")
-        return lambda: rolling_window_stats(
-            purch, "ts_us", ["user_id"], "value", width_us=3_600_000_000
-        ).write.format("noop").mode("overwrite").save()
 
-    run("rolling_window", rolling_fn(ev1), rolling_fn(ev4))
-
-    def interp_fn(ev):
-        purch = ev.filter(F.col("event_type") == "purchase").select(
-            "user_id", "ts_us", F.col("value").alias("pv")
-        ).dropDuplicates(["user_id", "ts_us"])
-        return lambda: interpolate_linear(
-            purch, "ts_us", ["user_id"], "pv", step_us=3_600_000_000
-        ).write.format("noop").mode("overwrite").save()
-
-    run("interpolate_linear", interp_fn(ev1), interp_fn(ev4))
-
-    def debounce_fn(ev):
-        purch = ev.filter(F.col("event_type") == "purchase").select(
-            "user_id", "ts_us", "event_id"
-        ).dropDuplicates(["user_id", "ts_us"])
-        return lambda: debounce(
-            purch, "ts_us", ["user_id"], window_us=3_600_000_000
-        ).write.format("noop").mode("overwrite").save()
-
-    run("debounce", debounce_fn(ev1), debounce_fn(ev4))
-
-    # fuzzy join: 4× distinct names → variant index grows 4×; candidate
-    # pairs grow with name-family density, not quadratically
-    from dataslicer_spark.operators.fuzzy import edit_distance_self_join
-
-    cust1 = spark.read.parquet(os.path.join(SF_DIR, "customer.parquet")).select(
-        "c_custkey", "c_name"
-    )
-    cust4 = cust1
-    for i in (1, 2, 3):
-        cust4 = cust4.unionByName(
-            cust1.withColumn("c_custkey", F.col("c_custkey") + 1_000_000 * i)
-            .withColumn("c_name", F.concat(F.lit(f"x{i}-"), F.col("c_name")))
-        )
-    cust1, cust4 = cust1.cache(), cust4.cache()
-    cust1.count(), cust4.count()
-
-    def fuzzy_fn(cust):
-        return lambda: edit_distance_self_join(
-            cust, "c_custkey", "c_name", max_dist=1
-        ).write.format("noop").mode("overwrite").save()
-
-    run("fuzzy_join", fuzzy_fn(cust1), fuzzy_fn(cust4))
-
-    # trigram-LM scoring: model + broadcast join + per-doc agg
-    from dataslicer_spark.functions.text import trigram_lm_scores, trigram_model
-
-    def trigram_fn(docs):
-        def go():
-            model = trigram_model(docs, "text", max_chars=512)
-            trigram_lm_scores(docs, model, "doc_id", "text", max_chars=512) \
-                .write.format("noop").mode("overwrite").save()
-        return go
-
-    run("trigram_lm", trigram_fn(docs1), trigram_fn(docs4))
-
-    # PQ encode + ADC search (codebooks fixed across sizes: same offline
-    # training, so the probe isolates the distributed encode/search cost)
-    from dataslicer_spark.operators.pq import pq_encode, pq_search, train_pq
-
-    emb1 = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
-    emb4 = emb1
-    for i in (1, 2, 3):
-        emb4 = emb4.unionByName(
-            emb1.withColumn("vec_id", F.col("vec_id") + 1_000_000 * i)
-        )
-    emb1, emb4 = emb1.cache(), emb4.cache()
-    emb1.count(), emb4.count()
-    cbs = train_pq(emb1, m=8, k=64, seed=3)
-    pq_queries = emb1.filter(F.col("vec_id") % 500 == 1).select(
+def _queries(emb, mod):
+    return emb.filter(F.col("vec_id") % 500 == mod).select(
         F.col("vec_id").alias("query_id"), "embedding"
-    ).cache()
-    pq_queries.count()
-
-    def pq_fn(emb):
-        def go():
-            codes = pq_encode(emb, cbs)
-            pq_search(codes, pq_queries, cbs, k=10) \
-                .write.format("noop").mode("overwrite").save()
-        return go
-
-    run("pq_encode_search", pq_fn(emb1), pq_fn(emb4))
-
-    # round-4 kernels ---------------------------------------------------
-    # batched exact cosine top-k: fixed query batch, corpus grows 4× —
-    # map-side partial top-k keeps the shuffle at partitions·nq·k, so
-    # the probe should be ~linear in the corpus
-    from dataslicer_spark.operators.similarity import cosine_topk_batched
-
-    def topk_fn(emb):
-        return lambda: cosine_topk_batched(
-            emb, pq_queries, k=10
-        ).write.format("noop").mode("overwrite").save()
-
-    run("cosine_topk_batched", topk_fn(emb1), topk_fn(emb4))
-
-    # k-means: fixed k — per-iteration cost is n·k·d kernel work plus a
-    # partitions·k·d shuffle → linear in n
-    from dataslicer_spark.operators.kmeans import kmeans
-
-    def kmeans_fn(emb):
-        return lambda: kmeans(
-            emb.select("vec_id", "embedding"), "vec_id", "embedding",
-            k=8, n_iter=3,
-        ).write.format("noop").mode("overwrite").save()
-
-    run("kmeans", kmeans_fn(emb1), kmeans_fn(emb4))
-
-    # SemDeDup: k grows WITH the corpus (8 → 32) so cluster size stays
-    # bounded — that is the operator's documented scale contract (the
-    # within-cluster pair join is quadratic in cluster size, linear in
-    # corpus size at fixed cluster size)
-    from dataslicer_spark.operators.dedup import semantic_dedup
-
-    def semdedup_fn(emb, k):
-        def go():
-            surv, _ = semantic_dedup(
-                emb.select("vec_id", "embedding"), threshold=0.35,
-                k=k, n_iter=2,
-            )
-            surv.write.format("noop").mode("overwrite").save()
-        return go
-
-    run("semantic_dedup", semdedup_fn(emb1, 8), semdedup_fn(emb4, 32))
-
-    # classifier training: 3 scan+aggregate epochs → linear
-    from dataslicer_spark.operators.classifier import (
-        add_text_features, batch_perceptron_fit, perceptron_predict,
     )
 
-    def classifier_fn(docs):
-        def go():
-            feats = add_text_features(docs).withColumn(
-                "y",
-                F.when(F.col("lang") == "en", F.lit(1)).otherwise(F.lit(-1)),
-            ).persist()
-            fcols = ["f_len", "f_spaces", "f_digits", "f_upper", "f_punct"]
-            try:
-                w = batch_perceptron_fit(feats, fcols, "y", n_epochs=3)
-                perceptron_predict(feats, fcols, w).write.format(
-                    "noop"
-                ).mode("overwrite").save()
-            finally:
-                feats.unpersist()
-        return go
 
-    run("perceptron_train", classifier_fn(docs1), classifier_fn(docs4))
+def _pq(d):
+    """Codebooks trained on the 1× corpus at both sizes."""
+    cbs = pq.train_pq(d.one.emb, m=8, k=64, seed=3)
+    return pq.pq_search(pq.pq_encode(d.emb, cbs), _queries(d.one.emb, 1), cbs, k=10)
 
-    # BPE training: per round one pair-frequency aggregate → linear in
-    # corpus volume (4× docs, same distribution)
-    from dataslicer_spark.operators.bpe import bpe_apply, bpe_fit
 
-    def bpe_fn(docs):
-        def go():
-            merges = bpe_fit(docs, "text", n_merges=3, max_chars=256)
-            bpe_apply(docs, merges, "text", max_chars=256).write.format(
-                "noop"
-            ).mode("overwrite").save()
-        return go
+def _perceptron(d):
+    feats = classifier.add_text_features(d.docs).withColumn(
+        "y", F.when(F.col("lang") == "en", F.lit(1)).otherwise(F.lit(-1))
+    ).persist()
+    fcols = ["f_len", "f_spaces", "f_digits", "f_upper", "f_punct"]
+    w = classifier.batch_perceptron_fit(feats, fcols, "y", n_epochs=3)
+    return classifier.perceptron_predict(feats, fcols, w)
 
-    run("bpe_train_apply", bpe_fn(docs1), bpe_fn(docs4))
 
-    # BPE merge-count scaling: FIXED corpus, 16 vs 64 merges — the
-    # incremental fit (materialize per round, apply only the newest
-    # merge) must be ~linear in merge count (≈4×), not the ≈16× of the
-    # old re-apply-the-whole-chain shape; this is the knob that grows to
-    # 32k in a production vocabulary, so its exponent matters more than
-    # the corpus axis above.  Reported as t_1x=16 merges, t_4x=64 merges.
-    def bpe_merges_fn(n):
-        return lambda: bpe_fit(docs1, "text", n_merges=n, max_chars=256)
+def _pagerank(d):
+    e = d.cust_supp_edges
+    rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    return graph.pagerank(e.unionByName(rev), n_iter=3)
 
-    run("bpe_merge_count_16_vs_64", bpe_merges_fn(16), bpe_merges_fn(64))
 
-    # BPE merge counting, DATA axis (round 10): 16 merges on 1× vs 4×
-    # corpus.  The 16-vs-64 row above scales the vocabulary knob; this
-    # one pins the corpus knob at a merge count where per-round
-    # aggregate cost (one pair-frequency aggregate per round, map-side
-    # combined) dominates the fixed per-round overhead — must be
-    # ~linear in corpus volume.
-    run(
-        "bpe_merge_count_data_axis",
-        lambda: bpe_fit(docs1, "text", n_merges=16, max_chars=256),
-        lambda: bpe_fit(docs4, "text", n_merges=16, max_chars=256),
+def _scored(docs):
+    tk = F.split(F.trim(F.col("text")), r"\s+")
+    distinct = F.size(F.array_distinct(tk)).cast("double")
+    return docs.filter(F.trim(F.col("text")) != "").select(
+        "doc_id", "source", F.size(tk).alias("n_tok"),
+        (distinct / F.size(tk).cast("double")).alias("score"),
     )
 
-    # PageRank: 4× = more customers (distinct key space), same supplier
-    # set — edges grow ~4×, rounds are joins + aggregates → ~linear
-    from dataslicer_spark.operators.graph import pagerank
 
-    li1 = spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet"))
-    o1 = spark.read.parquet(os.path.join(SF_DIR, "orders.parquet"))
-    cs1 = li1.join(o1, li1.l_orderkey == o1.o_orderkey).select(
-        (F.col("o_custkey") * 2).alias("src"),
-        (F.col("l_suppkey") * 2 + 1).alias("dst"),
-    )
-    cs4 = cs1
-    for i in (1, 2, 3):
-        cs4 = cs4.unionByName(
-            cs1.withColumn("src", F.col("src") + 10_000_000 * i)
-        )
-    def pr_fn(cs):
-        bidir = cs.unionByName(
-            cs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        return lambda: pagerank(bidir, n_iter=3).write.format("noop").mode(
-            "overwrite"
-        ).save()
-
-    run("pagerank", pr_fn(cs1.cache()), pr_fn(cs4.cache()))
-
-    # round-4 additions: triangle census and LPA communities on the part
-    # co-occurrence graph (4× = more orders → ~4× edges, same degree
-    # distribution, so wedge space grows ~linearly under the degree
-    # orientation); bootstrap CI is one scan + map-only explosion →
-    # strictly linear
-    from dataslicer_spark.operators.bootstrap import bootstrap_mean_ci
-    from dataslicer_spark.operators.graph import label_propagation, triangle_count
-
-    hi1 = o1.filter(F.col("o_totalprice") > 450_000.0).select("o_orderkey")
-    liw1 = li1.join(hi1, li1.l_orderkey == hi1.o_orderkey, "left_semi")
-    pa = liw1.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pa"))
-    pb = liw1.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pb"))
-    pe1 = (
-        pa.join(pb, "ok").filter(F.col("pa") < F.col("pb"))
-        .select(F.col("pa").alias("src"), F.col("pb").alias("dst")).distinct()
-    )
-    pe4 = pe1
-    for i in (1, 2, 3):
-        pe4 = pe4.unionByName(
-            pe1.withColumn("src", F.col("src") + 1_000_000 * i)
-            .withColumn("dst", F.col("dst") + 1_000_000 * i)
-        )
-    pe1, pe4 = pe1.cache(), pe4.cache()
-    pe1.count(), pe4.count()
-
-    run(
-        "triangle_count",
-        lambda: triangle_count(pe1).write.format("noop").mode("overwrite").save(),
-        lambda: triangle_count(pe4).write.format("noop").mode("overwrite").save(),
-    )
-    run(
-        "label_propagation",
-        lambda: label_propagation(pe1, n_iter=3).write.format("noop")
-        .mode("overwrite").save(),
-        lambda: label_propagation(pe4, n_iter=3).write.format("noop")
-        .mode("overwrite").save(),
+def _bm25_index(d):
+    retrieval_index.build_bm25_index(d.docs, d.tmp)
+    return retrieval_index.search_bm25_index(
+        d.docs.sparkSession, d.tmp, ["merge", "join", "scan"], k=10
     )
 
-    def boot_fn(ev):
-        return lambda: bootstrap_mean_ci(
-            ev, "value", "event_id", n_replicates=64
-        ).write.format("noop").mode("overwrite").save()
 
-    run("bootstrap_ci", boot_fn(ev1), boot_fn(ev4))
-
-    # round-6 additions: BM25 is one conditional-count aggregate + a
-    # 1-row broadcast + TakeOrdered; DSIR is map-only gram construction +
-    # a bounded bucket model broadcast back — both strictly linear
-    from dataslicer_spark.operators.dsir import dsir_select
-    from dataslicer_spark.operators.retrieval import bm25_topk
-
-    def bm25_fn(docs):
-        return lambda: bm25_topk(
-            docs, ["spark", "vector", "fast"], k=10
-        ).write.format("noop").mode("overwrite").save()
-
-    run("bm25_topk", bm25_fn(docs1), bm25_fn(docs4))
-
-    def dsir_fn(docs):
-        return lambda: dsir_select(
-            docs, F.col("lang") == "en", k=50, n_buckets=4096
-        ).write.format("noop").mode("overwrite").save()
-
-    run("dsir_select", dsir_fn(docs1), dsir_fn(docs4))
-
-    # round-7: ExactSubstr span dedup — windows grow linearly with
-    # tokens; the fingerprint rank is a uniform-key shuffle of (fp, id,
-    # pos) triples, so 4× docs ⇒ ~4× rows through both windows (the
-    # shifted copies ARE corpus-wide duplicates, so the 4× probe also
-    # carries a maximal duplicate load — the worst case, not the average)
-    from dataslicer_spark.operators.span_dedup import remove_duplicated_spans
-
-    def span_fn(docs):
-        return lambda: remove_duplicated_spans(
-            docs, "doc_id", k=8
-        ).write.format("noop").mode("overwrite").save()
-
-    run("span_dedup_scrub", span_fn(docs1), span_fn(docs4))
-
-    # round-7 kernels ------------------------------------------------
-
-    # token-budget selection: the bucketed prefix-sum plan — 4× corpus
-    # ⇒ 4× bucket aggregation work; the budget is scaled with the data
-    # so the kept set (and the per-bucket windows) also grow 4× — the
-    # honest worst case for the two-level plan
-    from dataslicer_spark.operators.sampling import (
-        epoch_mixture, token_budget_select,
+def _minhash_index(d):
+    path = os.path.join(d.tmp, "idx")
+    dedup_index.build_minhash_index(d.docs, path, "doc_id", num_perm=64, bands=32)
+    toks = F.split(F.trim(F.col("text")), r"\s+")
+    head = F.slice(toks, 1, F.greatest(F.size(toks) - 3, F.lit(1)))
+    batch = d.docs.filter(F.col("doc_id") % 16 == 0).select(
+        (F.col("doc_id") + 10_000_000).alias("doc_id"),
+        F.concat_ws(" ", head).alias("text"),
     )
+    return dedup_index.dedup_against_minhash_index(
+        batch, path, "doc_id", threshold=0.8,
+        append_survivors=False, exact_verify_with=d.docs,
+    )[1]
 
-    def budget_fn(docs, budget):
-        tk = F.split(F.trim(F.col("text")), r"\s+")
-        scored = docs.filter(F.trim(F.col("text")) != "").select(
-            "doc_id", F.size(tk).alias("n_tok"),
-            (F.size(F.array_distinct(tk)).cast("double")
-             / F.size(tk).cast("double")).alias("score"),
-        )
-        return lambda: token_budget_select(
-            scored, "score", "n_tok", "doc_id", budget, n_buckets=32
-        ).write.format("noop").mode("overwrite").save()
 
-    run("token_budget_select", budget_fn(docs1, 80_000),
-        budget_fn(docs4, 320_000))
-
-    # paragraph filter: pure array HOFs — map-only, must scale ~linear
-    from dataslicer_spark.functions.text import paragraph_quality_filter
-
-    def para_fn(docs):
-        return lambda: paragraph_quality_filter(
-            docs, "doc_id", para_tokens=20, min_distinct_ratio=0.72
-        ).write.format("noop").mode("overwrite").save()
-
-    run("paragraph_filter", para_fn(docs1), para_fn(docs4))
-
-    # phrase search: postings for the two phrase terms only — the isin
-    # prefilter keeps the shuffle proportional to term frequency
-    from dataslicer_spark.operators.retrieval import phrase_search
-
-    def phrase_fn(docs):
-        return lambda: phrase_search(
-            docs, ["table", "part"]
-        ).write.format("noop").mode("overwrite").save()
-
-    run("phrase_search", phrase_fn(docs1), phrase_fn(docs4))
-
-    # epoch mixture: stats scan + broadcast plan + bounded explode
-    def epoch_fn(docs, scale):
-        targets = {f"src{j}": 30_000.0 * scale for j in range(4)}
-        tk = F.split(F.trim(F.col("text")), r"\s+")
-        base = docs.filter(F.trim(F.col("text")) != "").select(
-            "doc_id", "source", F.size(tk).alias("n_tok")
-        )
-        return lambda: epoch_mixture(
-            base, "source", "n_tok", "doc_id", targets, max_epochs=2.5
-        ).write.format("noop").mode("overwrite").save()
-
-    run("epoch_mixture", epoch_fn(docs1, 1), epoch_fn(docs4, 4))
-
-    # persistent BM25 index: build cost is the explode+aggregate+write
-    # (≈linear in tokens); probe cost is pruned-postings-scan-sized.
-    # Measured together (the registry query's shape).
-    import shutil
-    import tempfile
-
-    from dataslicer_spark.operators.retrieval_index import (
-        build_bm25_index, search_bm25_index,
+def _ivf_rebalance(d):
+    path = os.path.join(d.tmp, "idx")
+    c, a = similarity.build_ivf_index(
+        d.emb, n_lists=16, corpus_id="vec_id", corpus_vec="embedding"
     )
+    similarity.save_ivf_index(c, a, path)
+    similarity.rebalance_ivf_index(d.emb.sparkSession, path, n_lists=16)
 
-    def bmidx_fn(docs):
-        def go():
-            path = tempfile.mkdtemp(prefix="probe_bm25_")
-            try:
-                build_bm25_index(docs, path)
-                search_bm25_index(
-                    spark, path, ["merge", "join", "scan"], k=10
-                ).write.format("noop").mode("overwrite").save()
-            finally:
-                shutil.rmtree(path, ignore_errors=True)
-        return go
 
-    run("bm25_index_build_probe", bmidx_fn(docs1), bmidx_fn(docs4))
+def _mmr_ivf(d):
+    """MMR fed from the pruned IVF probe (n_probe < n_lists), the
+    sim_mmr_ivf plan's scale configuration; fixed query set."""
+    qs = _queries(d.one.emb, 3)
+    cand = similarity.ivf_topk(d.emb, qs, k=20, n_lists=16, n_probe=4)
 
-    # round-8 additions: probe-only MinHash index search against a
-    # PRE-BUILT index (build paid once outside the timer; the probe is
-    # batch-signature + band hash-join + In()-pushdown verify fetch —
-    # batch AND index are both 4× at 4×, expect ~linear), and the IVF
-    # maintenance rebuild (sampled retrain + one map-only reassignment
-    # pass + partitioned rewrite — corpus-linear by construction).
-    from dataslicer_spark.operators.dedup_index import (
-        build_minhash_index, dedup_against_minhash_index,
+    def quant(c):
+        return F.transform(F.col(c), lambda x: F.floor(x * 4096.0).cast("long"))
+
+    qv = qs.select(F.col("query_id").alias("__qid"), quant("embedding").alias("__qq"))
+    rel = F.aggregate(
+        F.zip_with(quant("embedding"), F.col("__qq"), lambda a, b: a * b),
+        F.lit(0).cast("long"), lambda acc, v: acc + v,
     )
-
-    def mh_probe_fn(docs):
-        path = tempfile.mkdtemp(prefix="probe_mhidx_") + "/idx"
-        build_minhash_index(docs, path, "doc_id", num_perm=64, bands=32)
-        toks = F.split(F.trim(F.col("text")), r"\s+")
-        batch = docs.filter(F.col("doc_id") % 16 == 0).select(
-            (F.col("doc_id") + 10_000_000).alias("doc_id"),
-            F.concat_ws(
-                " ", F.slice(toks, 1, F.greatest(F.size(toks) - 3, F.lit(1)))
-            ).alias("text"),
-        )
-
-        def go():
-            _s, m = dedup_against_minhash_index(
-                batch, path, "doc_id", threshold=0.8,
-                append_survivors=False, exact_verify_with=docs,
-            )
-            m.write.format("noop").mode("overwrite").save()
-        return go
-
-    run("minhash_index_probe", mh_probe_fn(docs1), mh_probe_fn(docs4))
-
-    from dataslicer_spark.operators.similarity import (
-        build_ivf_index, rebalance_ivf_index, save_ivf_index,
+    cand_rel = (
+        cand.select("query_id", "vec_id")
+        .join(d.emb.select("vec_id", "embedding"), "vec_id")
+        .join(F.broadcast(qv), F.col("query_id") == F.col("__qid"))
+        .select("query_id", "vec_id", rel.alias("rel_q"), "embedding")
     )
+    return similarity.mmr_rerank(cand_rel, k=5, lam_num=7, lam_den=3, fp_bits=12)
 
-    emb1 = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
-    emb4 = emb1
-    for i in (1, 2, 3):
-        emb4 = emb4.unionByName(
-            emb1.withColumn("vec_id", F.col("vec_id") + 1_000_000 * i)
-        )
 
-    def ivf_reb_fn(emb):
-        path = tempfile.mkdtemp(prefix="probe_ivf_") + "/idx"
-        c, a = build_ivf_index(
-            emb, n_lists=16, corpus_id="vec_id", corpus_vec="embedding"
-        )
-        save_ivf_index(c, a, path)
+_HOUR = 3_600_000_000
+_EV3 = ("user_id", "event_id", "value")
 
-        def go():
-            rebalance_ivf_index(spark, path, n_lists=16)
-        return go
+KERNELS: dict[str, Kernel] = {
+    # AQE coalesces a shuffle under the minimum partition size to one
+    # partition; over it the merge probe's limit adds a single-partition stage
+    "dbscan_sky": Kernel("sources", lambda d: clustering.dbscan(
+        d.sources, 3.0, 2, "sourceid", coord="sky"
+    ), bounds=(
+        "clustering.DRIVER_MERGE_MAX_SETS",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize",
+    )),
+    "crossmatch_sky": Kernel("sources catalog", lambda d: spatial.crossmatch_sky(
+        d.sources, d.catalog, 3.0, source_id="sourceid"
+    )),
+    "minhash_lsh": Kernel("docs", lambda d: dedup.minhash_lsh_pairs(d.docs, "doc_id")),
+    # t=0.8: the PPJoin prefix-filtered plan, the regime this exact kernel is for
+    "ngram_jaccard": Kernel(
+        "docs_salted",
+        lambda d: dedup.ngram_jaccard_pairs(d.docs_salted, "doc_id", threshold=0.8),
+    ),
+    "asof_join": Kernel("events", _asof),
+    "resample_ffill": Kernel("events", lambda d: resample.resample_ffill(
+        _purchases(d.events, F.col("value").alias("pv")), "ts_us", ["user_id"], ["pv"],
+        step_us=_HOUR,
+    )),
+    # the corpus grows, the eval set stays the 1× one (its real-world shape)
+    "decontaminate": Kernel("docs", lambda d: decontam.contamination_pairs(
+        d.docs,
+        d.one.docs.filter(F.col("doc_id") % 10 == 0)
+        .select(F.col("doc_id").alias("eval_id"), "text"),
+        "doc_id", "eval_id", n=3, min_common=2,
+    )),
+    "temperature_resample": Kernel("docs", lambda d: sampling.temperature_resample(
+        d.docs, "source", "doc_id", alpha=0.5, target_fraction=0.5
+    )),
+    "rolling_window": Kernel("events", lambda d: timeseries.rolling_window_stats(
+        d.events.filter(F.col("event_type") == "purchase"), "ts_us", ["user_id"],
+        "value", width_us=_HOUR,
+    )),
+    "interpolate_linear": Kernel("events", lambda d: timeseries.interpolate_linear(
+        _purchases(d.events, F.col("value").alias("pv")), "ts_us", ["user_id"], "pv",
+        step_us=_HOUR,
+    )),
+    "debounce": Kernel("events", lambda d: timeseries.debounce(
+        _purchases(d.events, "event_id"), "ts_us", ["user_id"], window_us=_HOUR
+    )),
+    "fuzzy_join": Kernel("customer", lambda d: fuzzy.edit_distance_self_join(
+        d.customer, "c_custkey", "c_name", max_dist=1
+    )),
+    "trigram_lm": Kernel("docs", lambda d: text.trigram_lm_scores(
+        d.docs, text.trigram_model(d.docs, "text", max_chars=512), "doc_id", "text",
+        max_chars=512,
+    )),
+    "pq_encode_search": Kernel("emb", _pq),
+    "cosine_topk_batched": Kernel("emb", lambda d: similarity.cosine_topk_batched(
+        d.emb, _queries(d.one.emb, 1), k=10
+    )),
+    "kmeans": Kernel("emb", lambda d: kmeans.kmeans(
+        d.emb.select("vec_id", "embedding"), "vec_id", "embedding", k=8, n_iter=3
+    ), bounds=("utils.DRIVER_MAX_CELLS",)),
+    # k grows with the corpus (8 → 32): the operator's cluster-size contract
+    "semantic_dedup": Kernel("emb", lambda d: dedup.semantic_dedup(
+        d.emb.select("vec_id", "embedding"), threshold=0.35, k=8 * d.n, n_iter=2
+    )[0], bounds=(
+        "kmeans.EXPR_MAX_CELLS", "utils.DRIVER_MAX_CELLS", "dedup.MATRIX_MAX_ROWS"
+    )),
+    "perceptron_train": Kernel(
+        "docs", _perceptron, bounds=("utils.DRIVER_MAX_CELLS",)
+    ),
+    "bpe_train_apply": Kernel("docs", lambda d: bpe.bpe_apply(
+        d.docs, bpe.bpe_fit(d.docs, "text", n_merges=3, max_chars=256), "text",
+        max_chars=256,
+    )),
+    "bpe_merge_count_16_vs_64": Kernel("docs", lambda d: bpe.bpe_fit(
+        d.one.docs, "text", n_merges=16 * d.n, max_chars=256
+    ), axis=("merge", 48)),
+    "bpe_merge_count_data_axis": Kernel(
+        "docs", lambda d: bpe.bpe_fit(d.docs, "text", n_merges=16, max_chars=256)
+    ),
+    "pagerank": Kernel("cust_supp_edges", _pagerank, bounds=(
+        "graph.DRIVER_MAX_EDGES", "spark.sql.autoBroadcastJoinThreshold"
+    )),
+    "triangle_count": Kernel(
+        "part_edges", lambda d: graph.triangle_count(d.part_edges),
+        bounds=("spark.sql.autoBroadcastJoinThreshold",),
+    ),
+    "label_propagation": Kernel(
+        "part_edges", lambda d: graph.label_propagation(d.part_edges, n_iter=3)
+    ),
+    "bootstrap_ci": Kernel("events", lambda d: bootstrap.bootstrap_mean_ci(
+        d.events, "value", "event_id", n_replicates=64
+    )),
+    "bm25_topk": Kernel(
+        "docs", lambda d: retrieval.bm25_topk(d.docs, ["spark", "vector", "fast"], k=10)
+    ),
+    "dsir_select": Kernel("docs", lambda d: dsir.dsir_select(
+        d.docs, F.col("lang") == "en", k=50, n_buckets=4096
+    )),
+    "span_dedup_scrub": Kernel(
+        "docs", lambda d: span_dedup.remove_duplicated_spans(d.docs, "doc_id", k=8)
+    ),
+    # the budget grows with the data, so the kept set grows 4× too
+    "token_budget_select": Kernel("docs", lambda d: sampling.token_budget_select(
+        _scored(d.docs), "score", "n_tok", "doc_id", 80_000 * d.n, n_buckets=32
+    )),
+    "paragraph_filter": Kernel("docs", lambda d: text.paragraph_quality_filter(
+        d.docs, "doc_id", para_tokens=20, min_distinct_ratio=0.72
+    )),
+    "phrase_search": Kernel(
+        "docs", lambda d: retrieval.phrase_search(d.docs, ["table", "part"])
+    ),
+    "epoch_mixture": Kernel("docs", lambda d: sampling.epoch_mixture(
+        _scored(d.docs), "source", "n_tok", "doc_id",
+        {f"src{j}": 30_000.0 * d.n for j in range(4)}, max_epochs=2.5,
+    )),
+    "bm25_index_build_probe": Kernel("docs", _bm25_index),
+    "minhash_index_probe": Kernel(
+        "docs", _minhash_index, bounds=("dedup_index.ISIN_MAX_IDS",)
+    ),
+    "ivf_rebalance": Kernel("emb", _ivf_rebalance),
+    "ewma_smooth": Kernel("events", lambda d: timeseries.ewma_smooth(
+        d.events.select(*_EV3), ["user_id"], "event_id", "value", 0.25
+    )),
+    "cusum_changepoints": Kernel("events", lambda d: timeseries.cusum_changepoints(
+        d.events.select(*_EV3), ["user_id"], "event_id", "value", 50.0, 15.0, 120.0
+    )),
+    "seasonal_decompose": Kernel(
+        "events", lambda d: timeseries.seasonal_decompose_naive(
+            d.events.select("user_id", "ts_us", "value"), ["user_id"], "ts_us",
+            "value", period_us=24 * _HOUR, bucket_us=_HOUR,
+            trend_halfwidth_us=6 * _HOUR,
+        ),
+    ),
+    "ks_2sample": Kernel("events", lambda d: drift.ks_2sample(
+        d.events.select(
+            F.lit("value").alias("feature"), "event_type", F.floor("value").alias("v")
+        ),
+        "event_type", "v", ["feature"], "click", "view",
+    )),
+    "centroid_drift": Kernel("emb", lambda d: drift.embedding_centroid_drift(
+        d.emb.filter(F.col("vec_id") % 2 == 0), d.emb.filter(F.col("vec_id") % 2 == 1),
+        ["label"],
+    )),
+    "kcore_peel": Kernel("part_edges", lambda d: graph.kcore(d.part_edges, k=4)),
+    "weighted_minhash": Kernel(
+        "docs_salted",
+        lambda d: weighted_minhash.weighted_minhash_pairs(
+            d.docs_salted, "doc_id", threshold=0.8
+        ),
+    ),
+    # bits=16: the documented corpus-scale configuration (32-bit band buckets)
+    "bbit_minhash": Kernel("docs_salted", lambda d: dedup.bbit_minhash_lsh_pairs(
+        d.docs_salted, "doc_id", bits=16, threshold=0.8
+    )),
+    "mmr_ivf": Kernel("emb", _mmr_ivf),
+}
 
-    run("ivf_rebalance", ivf_reb_fn(emb1), ivf_reb_fn(emb4))
 
-    # round-8 session-2 kernels.  EWMA/CUSUM: more users, same per-key
-    # span (the grouped-kernel scaling shape — expect ~linear).  KS: 4×
-    # observations collapse into the SAME distinct-value histogram, so
-    # only the first aggregate grows.  Seasonal: window + two aggregates
-    # on the key.  k-core: peel rounds are density-bound, each round
-    # linear in surviving edges.  Centroid drift: wire is labels·dims
-    # regardless of corpus size — expect the scan to dominate.
-    from dataslicer_spark.operators.drift import (
-        embedding_centroid_drift, ks_2sample,
-    )
-    from dataslicer_spark.operators.graph import kcore
-    from dataslicer_spark.operators.timeseries import (
-        cusum_changepoints, ewma_smooth, seasonal_decompose_naive,
-    )
+def _bound(spark, name: str) -> str:
+    """``name=value`` of a bound a kernel lists."""
+    if name.startswith("spark."):
+        return f"{name}={spark.conf.get(name)}"
+    mod, const = name.split(".")
+    pkg = "dataslicer_spark" if mod == "utils" else "dataslicer_spark.operators"
+    return f"{name}={getattr(importlib.import_module(f'{pkg}.{mod}'), const)}"
 
-    def ewma_fn(ev):
-        return lambda: ewma_smooth(
-            ev.select("user_id", "event_id", "value"),
-            ["user_id"], "event_id", "value", 0.25,
-        ).write.format("noop").mode("overwrite").save()
 
-    run("ewma_smooth", ewma_fn(ev1), ewma_fn(ev4))
+def probe(spark, name: str, paths: dict[str, dict[int, str]], root: str) -> dict:
+    """One row: the kernel's counted jobs/stages/tasks at 1× and at 4×."""
+    k = KERNELS[name]
+    # every read, with its schema-inference job, happens before counting
+    inputs = k.inputs.split()
+    d = {
+        n: SimpleNamespace(n=n, **{i: read_parquet(spark, paths[i][n]) for i in inputs})
+        for n in SIZES
+    }
 
-    def cusum_fn(ev):
-        return lambda: cusum_changepoints(
-            ev.select("user_id", "event_id", "value"),
-            ["user_id"], "event_id", "value", 50.0, 15.0, 120.0,
-        ).write.format("noop").mode("overwrite").save()
+    def once(n):
+        d[n].one, d[n].tmp = d[1], tempfile.mkdtemp(dir=root)
 
-    run("cusum_changepoints", cusum_fn(ev1), cusum_fn(ev4))
+        def run():
+            out = k.run(d[n])
+            if isinstance(out, DataFrame):
+                out.write.format("noop").mode("overwrite").save()
 
-    def seasonal_fn(ev):
-        return lambda: seasonal_decompose_naive(
-            ev.select("user_id", "ts_us", "value"),
-            ["user_id"], "ts_us", "value",
-            period_us=86_400_000_000, bucket_us=3_600_000_000,
-            trend_halfwidth_us=21_600_000_000,
-        ).write.format("noop").mode("overwrite").save()
+        counts = counted(spark, run)[1]
+        spark.catalog.clearCache()
+        return counts
 
-    run("seasonal_decompose", seasonal_fn(ev1), seasonal_fn(ev4))
+    row: dict = {"kernel": name, "1x": once(1), "4x": once(4)}
+    shape = {n: (row[f"{n}x"]["jobs"], row[f"{n}x"]["stages"]) for n in SIZES}
+    if k.axis:
+        unit, added = k.axis
+        row[f"jobs_per_added_{unit}"] = round((shape[4][0] - shape[1][0]) / added, 3)
+    elif shape[1] != shape[4] and k.bounds:
+        row["bound"] = [_bound(spark, b) for b in k.bounds]
+    elif shape[1] != shape[4]:
+        # no bound: two more runs per size tell a size flip from a
+        # structure that identical runs do not reproduce
+        reps = {n: [row[f"{n}x"], once(n), once(n)] for n in SIZES}
+        if any(len({(c["jobs"], c["stages"]) for c in r}) > 1 for r in reps.values()):
+            row["varying"] = {f"{n}x": r for n, r in reps.items()}
+        else:
+            row["unexplained"] = True
+    return row
 
-    def ks_fn(ev):
-        return lambda: ks_2sample(
-            ev.select(
-                F.lit("value").alias("feature"), "event_type",
-                F.floor("value").alias("v"),
-            ),
-            "event_type", "v", ["feature"], "click", "view",
-        ).write.format("noop").mode("overwrite").save()
 
-    run("ks_2sample", ks_fn(ev1), ks_fn(ev4))
-
-    def drift_fn(emb):
-        return lambda: embedding_centroid_drift(
-            emb.filter(F.col("vec_id") % 2 == 0),
-            emb.filter(F.col("vec_id") % 2 == 1),
-            ["label"],
-        ).write.format("noop").mode("overwrite").save()
-
-    emb1c, emb4c = emb1.cache(), emb4.cache()
-    emb1c.count(), emb4c.count()
-    run("centroid_drift", drift_fn(emb1c), drift_fn(emb4c))
-
-    # 4× part-edge graph via shifted part-key replicas (same density)
-    def part_edges(scale):
-        li = spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet"))
-        orders = spark.read.parquet(os.path.join(SF_DIR, "orders.parquet"))
-        hi = orders.filter(F.col("o_totalprice") > 450_000.0).select(
-            "o_orderkey"
-        )
-        liw = li.join(hi, li["l_orderkey"] == hi["o_orderkey"], "left_semi")
-        out = liw.select("l_orderkey", "l_partkey")
-        reps = [out]
-        for i in range(1, scale):
-            reps.append(
-                out.withColumn("l_orderkey", F.col("l_orderkey")
-                               + 100_000_000 * i)
-                .withColumn("l_partkey", F.col("l_partkey")
-                            + 100_000_000 * i)
-            )
-        allr = reps[0]
-        for r in reps[1:]:
-            allr = allr.unionByName(r)
-        a = allr.select(F.col("l_orderkey").alias("ok"),
-                        F.col("l_partkey").alias("src"))
-        b = allr.select(F.col("l_orderkey").alias("ok"),
-                        F.col("l_partkey").alias("dst"))
-        return (
-            a.join(b, "ok")
-            .filter(F.col("src") < F.col("dst"))
-            .select("src", "dst")
-            .distinct()
-            .cache()
-        )
-
-    ge1, ge4 = part_edges(1), part_edges(4)
-    ge1.count(), ge4.count()
-    run(
-        "kcore_peel",
-        lambda: kcore(ge1, k=4).write.format("noop").mode("overwrite").save(),
-        lambda: kcore(ge4, k=4).write.format("noop").mode("overwrite").save(),
-    )
-
-    # round-11 kernels: data-axis rows for the three round-10 additions.
-    # Near-dup kernels use the token-salted 4x corpus (constant near-dup
-    # density — see docs4_salted above); both are map-only signature
-    # kernels + banding, so expect ~linear.
-    from dataslicer_spark.operators.dedup import bbit_minhash_lsh_pairs
-    from dataslicer_spark.operators.weighted_minhash import (
-        weighted_minhash_pairs,
-    )
-
-    run(
-        "weighted_minhash",
-        lambda: weighted_minhash_pairs(
-            docs1, "doc_id", threshold=0.8
-        ).write.format("noop").mode("overwrite").save(),
-        lambda: weighted_minhash_pairs(
-            docs4_salted, "doc_id", threshold=0.8
-        ).write.format("noop").mode("overwrite").save(),
-    )
-    # bits=16 is the documented corpus-scale configuration
-    # (dedup.bbit_minhash_lsh_pairs sizing rule: r·bits = 32-bit band
-    # buckets keep random collisions ≈ n²·bands/2³²; bits=8's 16-bit
-    # buckets are only sized to ~10⁵ docs, which the 4x corpus exceeds)
-    run(
-        "bbit_minhash",
-        lambda: bbit_minhash_lsh_pairs(
-            docs1, "doc_id", bits=16, threshold=0.8
-        ).write.format("noop").mode("overwrite").save(),
-        lambda: bbit_minhash_lsh_pairs(
-            docs4_salted, "doc_id", bits=16, threshold=0.8
-        ).write.format("noop").mode("overwrite").save(),
-    )
-
-    # MMR fed from the pruned IVF probe path (the sim_mmr_ivf plan's
-    # scale configuration: n_probe < n_lists).  Fixed query set, corpus
-    # 4x: probe work is the pruned lists' scan (~linear), the greedy
-    # O(k·N) rerank is bounded per query by the candidate contract, so
-    # the whole pipeline should scale with the scan.
-    from dataslicer_spark.operators.similarity import ivf_topk, mmr_rerank
-
-    mmr_qs = emb1.filter(F.col("vec_id") % 500 == 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    ).cache()
-    mmr_qs.count()
-
-    def mmr_ivf_fn(emb):
-        def go():
-            cand = ivf_topk(emb, mmr_qs, k=20, n_lists=16, n_probe=4)
-            cand_v = cand.select("query_id", "vec_id").join(
-                emb.select("vec_id", "embedding"), "vec_id"
-            )
-            fp = float(1 << 12)
-            quant = lambda c: F.transform(  # noqa: E731
-                c, lambda x: F.floor(x.cast("double") * F.lit(fp)).cast("long")
-            )
-            qv = mmr_qs.select(
-                F.col("query_id").alias("__qid"),
-                quant(F.col("embedding")).alias("__qq"),
-            )
-            cand_rel = (
-                cand_v.join(
-                    F.broadcast(qv), F.col("query_id") == F.col("__qid")
-                )
-                .withColumn(
-                    "rel_q",
-                    F.aggregate(
-                        F.zip_with(
-                            quant(F.col("embedding")), F.col("__qq"),
-                            lambda a, b: a * b,
-                        ),
-                        F.lit(0).cast("long"),
-                        lambda acc, v: acc + v,
-                    ),
-                )
-                .select("query_id", "vec_id", "rel_q", "embedding")
-            )
-            mmr_rerank(
-                cand_rel, k=5, lam_num=7, lam_den=3, fp_bits=12
-            ).write.format("noop").mode("overwrite").save()
-        return go
-
-    run("mmr_ivf", mmr_ivf_fn(emb1), mmr_ivf_fn(emb4))
+def main() -> int:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+    spark = get_spark("scale-probe")
+    unexplained = False
+    with tempfile.TemporaryDirectory(prefix="scale_probe_") as root:
+        names = sorted({i for k in KERNELS.values() for i in k.inputs.split()})
+        paths = write_inputs(spark, sf_dir, root, names)
+        for name in KERNELS:
+            row = probe(spark, name, paths, root)
+            print(json.dumps(row), flush=True)
+            unexplained |= "unexplained" in row
+    return int(unexplained)
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -10,7 +10,7 @@ contract that prevents a recurrence:
   handler flushes artifacts + one final partial headline before dying;
 * diff hygiene — a 0.5 s absolute noise floor on wall-clock rows, and
   exact structural rows (jobs/stages/tasks) only between runs on the
-  same cpus.
+  same cpus, never for a query whose structure varies between reps.
 
 The integration tests drive the real bench.py subprocess at sf0.001 with
 SPARK_GRAFT_BENCH_OUT redirected to tmp_path so the committed artifacts
@@ -161,6 +161,38 @@ def test_diff_lists_structural_changes_on_same_cpus(tmp_path, monkeypatch, capsy
         "Structure not compared: sf 0.001, cpus 8 before; sf 0.001, cpus 4 now"
         in diff
     )
+
+
+def test_diff_does_not_compare_a_structure_that_varies_between_reps(
+    tmp_path, monkeypatch, capsys
+):
+    """A query whose reps after the first ran different jobs (AQE's stage
+    jobs and checkpoint jobs racing for a shared stage) is recorded as
+    varying, and BENCH_diff names it instead of listing a change."""
+    odd = {"build": _counts(12, 12, 27), "write": _counts(1, 1, 4)}
+    assert bench._varies([odd, _SAME, _SAME, odd])
+    # the first rep pays schema inference: it alone differing is no variation
+    assert not bench._varies([odd, _SAME, _SAME])
+    assert not bench._varies([odd, _SAME])
+    prev = {
+        "queries": {"q_vary": 1.0, "q_was_varying": 1.0},
+        "structure": {"q_vary": _SAME, "q_was_varying": _SAME},
+        "structure_varying": ["q_was_varying"],
+        "cpus": 4,
+        "sf": 0.001,
+    }
+    st = _mk_state(tmp_path, monkeypatch, prev_doc=prev)
+    st.timings = {"q_vary": 1.0, "q_was_varying": 1.0}
+    st.structure = {"q_vary": odd, "q_was_varying": odd}
+    st.varying = {"q_vary"}
+    st.cpus = 4
+    st.flush(partial=False)
+    diff = (tmp_path / "BENCH_diff.md").read_text()
+    assert "| q_vary |" not in diff and "| q_was_varying |" not in diff
+    assert "| (none) | | | |" in diff
+    assert "Varying between reps, not compared: q_vary, q_was_varying" in diff
+    doc = json.loads((tmp_path / "BENCH_LOCAL.json").read_text())
+    assert doc["structure_varying"] == ["q_vary"]
 
 
 def test_budget_skip_recorded(tmp_path, monkeypatch, capsys):
